@@ -128,13 +128,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.start(GraftSession.builder(GraftSession.cores)
       // AQE re-optimizes per runtime stage and regenerates whole-stage
       // code each time; on this corpus Janino compilation — serialized
       // behind CodeGenerator's per-source lock — dominates latency, so
@@ -144,28 +138,7 @@ object Bench {
       // dwarfs compile time and AQE's skew/coalesce handling pays for
       // itself — keep it on there; the AQE-on pass below records the
       // number behind that claim.
-      .config("spark.sql.adaptive.enabled", "false")
-      // r20 anti-scaling-tail root cause (VERDICT r19 item 7): with
-      // R <= spark.shuffle.sort.bypassMergeThreshold (default 200) and
-      // no map-side combine, Spark's BypassMergeSortShuffleWriter opens
-      // ONE FILE PER (map task x reduce partition) — at the 32x32 bench
-      // geometry that is 1024 file creates per exchange, and jstack
-      // showed the anti-scaling queries' task threads parked in
-      // FileOutputStream.open0 (text_surprisal warm: 16.2 s task CPU at
-      // 32x32 vs 1.4 s at 32x8). Disabling the bypass routes every
-      // exchange through the serialized sorter — ONE spill file + index
-      // per map task, i.e. the exact writer any production shuffle
-      // (R > 200) uses — so the local geometry measures the at-scale
-      // code path instead of a small-R heuristic's syscall storm.
-      // Measured (ABAB, 14-query subset): -28% total, every query
-      // faster or equal, none slower. Env-overridable for A/Bs.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.validate(spark) // fail-fast on malformed spark.graft.* confs
-    GraftLog.applyLevel(spark)
+      .config("spark.sql.adaptive.enabled", "false"))
 
     // optional subset for focused A/B timing (unset → all, the driver
     // path); warmup honors the same filter so a subset run stays short.

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** The one place the directory-stream-hygiene idiom lives: every
   * `Files.list` MUST be closed (the javadoc requires try-with-
   * resources; an unclosed stream leaks a file descriptor until
@@ -34,6 +36,22 @@ object DirIO {
       val s = Files.list(p)
       try s.findFirst().isPresent finally s.close()
     }
+  }
+
+  /** `dir` read as parquet, or None while it holds no data entry. Names
+    * starting with `_` or `.` do not count — Spark's own hidden-file
+    * rule — so a directory holding only a `_txn` commit log reads as
+    * empty instead of failing schema inference. */
+  def readParquet(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val p = Paths.get(dir)
+    val hasData = Files.exists(p) && {
+      val s = Files.list(p)
+      try s.anyMatch { e =>
+        val n = e.getFileName.toString
+        !n.startsWith("_") && !n.startsWith(".")
+      } finally s.close()
+    }
+    if (hasData) Some(spark.read.parquet(dir)) else None
   }
 
   /** The `<prefix><long>` entries of `dir`, parsed and ascending —

@@ -46,6 +46,21 @@ object GraftConf {
     * publish side off. Default on, like the reference (`!== 'false'`). */
   val MetricsEnabledKey = "spark.graft.enableMetrics"
 
+  /** Kill switch of the WinMagic self-join-back → window rewrite
+    * ([[graft.plans.WinMagic]]); on by default. */
+  val WinMagicKey = "spark.graft.optimizer.winmagic"
+
+  /** Kill switch of filter/projection pushdown through the native as-of
+    * join ([[graft.plans.AsOfPushdown]]); on by default. */
+  val AsOfPushdownKey = "spark.graft.optimizer.asofPushdown"
+
+  /** Opt-in plan-time rejection of windows with no PARTITION BY
+    * ([[graft.plans.NoGlobalWindowGuard]]); off by default. */
+  val FailOnGlobalWindowKey = "spark.graft.guards.failOnGlobalWindow"
+
+  private val BooleanKeys = Seq(DebugLoggingKey, MetricsEnabledKey,
+    WinMagicKey, AsOfPushdownKey, FailOnGlobalWindowKey)
+
   /** The single source of truth for the semantic near-dup threshold.
     * The DuckDB oracle SQL ([[graft.oracle.OracleSqlExt]]) interpolates
     * THIS constant — the conf knob above only affects the Spark side,
@@ -67,10 +82,36 @@ object GraftConf {
     spark.conf.get(CosineThresholdKey, DefaultCosineThreshold.toString).toDouble
 
   def debugLogging(spark: SparkSession): Boolean =
-    spark.conf.get(DebugLoggingKey, "false").toBoolean
+    flag(spark.conf.getOption, DebugLoggingKey, default = false)
 
   def metricsEnabled(spark: SparkSession): Boolean =
-    spark.conf.get(MetricsEnabledKey, "true").toBoolean
+    flag(spark.conf.getOption, MetricsEnabledKey, default = true)
+
+  // The optimizer rules read their switch through the lookup their
+  // session hands them, so these take the lookup rather than a session.
+  def winMagic(conf: String => Option[String]): Boolean =
+    flag(conf, WinMagicKey, default = true)
+
+  def asofPushdown(conf: String => Option[String]): Boolean =
+    flag(conf, AsOfPushdownKey, default = true)
+
+  def failOnGlobalWindow(conf: String => Option[String]): Boolean =
+    flag(conf, FailOnGlobalWindowKey, default = false)
+
+  /** Booleans: only the literal true/false spellings — the reference's
+    * `=== 'true'` / `!== 'false'` coercions silently swallow typos
+    * ("ture" meaning enabled-off forever); here a typo fails loudly,
+    * naming the key. */
+  private def flag(conf: String => Option[String], key: String,
+      default: Boolean): Boolean = conf(key) match {
+    case None => default
+    case Some("true") => true
+    case Some("false") => false
+    case Some(v) => bad(key, v, "must be 'true' or 'false'")
+  }
+
+  private def bad(key: String, v: String, why: String): Nothing =
+    throw new IllegalArgumentException(s"graft conf $key = '$v' is invalid: $why")
 
   def denyDomains(spark: SparkSession): Seq[String] =
     csv(spark.conf.get(DenyDomainsKey, graft.rules.Rules.DefaultDenyDomains.mkString(",")))
@@ -99,10 +140,6 @@ object GraftConf {
     * uppercase or space-carrying entry can never match anything and is
     * a config typo worth failing on; anything else is permitted. */
   def validate(spark: SparkSession): Unit = {
-    def bad(key: String, v: String, why: String): Nothing =
-      throw new IllegalArgumentException(
-        s"graft conf $key = '$v' is invalid: $why")
-
     val mm = spark.conf.get(MinMatchesKey, "1")
     val mmV = mm.toIntOption.getOrElse(bad(MinMatchesKey, mm, "not an integer"))
     if (mmV < 0) bad(MinMatchesKey, mm, "must be >= 0")
@@ -119,14 +156,8 @@ object GraftConf {
       if (v.isNaN || v < 0.0 || v > 1.0) bad(key, raw, "must lie in [0, 1]")
     }
 
-    // Booleans: only the literal true/false spellings — the reference's
-    // `=== 'true'` / `!== 'false'` coercions silently swallow typos
-    // ("ture" meaning enabled-off forever); here a typo fails at init.
-    for (key <- Seq(DebugLoggingKey, MetricsEnabledKey)) {
-      val raw = spark.conf.get(key, "false")
-      if (raw != "true" && raw != "false")
-        bad(key, raw, "must be 'true' or 'false'")
-    }
+    // each boolean must parse; flag throws, naming the key, if it does not
+    for (key <- BooleanKeys) flag(spark.conf.getOption, key, default = false)
 
     for ((key, entries) <- Seq(DenyDomainsKey -> denyDomains(spark),
         DenyPrefixesKey -> denyPrefixes(spark)); e <- entries) {

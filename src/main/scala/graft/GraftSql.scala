@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.GraftExtensions
+
 /** SQL entry point: the library's tables and native functions exposed to
   * `spark.sql(...)`. A user of the reference's data can point this at a
   * parquet directory and query every table by name in ANSI SQL, with the
-  * library's native functions (cosine_sim) available in expressions.
+  * library's native functions and TVFs available in expressions.
   *
   * `attach` registers temp views for one session+dir; views are plain
   * scans, so everything Catalyst does for the DataFrame API (pushdown,
@@ -37,21 +39,21 @@ object GraftSql {
         .filter(org.apache.spark.sql.functions.col("event_type") === "click")
         .selectExpr("user_id", "ts AS c_ts", "event_id AS c_eid")
         .createOrReplaceTempView("clicks_v")
-      graft.plans.AsOfSql.register(spark)
-      graft.plans.RangeSql.register(spark)
-      graft.plans.KnnSql.register(spark)
-      graft.plans.NearDupSql.register(spark)
-      graft.plans.DsirSql.register(spark)
-      graft.plans.SemDedupSql.register(spark)
-      graft.plans.IndexSearchSql.register(spark)
-      graft.plans.DupSpansSql.register(spark)
-      graft.plans.CentroidAssignSql.register(spark)
-      graft.functions.CosineSimilarity.register(spark)
-      graft.functions.RollingMinHash.register(spark)
-      graft.functions.SimHash32.register(spark)
-      graft.functions.SimHash60.register(spark)
-      graft.functions.BloomMightContain.register(spark)
+      registerFunctions(spark)
       lastAttached(spark) = dir
+    }
+  }
+
+  /** Register both [[GraftExtensions]] lists — every TVF and scalar
+    * function — into this session: the runtime twin of deploying the
+    * extension, for sessions built without it. Idempotent (each
+    * registration replaces). */
+  def registerFunctions(spark: SparkSession): Unit = {
+    GraftExtensions.tableFunctions.foreach { case (id, info, builder) =>
+      spark.sessionState.tableFunctionRegistry.registerFunction(id, info, builder)
+    }
+    GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
   }
 

@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: route exchanges through the serialized shuffle
-      // writer (one file per map task) instead of the small-R bypass
-      // writer (R files per map task) — see Bench.scala's comment
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.validate(spark) // fail-fast on malformed spark.graft.* confs
-    GraftLog.applyLevel(spark)
+    val spark = GraftSession.start(GraftSession.builder(GraftSession.cores))
     GraftLog.startupSummary(spark)
     new java.io.File(outDir).mkdirs()
     // optional subset for local iteration (unset → all, the driver path)

@@ -385,7 +385,7 @@ object DedupOps {
     * per document (lambdas don't codegen); the spec pins the two
     * bit-equal. */
   def simhash(documents: DataFrame): DataFrame = {
-    graft.functions.SimHash32.register(documents.sparkSession)
+    graft.GraftSql.registerFunctions(documents.sparkSession)
     documents.select(col("doc_id"), expr("simhash32(text)").as("simhash32"))
   }
 
@@ -451,7 +451,7 @@ object DedupOps {
     * the verify is the same popcount(xor) ≤ k before the distinct. */
   def simhash60HammingPairs(documents: DataFrame, k: Int = 3): DataFrame = {
     require(k <= 5, s"6-band 60-bit probing is exact only for k <= 5, got $k")
-    graft.functions.SimHash60.register(documents.sparkSession)
+    graft.GraftSql.registerFunctions(documents.sparkSession)
     val sigs = documents.select(col("doc_id"),
       expr("simhash60(text)").as("simhash60"))
     val banded = sigs.select(col("doc_id"), col("simhash60"),
@@ -700,7 +700,7 @@ object DedupOps {
     * difference between one and two passes over the stored corpus. */
   def incrementalNewDocsBloomFrom(documents: DataFrame, snap: DataFrame,
       words: Int = 1024, k: Int = 5): DataFrame = {
-    graft.functions.BloomMightContain.register(documents.sparkSession)
+    graft.GraftSql.registerFunctions(documents.sparkSession)
     val bloom = bloomBits(snap.select(col("h")), words, k)
     val batch = documents.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), md5(col("text").cast("binary")).as("content_md5"),

@@ -376,7 +376,7 @@ object EmbedOps {
     * (float accumulation order differs between engines, so this variant
     * gets a rows-only gate, not a hash oracle). */
   def bruteForceTopKNative(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    graft.functions.CosineSimilarity.register(embeddings.sparkSession)
+    graft.GraftSql.registerFunctions(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("embedding"))
     val queries = base.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))

@@ -1451,7 +1451,7 @@ object TextOps {
     * update, pure 64-bit integer math (engine-independent, SQL oracle
     * recomputes each window's polynomial independently). */
   def rollingFingerprints(documents: DataFrame): DataFrame = {
-    graft.functions.RollingMinHash.register(documents.sparkSession)
+    graft.GraftSql.registerFunctions(documents.sparkSession)
     documents.select(
       col("doc_id"),
       expr("rolling_min_hash(text)").as("min_rolling_hash"),

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
 
 /** Native Catalyst expression: k-probe Bloom-filter membership over a
   * bitset stored as `array<bigint>` words — the probe half of the
@@ -87,22 +86,4 @@ case class BloomMightContain(left: Expression, right: Expression, k: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMightContain =
     copy(left = newLeft, right = newRight)
-}
-
-object BloomMightContain {
-  /** Register `bloom_might_contain(words, hash, k)` — k must be an
-    * integer literal (it is baked into the generated loop). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      { children: Seq[Expression] =>
-        require(children.length == 3, "bloom_might_contain takes (words, hash, k)")
-        val k = children(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"bloom_might_contain: k must be an int literal, got $other")
-        }
-        BloomMightContain(children.head, children(1), k)
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -66,18 +65,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register `cosine_sim` in the session's function registry so SQL and
-    * `expr("cosine_sim(a, b)")` resolve it — the lightweight runtime
-    * form of a SparkSessionExtensions injectFunction. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      { children: Seq[Expression] =>
-        require(children.length == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
@@ -82,13 +81,4 @@ object RollingMinHash {
   val B = 257L                // polynomial base
   val M = 1000000007L         // modulus
   val PTOP: Long = 771861642L // B^(W-1) mod M
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_min_hash",
-      { children: Seq[Expression] =>
-        require(children.length == 1, "rolling_min_hash takes exactly 1 argument")
-        RollingMinHash(children.head)
-      },
-      "built-in")
 }

@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -81,15 +80,6 @@ object SimHash32 {
     }
     sig
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32",
-      { children: Seq[Expression] =>
-        require(children.length == 1, "simhash32 takes exactly 1 argument")
-        SimHash32(children.head)
-      },
-      "built-in")
 }
 
 /** 60-bit SimHash — the wide-signature remedy for the fixed-width
@@ -158,13 +148,4 @@ object SimHash60 {
     }
     sig
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60",
-      { children: Seq[Expression] =>
-        require(children.length == 1, "simhash60 takes exactly 1 argument")
-        SimHash60(children.head)
-      },
-      "built-in")
 }

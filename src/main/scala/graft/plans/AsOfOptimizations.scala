@@ -65,10 +65,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `spark.graft.optimizer.asofPushdown=false`. */
 object AsOfPushdown extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def enabled: Boolean =
-    !org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.optimizer.asofPushdown", "true")
-      .equalsIgnoreCase("false")
+  private def enabled: Boolean = graft.GraftConf.asofPushdown(k =>
+    Option(org.apache.spark.sql.internal.SQLConf.get.getConfString(k, null)))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan

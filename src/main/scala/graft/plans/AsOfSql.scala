@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -32,11 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * are the left columns followed by the right non-key columns,
   * exactly the DataFrame entry's contract.
   *
-  * Registration: build-time via [[graft.functions.GraftExtensions]]
-  * (`injectTableFunction`), runtime via [[register]] (the session's
-  * `tableFunctionRegistry` — the TVF twin of `CosineSimilarity
-  * .register`); [[graft.GraftSql.attach]] calls the latter so SQL
-  * sessions over the driver tables always have it.
+  * Registration: one entry in [[graft.functions.GraftExtensions]]'
+  * `tableFunctions`, injected at build time and registered at runtime
+  * by [[graft.GraftSql.attach]], so SQL sessions over the driver tables
+  * always have it.
   *
   * The reference has no SQL surface at all (index.js is record-at-a-
   * time JS); this is the engine-extension path, mirroring kdb `aj` /
@@ -95,10 +93,4 @@ object AsOfSql {
       if (args.lengthCompare(6) >= 0) csv(5, "tie list") else Nil,
       tol, direction = dir).queryExecution.analyzed
   }
-
-  /** Runtime registration into this session's table-function registry
-    * (idempotent — registerFunction replaces). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

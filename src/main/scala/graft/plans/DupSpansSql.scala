@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
@@ -141,16 +140,5 @@ object DupSpansSql {
     val (docs, w, occCap) = decode(exciseName, args)
     graft.ext.TextOps.dedupExcise(docs, w, occCap)
       .queryExecution.analyzed
-  }
-
-  /** Runtime registration into this session's table-function registry
-    * (idempotent — registerFunction replaces). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(spansName), spansInfo, spansBuilder)
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(islandsName), islandsInfo, islandsBuilder)
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(exciseName), exciseInfo, exciseBuilder)
   }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType}
@@ -31,9 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * 1000 because a larger k loses Spark's WindowGroupLimit rewrite and
   * with it the bounded-output scale posture.
   *
-  * Registration: build-time via [[graft.functions.GraftExtensions]],
-  * runtime via [[register]]; [[graft.GraftSql.attach]] calls the
-  * latter. The reference has no SQL surface (index.js is record-at-a-
+  * Registration: one entry in [[graft.functions.GraftExtensions]]'
+  * `tableFunctions` (build time and [[graft.GraftSql.attach]]). The reference has no SQL surface (index.js is record-at-a-
   * time JS); the kin here are vector-database `ORDER BY distance
   * LIMIT k` spellings, relationalized to a set-at-a-time join. */
 object KnnSql {
@@ -100,10 +98,4 @@ object KnnSql {
     graft.ext.EmbedOps.knnJoin(left, rightFresh, idCol, vecCol, k)
       .queryExecution.analyzed
   }
-
-  /** Runtime registration into this session's table-function registry
-    * (idempotent — registerFunction replaces). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.unix_micros
@@ -36,9 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `clicksAfterPurchase(band)` at `(0, band]`. Timestamps may be
   * TimestampType (converted via unix_micros) or LongType micros.
   *
-  * Registration: build-time via [[graft.functions.GraftExtensions]],
-  * runtime via [[register]]; [[graft.GraftSql.attach]] calls the
-  * latter. The reference has no SQL surface (index.js is record-at-a-
+  * Registration: one entry in [[graft.functions.GraftExtensions]]'
+  * `tableFunctions` (build time and [[graft.GraftSql.attach]]). The reference has no SQL surface (index.js is record-at-a-
   * time JS); the kin here are DuckDB/QuestDB range-join spellings. */
 object RangeSql {
 
@@ -113,10 +111,4 @@ object RangeSql {
         rightFresh.columns.filterNot(keys.contains).map(rightFresh(_)): _*)
       .queryExecution.analyzed
   }
-
-  /** Runtime registration into this session's table-function registry
-    * (idempotent — registerFunction replaces). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

@@ -33,9 +33,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 case class NoGlobalWindowGuard(getConf: String => Option[String])
     extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean =
-    getConf("spark.graft.guards.failOnGlobalWindow")
-      .exists(_.equalsIgnoreCase("true"))
+  private def enabled: Boolean = graft.GraftConf.failOnGlobalWindow(getConf)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (enabled) plan.foreach {

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{ArrayType, Decimal, DecimalType, DoubleType, FloatType, IntegerType, LongType}
@@ -104,10 +103,4 @@ object SemDedupSql {
       graft.ext.EmbedOps.kmeansAssignments(shaped, k), thr)
       .queryExecution.analyzed
   }
-
-  /** Runtime registration into this session's table-function registry
-    * (idempotent — registerFunction replaces). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

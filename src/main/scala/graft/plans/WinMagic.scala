@@ -62,11 +62,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    exactly one match, so a residual only filters); LeftOuter with
   *    a residual null-extends instead of filtering and is declined.
   *
-  * Deployment mirrors the native as-of join: build-time via
-  * [[graft.functions.GraftExtensions]] (disable with
-  * `spark.graft.optimizer.winmagic=false`), runtime via
-  * [[WinMagic.install]] (`experimental.extraOptimizations`, the
-  * optimizer twin of `extraStrategies`). */
+  * Deployment: build-time via [[graft.functions.GraftExtensions]]
+  * (disable with `spark.graft.optimizer.winmagic=false`), or per query
+  * via [[WinMagic.rewriteDf]] / [[WinMagic.rewriteOptimizedDf]]. There is
+  * no runtime `experimental.extraOptimizations` install: that list is
+  * session-global, so the rule would leak into every later plan of the
+  * session (see WinMagicSpec). */
 /** Build-time form for spark.sql.extensions deployment — the rewrite
   * is on unless `spark.graft.optimizer.winmagic=false` (a kill switch
   * for triaging a suspected miscompile, the standard courtesy for an
@@ -74,28 +75,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 case class WinMagicGated(getConf: String => Option[String])
     extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (getConf("spark.graft.optimizer.winmagic")
-      .exists(_.equalsIgnoreCase("false"))) plan
-    else WinMagic(plan)
+    if (graft.GraftConf.winMagic(getConf)) WinMagic(plan) else plan
 }
 
 object WinMagic extends Rule[LogicalPlan] with PredicateHelper {
-
-  /** Runtime registration — idempotent, the extraStrategies pattern.
-    * NOTE the layering caveat: user optimizer rules run LAST, after
-    * column pruning and constraint inference have decorated each side
-    * of a multi-relation core with side-specific Projects and
-    * IsNotNull filters — `peel` absorbs the TOP-LEVEL layers, so
-    * single-relation cores match here, but divergence buried inside a
-    * join subtree defeats `sameResult`. For those, rewrite the
-    * ANALYZED plan instead ([[rewriteDf]]), where both subtrees are
-    * exactly what the user wrote. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraOptimizations.contains(WinMagic))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ WinMagic
-  }
 
   /** The r19 ADVICE gate fix: the per-query explicit deployments
     * (rewriteDf / rewriteOptimizedDf) honor the SAME
@@ -104,8 +87,7 @@ object WinMagic extends Rule[LogicalPlan] with PredicateHelper {
     * covers every deployed rewrite at runtime — reverting a deployed
     * query to its naive plan is a conf set, not a rebuild. */
   private def gateOff(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.optimizer.winmagic")
-      .exists(_.equalsIgnoreCase("false"))
+    !graft.GraftConf.winMagic(spark.conf.getOption)
 
   /** Apply the rewrite to a DataFrame's ANALYZED plan — the clean
     * layer where the join-back shape is exactly as written (no

@@ -23,11 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object EmailJobSink {
 
-  private def readIfExists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] =
-    if (graft.DirIO.nonEmpty(dir)) Some(spark.read.parquet(dir))
-    else None
-
   /** Idempotent append: only jobs whose dedup_id is not yet in the sink
     * are written. Returns the number of newly written rows. */
   def appendJobs(jobs: DataFrame, jobsDir: String): Long = {
@@ -35,8 +30,8 @@ object EmailJobSink {
     // pinned so the anti-join runs once: the count and the conditional
     // write both act on the materialized frame (the write must stay
     // conditional — an empty Append still creates the directory, which
-    // would flip readIfExists to a schemaless parquet read next batch)
-    val fresh = (readIfExists(spark, jobsDir) match {
+    // would flip readParquet to a schemaless parquet read next batch)
+    val fresh = (graft.DirIO.readParquet(spark, jobsDir) match {
       case Some(existing) =>
         jobs.join(existing.select(col("dedup_id")).distinct(),
           Seq("dedup_id"), "left_anti")
@@ -54,7 +49,7 @@ object EmailJobSink {
     val incoming = updates.select(
       col("event_id"), col("guest_id"),
       col("new_delivery_status").as("delivery_status"))
-    val merged = readIfExists(spark, statusDir) match {
+    val merged = graft.DirIO.readParquet(spark, statusDir) match {
       case Some(cur) =>
         // incoming wins over current on key collision
         cur.join(incoming.select("event_id", "guest_id"),

@@ -97,15 +97,18 @@ object StatusStore {
 
   /** Conditional merge with optimistic retry. `updates` columns:
     * event_id, guest_id, expected_status (nullable → unconditional),
-    * new_status, error_at (nullable). Ties within the batch on one key
-    * are an error of the caller (the pipeline emits one status row per
-    * key per batch). Returns counts from the attempt that committed. */
+    * new_status, error_at (nullable). Identical rows on one key collapse
+    * to one: a null guest_id decodes to "", so several outcomes of one
+    * event reach here under the same key, and the left join below would
+    * otherwise multiply that key's stored rows on every commit.
+    * Conflicting rows on one key are an error of the caller. Returns
+    * counts from the attempt that committed. */
   def casMerge(updates: DataFrame, dir: String, maxRetries: Int = 50): CasResult = {
     val spark = updates.sparkSession
     val writerId = java.util.UUID.randomUUID().toString.take(8)
     val up = updates.select(
       col("event_id"), col("guest_id"), col("expected_status"),
-      col("new_status"), col("error_at")).cache()
+      col("new_status"), col("error_at")).distinct().cache()
     try {
       var attempt = 0
       while (true) {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.DirIO
 import graft.sink.EmailJobSink.TxnLog
 
 /** Continuous corpus ingestion with incremental dedup — the streaming
@@ -60,7 +61,7 @@ object CorpusIngest {
   }
 
   private def seenDigests(spark: SparkSession, dataDir: String): Option[DataFrame] =
-    readIfAny(spark, dataDir).map(_.select(col("content_md5")).distinct())
+    DirIO.readParquet(spark, dataDir).map(_.select(col("content_md5")).distinct())
 
   // ------------------------------------------------------------------
   // REMOVE-event excision (r19 — [[graft.pipeline.Tombstones]]'s
@@ -90,7 +91,7 @@ object CorpusIngest {
     var appended = 0L
     TxnLog.runOnce(logDir, batchId) {
       val ids = markers.select(col("doc_id")).distinct()
-      val fresh = (readIfAny(spark, tombsDir) match {
+      val fresh = (DirIO.readParquet(spark, tombsDir) match {
         case Some(t) => ids.join(t, Seq("doc_id"), "left_anti")
         case None => ids
       }).localCheckpoint()
@@ -107,19 +108,15 @@ object CorpusIngest {
     * broadcast-anti-join territory; at worst a shuffle on the same
     * doc_id key every other probe uses. */
   def activeCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val data = readIfAny(spark, s"$corpusDir/data").getOrElse(
+    val data = DirIO.readParquet(spark, s"$corpusDir/data").getOrElse(
       throw new IllegalArgumentException(s"no corpus at $corpusDir/data"))
-    readIfAny(spark, s"$corpusDir/tombs") match {
+    DirIO.readParquet(spark, s"$corpusDir/tombs") match {
       case Some(t) =>
         data.join(broadcast(t.select(col("doc_id")).distinct()),
           Seq("doc_id"), "left_anti")
       case None => data
     }
   }
-
-  private def readIfAny(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (graft.DirIO.nonEmpty(dir)) Some(spark.read.parquet(dir))
-    else None
 
   /** [[ingestBatch]] plus a NEAR-dup layer: after exact suppression,
     * the batch dedups against ITSELF at the near level (one canonical
@@ -167,7 +164,7 @@ object CorpusIngest {
       // anti-join and their band keys are silently never indexed
       // (read-your-own-write hazard; caught by the spec's band-index
       // assertion).
-      val fresh = (readIfAny(spark, bandsDir) match {
+      val fresh = (DirIO.readParquet(spark, bandsDir) match {
         case Some(storedBands) =>
           val cand = graft.ext.DedupOps.bandKeys(canon)
             .select(col("band"), col("doc_id").as("doc_a"))
@@ -231,7 +228,7 @@ object CorpusIngest {
         Seq("vec_id"), "left_semi").cache()
       // localCheckpoint pins the decision before the two appends (the
       // same read-your-own-write hazard as ingestBatchNear)
-      val fresh = (readIfAny(spark, sigsDir) match {
+      val fresh = (DirIO.readParquet(spark, sigsDir) match {
         case Some(storedSigs) =>
           val cand = graft.ext.EmbedOps.signatureKeys(canon)
             .select(col("sig"), col("vec_id").as("vec_a"))
@@ -355,7 +352,7 @@ object CorpusIngest {
       // append lost). Also bootstraps reps/ for a corpus written
       // before the bounded-probe layout existed: a data dir with no
       // reps would otherwise probe against nothing.
-      val incoming = readIfAny(spark, dataDir) match {
+      val incoming = DirIO.readParquet(spark, dataDir) match {
         case Some(stored) =>
           val already = batch
             .join(stored.select(col("vec_id")), Seq("vec_id"), "left_semi")
@@ -368,7 +365,7 @@ object CorpusIngest {
             val scope =
               if (repsEmpty) stored
               else stored.join(already, Seq("vec_id"), "left_semi")
-            val missing = readIfAny(spark, repsDir) match {
+            val missing = DirIO.readParquet(spark, repsDir) match {
               case Some(r) => scope.join(
                 r.select(col("vec_id")), Seq("vec_id"), "left_anti")
               case None => scope
@@ -388,7 +385,7 @@ object CorpusIngest {
         .cache()
       // localCheckpoint pins the decision before the appends (the same
       // read-your-own-write hazard as the other ingest layers)
-      val fresh = (readIfAny(spark, repsDir) match {
+      val fresh = (DirIO.readParquet(spark, repsDir) match {
         case Some(reps) =>
           val cand = canon
             .select(col("centroid_id"), col("vec_id").as("vec_a"))
@@ -520,7 +517,7 @@ object CorpusIngest {
     val man = graft.ext.CentroidStore.manifest(centroidDir).getOrElse(
       throw new IllegalStateException(
         s"no committed centroid store at $centroidDir"))
-    val storedOpt = readIfAny(spark, s"$oldIndexDir/data")
+    val storedOpt = DirIO.readParquet(spark, s"$oldIndexDir/data")
     if (storedOpt.isEmpty) return 0L
     val stored = storedOpt.get.drop("centroid_id")
     val cents = graft.ext.CentroidStore.centroids(spark, centroidDir)
@@ -551,7 +548,7 @@ object CorpusIngest {
     * rows. */
   private def admitReps(spark: SparkSession, cands: DataFrame,
       repsDir: String, repCap: Int): Unit = {
-    val have = readIfAny(spark, repsDir) match {
+    val have = DirIO.readParquet(spark, repsDir) match {
       case Some(r) => r.groupBy(col("centroid_id"))
         .agg(count(lit(1)).as("have"))
       case None => null
@@ -579,11 +576,11 @@ object CorpusIngest {
     * epoch cadence on this row. */
   def semanticProbeAudit(spark: SparkSession, indexDir: String,
       repCap: Int = 1024): DataFrame = {
-    val stored = readIfAny(spark, s"$indexDir/data")
+    val stored = DirIO.readParquet(spark, s"$indexDir/data")
       .map(_.select(col("centroid_id"), col("vec_id")))
       .getOrElse(spark.range(0).select(col("id").as("centroid_id"),
         col("id").as("vec_id")))
-    val reps = readIfAny(spark, s"$indexDir/reps")
+    val reps = DirIO.readParquet(spark, s"$indexDir/reps")
       .map(_.select(col("centroid_id"), col("vec_id")))
       .getOrElse(spark.range(0).select(col("id").as("centroid_id"),
         col("id").as("vec_id")))
@@ -663,7 +660,7 @@ object CorpusIngest {
       // mint new doc ids (or run the corpus-upsert path), the same
       // identity rule as the digest-keyed layers.
       val incoming0 = batch.select(col("doc_id"), col("text"))
-      val incoming = readIfAny(spark, dataDir) match {
+      val incoming = DirIO.readParquet(spark, dataDir) match {
         case Some(stored) =>
           val already = incoming0
             .join(stored.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -675,7 +672,7 @@ object CorpusIngest {
             // and future batches would silently stop excising text
             // duplicated from them. Windows come from the STORED
             // (cleaned) text, never the raw resend.
-            val missing = readIfAny(spark, winsDir) match {
+            val missing = DirIO.readParquet(spark, winsDir) match {
               case Some(ws) => already.join(
                 ws.select(col("doc_id")).distinct(),
                 Seq("doc_id"), "left_anti")
@@ -697,7 +694,7 @@ object CorpusIngest {
       // phase 1 pinned: dedupExcise's plan references its input three
       // times (eligible agg, hits join, rebuild join) — unpinned, the
       // stored-index probe would re-run for each
-      val phase1 = (readIfAny(spark, winsDir) match {
+      val phase1 = (DirIO.readParquet(spark, winsDir) match {
         case Some(storedWins) =>
           // the stored side's occCap filter comes from the MAINTAINED
           // per-hash count table (pre-aggregated (h, cnt) deltas, one
@@ -710,7 +707,7 @@ object CorpusIngest {
           // work, never a recall hole); drift is measured, not silent:
           // [[substringIndexAudit]]. A legacy/pre-count corpus
           // bootstraps the table from a one-time recount.
-          val storedCnt = readIfAny(spark, cntDir) match {
+          val storedCnt = DirIO.readParquet(spark, cntDir) match {
             case Some(c) => c.groupBy(col("h"))
               .agg(sum(col("cnt")).as("nocc"))
             case None =>
@@ -789,10 +786,10 @@ object CorpusIngest {
       occCap: Int = 64): DataFrame = {
     val empty = spark.range(0).select(
       col("id").cast("string").as("h"), col("id").as("n"))
-    val truth = readIfAny(spark, s"$corpusDir/wins")
+    val truth = DirIO.readParquet(spark, s"$corpusDir/wins")
       .map(_.groupBy(col("h")).agg(count(lit(1)).as("n")))
       .getOrElse(empty)
-    val maintained = readIfAny(spark, s"$corpusDir/wincnt")
+    val maintained = DirIO.readParquet(spark, s"$corpusDir/wincnt")
       .map(_.groupBy(col("h")).agg(sum(col("cnt")).as("n")))
       .getOrElse(empty)
     truth.select(col("h"), col("n").as("n_true"))
@@ -962,7 +959,7 @@ object CorpusIngest {
     val evalDir = s"$decontamDir/eval_shingles"
     var flagged = 0L
     TxnLog.runOnce(s"$decontamDir/_txn", batchId) {
-      readIfAny(spark, evalDir).foreach { evalIdx =>
+      DirIO.readParquet(spark, evalDir).foreach { evalIdx =>
         // pinned before the count+write act on one evaluation, like
         // every ingest path here
         val report = graft.ext.TextOps

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,16 +55,9 @@ object AsOfLadder {
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("bench_results/asof_ladder.json")
     val passes = sys.env.getOrElse("GRAFT_LADDER_PASSES", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.GraftSession.cores
+    val spark = graft.GraftSession.start(graft.GraftSession.builder(cpus)
+      .config("spark.sql.adaptive.enabled", "true"))
 
     // rate table: 1k keys x 20 entries, effective timestamps spread
     // over [0, 20e9) us — dim-sized by construction (20k rows)

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.streaming.CorpusIngest
 
@@ -35,16 +35,9 @@ object IngestGrowthProbe {
       .getOrElse("bench_results/ingest_growth.json")
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(24)
     val batchRows = args.drop(2).headOption.map(_.toInt).getOrElse(512)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.GraftSession.cores
+    val spark = graft.GraftSession.start(graft.GraftSession.builder(cpus)
+      .config("spark.sql.adaptive.enabled", "true"))
     import spark.implicits._
 
     def hygiene(): Unit = {

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the flagship queries to a
   * file (PLANS.md source material). Run:
   *   runMain graft.tools.PlanDump <outFile> [query,query,...] [dataDir]
@@ -13,17 +11,12 @@ object PlanDump {
     val out = args.headOption.getOrElse("/tmp/plans.txt")
     val only = args.drop(1).headOption.filter(_.nonEmpty).map(_.split(",").toSet)
     val dir = args.drop(2).headOption.getOrElse("/root/testdata/sf0.001")
-    // match the Bench session's geometry (core count = shuffle
-    // partitions from SPARK_GRAFT_CPUS) so dumped plans are the plans
-    // the bench actually executes — size estimates, and with them
+    // match the Bench session (GraftSession, AQE off) so dumped plans
+    // are the plans the bench actually executes — size estimates, and with them
     // broadcast decisions, depend on the data dir passed as arg 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(graft.GraftSession.cores)
+        .config("spark.sql.adaptive.enabled", "false"))
     val sb = new StringBuilder
     graft.SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{GraftConf, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 
 /** Plan-shape audit: print, for each named query at a given SF dir, the
   * physical-operator counts that decide scale behavior (exchanges,
@@ -39,20 +37,10 @@ object PlanShapes {
     val names = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.start(GraftSession.builder(GraftSession.cores)
       // static plans: the probe compares what the planner commits to
       // from size estimates alone; AQE reshaping is measured separately
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.validate(spark)
+      .config("spark.sql.adaptive.enabled", "false"))
     for (n <- names) {
       val unknown = !SparkEntry.queries.contains(n)
       if (unknown) println(s"""{"query":"$n","err":"unknown query"}""")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: writes an N× replica of a driver
@@ -37,13 +37,8 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = args.drop(1).headOption.getOrElse("target/scaled/sf1")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(graft.GraftSession.cores))
 
     def tbl(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     def maxOf(df: DataFrame, c: String): Long =

@@ -3,9 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{GraftConf, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 
 /** The scale LADDER: wall-clock growth curves at 1×/3×/10×/30× for the
   * headline query set — the measured form of "would this survive a
@@ -30,7 +28,7 @@ import graft.{GraftConf, SparkEntry}
   * ENGINE's scaling, not accidental data-shape drift.
   *
   * Run: ScaleLadder [outPath] [names] [dir:replicas,dir:replicas,...]
-  * Env: GRAFT_LADDER_PASSES (default 2 timed passes per rung).
+  * Env: GRAFT_LADDER_PASSES (default 3 timed passes per rung).
   */
 /** The ladder's growth-exponent fits — pure functions, unit-testable
   * (BenchStatsSpec pins them against the r15 profile that motivated
@@ -116,24 +114,15 @@ object ScaleLadder {
     // every median of that rung; a third quiet pass restores a true
     // median (the same lesson as Bench's pass-count)
     val passes = sys.env.getOrElse("GRAFT_LADDER_PASSES", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.cores
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
 
     // AQE on: the deployment default, and the mode whose runtime
     // re-planning (skew split, dynamic coalesce) is exactly what the
     // ladder should exercise at the top rungs
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.validate(spark)
+    val spark = GraftSession.start(GraftSession.builder(cpus)
+      .config("spark.sql.adaptive.enabled", "true"))
 
     val samples = collection.mutable.Map
       .empty[(String, String), Vector[Double]]

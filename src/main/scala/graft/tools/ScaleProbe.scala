@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{GraftConf, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 
 /** The standing 10×-scale gate for pair-generating operators.
   *
@@ -78,8 +78,7 @@ object ScaleProbe {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(pairGenerating)
     val passes = sys.env.getOrElse("GRAFT_PROBE_PASSES", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.cores
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
 
@@ -89,16 +88,8 @@ object ScaleProbe {
     val rows = collection.mutable.Map.empty[(String, String, String), Long]
 
     for (mode <- Seq("static", "aqe")) {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", (mode == "aqe").toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      GraftConf.validate(spark)
+      val spark = GraftSession.start(GraftSession.builder(cpus)
+        .config("spark.sql.adaptive.enabled", (mode == "aqe").toString))
       // one untimed warmup pass per mode (JIT + codegen compile)
       for (n <- names) SparkEntry.queries(n)(spark, smallDir).count()
       for (_ <- 1 to passes; dir <- Seq(smallDir, bigDir); n <- names) {

@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run named SparkEntry queries and print per-stage metrics
   * (duration, task count, shuffle read/write bytes, input bytes, spill)
@@ -19,20 +18,10 @@ object StageProf {
       .getOrElse(Set.empty)
     require(names.nonEmpty, "pass a comma-separated query list")
     val iters = args.drop(2).headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // dev knob: decouple shuffle width from the core count to separate
-    // "too many tasks" from "too many threads" when a stage anti-scales
-    val shufP = sys.env.getOrElse("GRAFT_PROF_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      // match the Bench session's shuffle writer (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the Bench session: static plans, serialized shuffle writer
+    val spark = graft.GraftSession.start(
+      graft.GraftSession.builder(graft.GraftSession.cores)
+        .config("spark.sql.adaptive.enabled", "false"))
 
     final case class Row(id: Int, name: String, ms: Long, tasks: Int,
         inMB: Double, srMB: Double, swMB: Double, spillMB: Double,

@@ -14,7 +14,7 @@ import graft.functions.BloomMightContain
 class BloomSpec extends SparkSpec {
 
   private def probeAll(keys: Seq[Long], bloomWords: Seq[Long], k: Int): Seq[Boolean] = {
-    BloomMightContain.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     keys.toDF("h")
       .crossJoin(broadcast(Seq(Tuple1(bloomWords)).toDF("bloom")))
@@ -81,7 +81,7 @@ class BloomSpec extends SparkSpec {
   }
 
   test("empty bitset (m=0) probes false instead of dividing by zero, both eval modes") {
-    BloomMightContain.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     val df = Seq((Seq.empty[Long], 42L), (Seq.empty[Long], -7L))
       .toDF("bloom", "h")
@@ -98,7 +98,7 @@ class BloomSpec extends SparkSpec {
   }
 
   test("wrong-typed arguments fail at analysis, not at executor runtime") {
-    BloomMightContain.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     val bad = Seq(("oops", 1L)).toDF("bloom", "h")
     val e = intercept[org.apache.spark.sql.AnalysisException] {

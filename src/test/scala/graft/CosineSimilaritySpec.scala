@@ -9,7 +9,7 @@ import graft.functions.CosineSimilarity
 class CosineSimilaritySpec extends SparkSpec {
 
   test("cosine_sim matches hand-computed values and handles edge cases") {
-    CosineSimilarity.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 0.0f), Array(1.0f, 0.0f)),   // identical → 1
@@ -39,7 +39,7 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("expression survives codegen (forced) and interpreted paths agree") {
-    CosineSimilarity.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     val df = Seq((Array.tabulate(64)(i => i.toFloat / 64),
       Array.tabulate(64)(i => (64 - i).toFloat / 64))).toDF("a", "b")
@@ -65,7 +65,7 @@ class CosineSimilaritySpec extends SparkSpec {
     new graft.functions.GraftExtensions()(
       new org.apache.spark.sql.SparkSessionExtensions)
     // and the same builder, registered in the live session, resolves in SQL
-    CosineSimilarity.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f))).toDF("a", "b")
       .createOrReplaceTempView("vv")

@@ -89,4 +89,18 @@ class EndToEndStreamSpec extends SparkSpec {
     assert(markers.contains("batch-0") && markers.distinct.length == markers.length,
       markers.mkString(","))
   }
+
+  test("a query started on an empty shard directory writes the jobs of the first file landed") {
+    val shardDir = Files.createTempDirectory("graft-e2e-empty").toString
+    val base = Files.createTempDirectory("graft-e2e-empty-sink").toString
+    val q = startQuery(shardDir, base)
+    try {
+      // the data-less first batch leaves only the `_txn` log under jobs
+      q.processAllAvailable()
+      writeShard(shardDir, "shard-000.json", Seq(28L))
+      q.processAllAvailable()
+    } finally q.stop()
+    val jobs = spark.read.parquet(s"$base/jobs").collect()
+    assert(jobs.length == 1 && jobs.head.getAs[String]("dedup_id").startsWith("ev28-"))
+  }
 }

@@ -59,9 +59,12 @@ class GraftConfSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](GraftConf.validate(spark))
       assert(e.getMessage.contains(GraftConf.DebugLoggingKey))
     }
-    withConf(GraftConf.MetricsEnabledKey -> "yes") {
-      intercept[IllegalArgumentException](GraftConf.validate(spark))
-    }
+    for (key <- Seq(GraftConf.MetricsEnabledKey, GraftConf.WinMagicKey,
+        GraftConf.AsOfPushdownKey, GraftConf.FailOnGlobalWindowKey))
+      withConf(key -> "yes") {
+        val e = intercept[IllegalArgumentException](GraftConf.validate(spark))
+        assert(e.getMessage.contains(key))
+      }
   }
 
   test("debugLogging conf drives the graft logger level (ENABLE_DEBUG_LOGGING analog)") {

@@ -8,7 +8,7 @@ import graft.functions.RollingMinHash
 class RollingMinHashSpec extends SparkSpec {
 
   test("rolling_min_hash matches hand-computed polynomial hashes") {
-    RollingMinHash.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     val df = Seq(
       "abcdefghijklmnop",          // exactly one window
@@ -29,7 +29,7 @@ class RollingMinHashSpec extends SparkSpec {
       "a slightly longer document body with several windows in it")
     val interp = RollingMinHash(
       org.apache.spark.sql.catalyst.expressions.Literal(s)).eval(null)
-    RollingMinHash.register(spark)
+    GraftSql.registerFunctions(spark)
     import spark.implicits._
     val gen = Seq(s.toString).toDF("s")
       .withColumn("h", expr("rolling_min_hash(s)")).head.getLong(1)

@@ -45,7 +45,7 @@ class SimHashSpec extends SparkSpec {
     val interp = SimHash60(
       org.apache.spark.sql.catalyst.expressions.Literal(s)).eval(null)
       .asInstanceOf[Long]
-    SimHash60.register(spark)
+    GraftSql.registerFunctions(spark)
     val gen = Seq(s.toString).toDF("s")
       .withColumn("h", expr("simhash60(s)")).head.getLong(1)
     assert(interp == gen)
@@ -76,7 +76,7 @@ class SimHashSpec extends SparkSpec {
       "a document with some repeated words a document")
     val interp = SimHash32(
       org.apache.spark.sql.catalyst.expressions.Literal(s)).eval(null)
-    SimHash32.register(spark)
+    GraftSql.registerFunctions(spark)
     val gen = Seq(s.toString).toDF("s")
       .withColumn("h", expr("simhash32(s)")).head.getLong(1)
     assert(interp == gen)

@@ -227,4 +227,37 @@ class SinkSpec extends SparkSpec {
       assert(byGuest("g1128") == "delivered")
     } finally q.stop()
   }
+
+  test("CAS sink: null-guest triggers and duplicates of one event leave one status row per key") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-cas-nullguest").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[graft.streaming.StreamOutcome]
+    // a null guest_id decodes to "", so these share the keys (ev1, "")
+    // and (ev2, ""): two triggers with different emails, two duplicates
+    def out(r: String, ev: String, email: String, action: String) =
+      graft.streaming.StreamOutcome(r, ev, "", s"$ev|$email", action, "")
+    val q = StreamPipeline.casSinkTo(input.toDS(), s"$base/ck",
+      s"$base/jobs", s"$base/status")
+    try {
+      input.addData(
+        out("r1", "ev1", "a@x.com", "email_triggered"),
+        out("r2", "ev1", "b@x.com", "email_triggered"),
+        out("r3", "ev2", "c@x.com", "duplicate_prevented"),
+        out("r4", "ev2", "d@x.com", "duplicate_prevented"))
+      q.processAllAvailable()
+      // a later commit must not multiply the keys already stored
+      input.addData(
+        out("r5", "ev2", "c@x.com", "duplicate_prevented"),
+        out("r6", "ev2", "d@x.com", "duplicate_prevented"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val st = graft.sink.StatusStore.read(spark, s"$base/status").get
+      .collect().map(r => (r.getAs[String]("event_id"), r.getAs[String]("guest_id"),
+        r.getAs[String]("delivery_status"))).sorted.toSeq
+    assert(st == Seq(("ev1", "", "processing"), ("ev2", "", "delivered")))
+    // both emails of ev1 still get their job
+    assert(spark.read.parquet(s"$base/jobs").count() == 2L)
+  }
 }

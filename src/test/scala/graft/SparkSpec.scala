@@ -5,7 +5,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
-  * total test time bounded by a single startup + codegen warmup).
+  * total test time bounded by a single startup + codegen warmup), built
+  * by [[GraftSession]] like every main, on a fixed 4 cores so plans do
+  * not depend on the host.
   *
   * Built WITH [[graft.functions.GraftExtensions]] — the production
   * deployment (`spark.sql.extensions`) — so every suite observes the
@@ -17,15 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan captures). Suites must not mutate the shared session's
   * experimental rule lists. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.start(GraftSession.builder(4)
     .withExtensions(new graft.functions.GraftExtensions)
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    .appName("graft-tests"))
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

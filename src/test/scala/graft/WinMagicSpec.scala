@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * The rewrite reaches these plans through the shared session's
   * build-time [[graft.functions.GraftExtensions]] (see [[SparkSpec]])
-  * — NOT a runtime [[WinMagic.install]], which would mutate the shared
-  * session's `experimental.extraOptimizations` and leak the rule into
-  * other suites' plan captures (the r13 suite-order flake). */
+  * — never a runtime `experimental.extraOptimizations` install, which
+  * would mutate the shared session and leak the rule into other
+  * suites' plan captures (the r13 suite-order flake). */
 class WinMagicSpec extends SparkSpec {
 
   private def joins(df: DataFrame) =
@@ -469,9 +469,8 @@ class WinMagicSpec extends SparkSpec {
   test("kill switch: winmagic=false leaves the join in place") {
     spark.conf.set("spark.graft.optimizer.winmagic", "false")
     try {
-      // the gated form is the build-time injection; the runtime
-      // extraOptimizations install ignores the conf by design, so
-      // exercise the gate directly on the logical plan
+      // the gated form is the build-time injection; exercise the
+      // gate directly on the logical plan
       val f = fact()
       val agg = f.groupBy("k").agg(sum("x").as("s"))
       val plan = f.join(agg, "k").queryExecution.analyzed

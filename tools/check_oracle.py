@@ -7,7 +7,10 @@ columns sorted by name, rows sorted by all columns, values compared exactly
 (floats via repr of the float64). Dev-only tool; the Scala library has no
 python dependency.
 
-Usage: tools/check_oracle.py [sfdir] [verify_outdir]
+Usage: tools/check_oracle.py [sfdir] [verify_outdir] [query,query,...]
+
+The optional third argument checks only the named queries (for example a
+GRAFT_VERIFY_ONLY run); a name with no oracle fails the check.
 """
 import json
 import math
@@ -46,6 +49,12 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    if len(sys.argv) > 3:
+        only = {n.strip() for n in sys.argv[3].split(",") if n.strip()}
+        unknown = sorted(only - oracle.keys())
+        if unknown or not only:
+            sys.exit(f"no oracle for: {', '.join(unknown) or '(empty subset)'}")
+        oracle = {n: q for n, q in oracle.items() if n in only}
     failures = []
     for name, sql in sorted(oracle.items()):
         try:
