@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The one place the directory-stream-hygiene idiom lives: every
   * `Files.list` MUST be closed (the javadoc requires try-with-
@@ -41,8 +42,11 @@ object DirIO {
   /** `dir` read as parquet, or None while it holds no data entry. Names
     * starting with `_` or `.` do not count — Spark's own hidden-file
     * rule — so a directory holding only a `_txn` commit log reads as
-    * empty instead of failing schema inference. */
-  def readParquet(spark: SparkSession, dir: String): Option[DataFrame] = {
+    * empty instead of failing schema inference. With a `schema` the
+    * read takes it (a subset of the stored columns is fine) and runs
+    * no schema-inference job; without one Spark infers it. */
+  def readParquet(spark: SparkSession, dir: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
     val p = Paths.get(dir)
     val hasData = Files.exists(p) && {
       val s = Files.list(p)
@@ -51,7 +55,8 @@ object DirIO {
         !n.startsWith("_") && !n.startsWith(".")
       } finally s.close()
     }
-    if (hasData) Some(spark.read.parquet(dir)) else None
+    if (!hasData) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
   }
 
   /** The `<prefix><long>` entries of `dir`, parsed and ascending —

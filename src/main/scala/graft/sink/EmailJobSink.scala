@@ -5,6 +5,9 @@ import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.JobLabel
 
 /** O14 + O8/O11 as an effectively-once batch sink (SURVEY.md §7.4.2):
   * email jobs appended idempotently by dedup_id, and the status table
@@ -24,28 +27,48 @@ import org.apache.spark.sql.functions._
 object EmailJobSink {
 
   /** Idempotent append: only jobs whose dedup_id is not yet in the sink
-    * are written. Returns the number of newly written rows. */
+    * are written. Returns the number of newly written rows.
+    *
+    * Two jobs at most: the count (`append:dedup`) materializes the
+    * anti-joined frame into the cache, and the write (`append:write`)
+    * reads it from there, so the anti-join runs once. The jobs dir is
+    * read with the one column the anti-join needs, so no
+    * schema-inference job runs. The write stays conditional: an empty
+    * Append would still create the directory. */
   def appendJobs(jobs: DataFrame, jobsDir: String): Long = {
     val spark = jobs.sparkSession
-    // pinned so the anti-join runs once: the count and the conditional
-    // write both act on the materialized frame (the write must stay
-    // conditional — an empty Append still creates the directory, which
-    // would flip readParquet to a schemaless parquet read next batch)
-    val fresh = (graft.DirIO.readParquet(spark, jobsDir) match {
+    val fresh = (graft.DirIO.readParquet(spark, jobsDir, Some(DedupIdSchema)) match {
       case Some(existing) =>
-        jobs.join(existing.select(col("dedup_id")).distinct(),
-          Seq("dedup_id"), "left_anti")
+        jobs.join(existing.distinct(), Seq("dedup_id"), "left_anti")
       case None => jobs
-    }).localCheckpoint()
-    val n = fresh.count()
-    if (n > 0) fresh.write.mode(SaveMode.Append).parquet(jobsDir)
-    n
+    }).cache()
+    try {
+      val n = JobLabel(spark, "append:dedup")(fresh.count())
+      if (n > 0) JobLabel(spark, "append:write") {
+        fresh.write.mode(SaveMode.Append).parquet(jobsDir)
+      }
+      n
+    } finally fresh.unpersist()
   }
 
+  private val DedupIdSchema = StructType(Seq(StructField("dedup_id", StringType)))
+
   /** Last-write-wins merge of status updates into the status table,
-    * keyed (event_id, guest_id); `seq` breaks ties within the batch. */
+    * keyed (event_id, guest_id); `seq` breaks ties within the batch.
+    *
+    * The merged table is written to `<statusDir>.tmp`, then swapped in
+    * by two renames (the old table to `<statusDir>.old`, the new one
+    * into place) before the old one is deleted. A crash between the
+    * renames leaves no table but a complete tmp; the next merge
+    * finishes the swap before it reads, so no earlier row is lost. */
   def mergeStatus(updates: DataFrame, statusDir: String): Unit = {
     val spark = updates.sparkSession
+    val target = Paths.get(statusDir)
+    val tmp = Paths.get(statusDir + ".tmp")
+    val old = Paths.get(statusDir + ".old")
+    if (!Files.exists(target) && Files.exists(tmp.resolve("_SUCCESS")))
+      Files.move(tmp, target)
+    deleteRecursively(old)
     val incoming = updates.select(
       col("event_id"), col("guest_id"),
       col("new_delivery_status").as("delivery_status"))
@@ -57,16 +80,20 @@ object EmailJobSink {
           .unionByName(incoming)
       case None => incoming
     }
-    val tmp = statusDir + ".tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val target = Paths.get(statusDir)
-    if (Files.exists(target)) deleteRecursively(target)
-    Files.move(Paths.get(tmp), target)
+    JobLabel(spark, "status:write") {
+      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }
+    if (Files.exists(target)) Files.move(target, old)
+    Files.move(tmp, target)
+    deleteRecursively(old)
   }
 
   private def deleteRecursively(p: Path): Unit =
-    Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally s.close()
+    }
 
   /** Batch-commit log: the exactly-once foreachBatch pattern. A batch id
     * is committed by creating a marker file AFTER its writes complete;

@@ -3,8 +3,11 @@ package graft.sink
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.JobLabel
 
 /** Cross-process optimistic CCAS on the persistent status table — the
   * reference's conditional UpdateItem (index.js:448-497: transition to
@@ -78,22 +81,23 @@ object StatusStore {
     else Some(Paths.get(dir, new String(Files.readAllBytes(marker), "UTF-8").trim).toString)
   }
 
+  /** The four columns every snapshot holds. Snapshots are read with it
+    * instead of inferring it, which would cost a job per read. */
+  private val Schema: StructType = StructType(
+    Seq("event_id", "guest_id", "delivery_status", "email_error_at")
+      .map(StructField(_, StringType)))
+
+  private def readSnapshot(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Schema).parquet(path)
+
   /** The status table at its latest committed version. */
   def read(spark: SparkSession, dir: String): Option[DataFrame] = {
     val v = currentVersion(dir)
-    if (v == 0L) None else snapshotPath(dir, v).map(spark.read.parquet)
+    if (v == 0L) None else snapshotPath(dir, v).map(readSnapshot(spark, _))
   }
 
-  private def emptyStatus(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("event_id", StringType),
-        StructField("guest_id", StringType),
-        StructField("delivery_status", StringType),
-        StructField("email_error_at", StringType))))
-  }
+  private def emptyStatus(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
 
   /** Conditional merge with optimistic retry. `updates` columns:
     * event_id, guest_id, expected_status (nullable → unconditional),
@@ -102,7 +106,13 @@ object StatusStore {
     * event reach here under the same key, and the left join below would
     * otherwise multiply that key's stored rows on every commit.
     * Conflicting rows on one key are an error of the caller. Returns
-    * counts from the attempt that committed. */
+    * counts from the attempt that committed.
+    *
+    * An attempt runs two jobs, labelled `cas:verdicts` and `cas:write`
+    * ([[graft.JobLabel]]): one aggregate over the cached verdicts gives
+    * both counts, and the snapshot write. The snapshot is read with
+    * [[Schema]], so no schema-inference job runs; an attempt where no
+    * row applies commits nothing and skips the write. */
   def casMerge(updates: DataFrame, dir: String, maxRetries: Int = 50): CasResult = {
     val spark = updates.sparkSession
     val writerId = java.util.UUID.randomUUID().toString.take(8)
@@ -117,7 +127,7 @@ object StatusStore {
           throw new IllegalStateException(
             s"casMerge on $dir lost the commit race $maxRetries times")
         val v = currentVersion(dir)
-        val cur = (if (v == 0L) None else snapshotPath(dir, v).map(spark.read.parquet))
+        val cur = (if (v == 0L) None else snapshotPath(dir, v).map(readSnapshot(spark, _)))
           .getOrElse(emptyStatus(spark))
 
         val joined = up.alias("u").join(cur.alias("c"),
@@ -133,8 +143,12 @@ object StatusStore {
           .select(col("event_id"), col("guest_id"),
             col("new_status").as("delivery_status"),
             col("error_at").as("email_error_at"))
-        val nApplied = applied.count()
-        val nRejected = verdicts.count() - nApplied
+        val counts = JobLabel(spark, "cas:verdicts") {
+          verdicts.agg(count(lit(1)), sum(when(col("holds"), 1L).otherwise(0L)))
+            .head()
+        }
+        val nApplied = if (counts.isNullAt(1)) 0L else counts.getLong(1)
+        val nRejected = counts.getLong(0) - nApplied
 
         if (nApplied == 0L) {
           val keys = verdicts.filter(col("holds")).select("event_id", "guest_id")
@@ -147,7 +161,9 @@ object StatusStore {
           .unionByName(applied)
         val snapName = f"snap-${v + 1}%08d-$writerId"
         val snapDir = Paths.get(dir, snapName)
-        merged.write.mode("overwrite").parquet(snapDir.toString)
+        JobLabel(spark, "cas:write") {
+          merged.write.mode("overwrite").parquet(snapDir.toString)
+        }
 
         Files.createDirectories(commitsDir(dir))
         val tmp = commitsDir(dir).resolve(s".tmp-$writerId-$attempt")

@@ -1,0 +1,190 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.pipeline.MatchFixture
+import graft.sink.StatusStore
+import graft.streaming.{StreamOutcome, StreamPipeline}
+
+/** Pins the job budget of the stream sinks per micro-batch.
+  *
+  * Every sink batch starts with one counting job; a batch whose counts
+  * say there is nothing to write stops there. A regression that puts
+  * back a schema-inference read, a second count or an unconditional
+  * CAS on an empty batch fails here. Jobs are counted per
+  * `streaming.sql.batchId` from the job-start properties, under the
+  * same AQE-off, broadcast-off conf as [[BarrierCountSpec]].
+  */
+class SinkJobBudgetSpec extends SparkSpec {
+
+  /** (query id, batch id, description) of every job started. */
+  private class JobLog extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[(String, Long, String)]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        val q = p.getProperty("sql.streaming.queryId")
+        val b = p.getProperty("streaming.sql.batchId")
+        if (q != null && b != null)
+          jobs.add((q, b.toLong, p.getProperty("spark.job.description")))
+      }
+  }
+
+  /** Runs `body` with a started query under the counting conf, then
+    * returns the job descriptions per batch id of that query. */
+  private def jobsPerBatch(start: => StreamingQuery)(
+      body: StreamingQuery => Unit): Map[Long, Seq[String]] = {
+    val sc = spark.sparkContext
+    val log = new JobLog
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    sc.addSparkListener(log)
+    val q = try start finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+    }
+    try body(q) finally q.stop()
+    // listener-bus delivery is async: poll until the count is stable
+    var last = -1
+    var spins = 0
+    while (log.jobs.size != last && spins < 100) {
+      last = log.jobs.size
+      Thread.sleep(100)
+      spins += 1
+    }
+    sc.removeSparkListener(log)
+    val id = q.id.toString
+    log.jobs.asScala.toSeq.filter(_._1 == id)
+      .groupBy(_._2).view.mapValues(_.map(_._3)).toMap
+  }
+
+  /** Data files of a table dir (the commit log and Spark's hidden files
+    * left out). */
+  private def dataFiles(dir: String): Set[String] = {
+    val p = Paths.get(dir)
+    if (!Files.exists(p)) Set.empty
+    else DirIO.listNames(p).filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+  }
+
+  private def out(r: String, ev: String, action: String) =
+    StreamOutcome(r, ev, s"g$r", s"$ev|$r@x.com", action, "")
+
+  test("CAS sink: an empty or all-skipped batch runs one job and writes nothing") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-budget-cas").toString
+    val statusDir = s"$base/status"
+    val jobsDir = s"$base/jobs"
+    val input = MemoryStream[StreamOutcome]
+    var afterTrigger = (0L, Set.empty[String])
+    val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(input.toDS(),
+        s"$base/ck", jobsDir, statusDir)) { q =>
+      input.addData(out("r1", "ev1", "email_triggered"))       // batch 0
+      q.processAllAvailable()
+      afterTrigger = (StatusStore.currentVersion(statusDir), dataFiles(jobsDir))
+      input.addData(Seq.empty[StreamOutcome])                   // batch 1
+      q.processAllAvailable()
+      input.addData(out("r2", "ev2", "skipped"),                // batch 2
+        out("r3", "ev3", "skipped"))
+      q.processAllAvailable()
+    }
+    assert(afterTrigger._1 == 1L && afterTrigger._2.nonEmpty)
+    // the trigger-only batch: count, the trigger CAS (verdicts + write)
+    // and the append (dedup count + write)
+    val trig = perBatch.getOrElse(0L, Nil)
+    assert(trig.size <= 5, s"trigger-only batch ran ${trig.size} jobs: $trig")
+    assert(trig.headOption.contains("sink:count"), s"first job: $trig")
+    Seq(1L, 2L).foreach { b =>
+      assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
+        s"batch $b ran ${perBatch.getOrElse(b, Nil)}")
+    }
+    assert(StatusStore.currentVersion(statusDir) == afterTrigger._1)
+    assert(dataFiles(jobsDir) == afterTrigger._2)
+  }
+
+  test("CAS sink: the zero-row batch the TTL watermark adds runs one job") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-budget-ttl").toString
+    val input = MemoryStream[(Long, String)]
+    val envelope = MatchFixture.envelope(input.toDF().toDF("c_custkey", "c_name"))
+    var batches = Seq.empty[(Long, Long)]
+    val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(
+        StreamPipeline.outcomesWithTtl(envelope, ttlMs = 1000L),
+        s"$base/ck", s"$base/jobs", s"$base/status")) { q =>
+      input.addData((28L, "Customer#28"))
+      q.processAllAvailable()
+      batches = q.recentProgress.toSeq.map(p => (p.batchId, p.numInputRows))
+    }
+    // batch 0 carries the record; the watermark it moves adds batch 1
+    // with no input, which must not run the sink's writes
+    // (idle progress reports repeat the last batch id with 0 rows)
+    val noData = batches.groupBy(_._1)
+      .collect { case (b, ps) if b >= 0 && ps.forall(_._2 == 0L) => b }
+    assert(noData.nonEmpty, s"no zero-row batch ran: $batches")
+    noData.foreach { b =>
+      assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
+        s"zero-row batch $b ran ${perBatch.getOrElse(b, Nil)}")
+    }
+  }
+
+  test("plain sink: an empty or all-skipped batch runs one job and writes nothing") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    // keys that are `skipped` on their own: no dedup state involved
+    val skippedKeys = StreamPipeline.outcomes(MatchFixture.envelope(
+        (1L to 60L).map(k => (k, s"Customer#$k")).toDF("c_custkey", "c_name")))
+      .filter($"action" === "skipped").select($"recordId").as[String].collect()
+      .map(_.stripPrefix("r").toLong).sorted.take(3)
+    assert(skippedKeys.length == 3)
+    val base = Files.createTempDirectory("graft-budget-plain").toString
+    val statusDir = s"$base/status"
+    val jobsDir = s"$base/jobs"
+    val input = MemoryStream[(Long, String)]
+    val envelope = MatchFixture.envelope(input.toDF().toDF("c_custkey", "c_name"))
+    var afterTrigger = (Set.empty[String], Set.empty[String])
+    val perBatch = jobsPerBatch(StreamPipeline.startWithSink(envelope,
+        s"$base/ck", jobsDir, statusDir)) { q =>
+      input.addData((28L, "Customer#28"))                       // batch 0
+      q.processAllAvailable()
+      afterTrigger = (dataFiles(statusDir), dataFiles(jobsDir))
+      input.addData(Seq.empty[(Long, String)])                  // batch 1
+      q.processAllAvailable()
+      input.addData(skippedKeys.map(k => (k, s"Customer#$k")).toSeq) // batch 2
+      q.processAllAvailable()
+    }
+    assert(afterTrigger._1.nonEmpty && afterTrigger._2.nonEmpty)
+    Seq(1L, 2L).foreach { b =>
+      assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
+        s"batch $b ran ${perBatch.getOrElse(b, Nil)}")
+    }
+    // the status table was not rewritten and no job file landed
+    assert(dataFiles(statusDir) == afterTrigger._1)
+    assert(dataFiles(jobsDir) == afterTrigger._2)
+    // the commit log is compacted to its high-water mark
+    assert(DirIO.listNames(Paths.get(jobsDir, "_txn")) == List("hwm"))
+  }
+
+  test("JobLabel nests inside an outer step and restores the description") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("outer batch")
+    try {
+      val seen = JobLabel(spark, "cas:delivered") {
+        val inner = JobLabel(spark, "cas:write")(sc.getLocalProperty("spark.job.description"))
+        (inner, sc.getLocalProperty("spark.job.description"))
+      }
+      assert(seen == ("cas:delivered cas:write", "cas:delivered"))
+      assert(sc.getLocalProperty("spark.job.description") == "outer batch")
+      intercept[RuntimeException](JobLabel(spark, "x")(throw new RuntimeException("boom")))
+      assert(sc.getLocalProperty("spark.job.description") == "outer batch")
+    } finally sc.setJobDescription(null)
+  }
+}

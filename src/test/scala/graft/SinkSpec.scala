@@ -48,6 +48,45 @@ class SinkSpec extends SparkSpec {
       after.head.getAs[String]("delivery_status") == "delivered")
   }
 
+  test("mergeStatus finishes a swap a crash interrupted instead of losing the table") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-status-crash").toString + "/status"
+    EmailJobSink.mergeStatus(Seq(("ev1", "g1", "processing"))
+      .toDF("event_id", "guest_id", "new_delivery_status"), dir)
+    // the crash: the old table is gone, the complete new one is still
+    // at its tmp name
+    Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(dir + ".tmp"))
+    EmailJobSink.mergeStatus(Seq(("ev2", "g2", "delivered"))
+      .toDF("event_id", "guest_id", "new_delivery_status"), dir)
+    val rows = spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[String]("event_id"), r.getAs[String]("delivery_status"))).sorted
+    assert(rows.toSeq == Seq(("ev1", "processing"), ("ev2", "delivered")))
+    assert(!Files.exists(java.nio.file.Paths.get(dir + ".tmp")))
+  }
+
+  test("stream sink compacts its commit log and still skips a committed batch") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-txn-compact").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[graft.streaming.StreamOutcome]
+    val q = StreamPipeline.casSinkTo(input.toDS(), s"$base/ck",
+      s"$base/jobs", s"$base/status")
+    try (1 to 4).foreach { i =>
+      input.addData(graft.streaming.StreamOutcome(s"r$i", s"ev$i", s"g$i",
+        s"ev$i|a@x.com", if (i % 2 == 0) "duplicate_prevented" else "email_triggered", ""))
+      q.processAllAvailable()
+    } finally q.stop()
+    val log = s"$base/jobs/_txn"
+    val entries = graft.DirIO.listNames(java.nio.file.Paths.get(log))
+    assert(entries.contains("hwm") && entries.size <= 2, s"_txn holds $entries")
+    assert(EmailJobSink.TxnLog.highWaterMark(log) == 3L)
+    var ran = false
+    assert(!EmailJobSink.TxnLog.runOnce(log, 2L) { ran = true })
+    assert(!ran)
+    assert(spark.read.parquet(s"$base/jobs").count() == 2L)
+  }
+
   test("txn log runs a batch once and skips its replay") {
     val log = Files.createTempDirectory("graft-txn").toString
     var runs = 0
