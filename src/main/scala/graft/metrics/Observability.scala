@@ -1,6 +1,6 @@
 package graft.metrics
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -18,21 +18,26 @@ object Observability {
 
   val MetricName = "pipeline_metrics"
 
+  /** The reference's six per-batch counters (index.js:42-49) over a
+    * decide()d frame's `action`. Error records do not count as
+    * processed (index.js:61-71). [[observed]] attaches them;
+    * graft.pipeline.MatchPipeline.metrics aggregates them. */
+  val Counters: Seq[Column] = Seq(
+    count(lit(1)).as("total_records"),
+    sum(when(col("action") =!= "error", 1L).otherwise(0L))
+      .as("processed_records"),
+    sum(when(col("action") === "email_triggered", 1L).otherwise(0L))
+      .as("emails_triggered"),
+    sum(when(col("action") === "skipped", 1L).otherwise(0L))
+      .as("skipped_records"),
+    sum(when(col("action") === "duplicate_prevented", 1L).otherwise(0L))
+      .as("duplicates_prevented"),
+    sum(when(col("action") === "error", 1L).otherwise(0L))
+      .as("error_records"))
+
   /** Attach the counters to a decide()d frame. */
   def observed(decided: DataFrame, name: String = MetricName): DataFrame =
-    decided.observe(
-      name,
-      count(lit(1)).as("total_records"),
-      sum(when(col("action") =!= "error", 1L).otherwise(0L))
-        .as("processed_records"),
-      sum(when(col("action") === "email_triggered", 1L).otherwise(0L))
-        .as("emails_triggered"),
-      sum(when(col("action") === "skipped", 1L).otherwise(0L))
-        .as("skipped_records"),
-      sum(when(col("action") === "duplicate_prevented", 1L).otherwise(0L))
-        .as("duplicates_prevented"),
-      sum(when(col("action") === "error", 1L).otherwise(0L))
-        .as("error_records"))
+    decided.observe(name, Counters.head, Counters.tail: _*)
 
   /** Batch listener: invokes `publish` with the observed row after each
     * successful action on an observed frame — the seam where a metrics

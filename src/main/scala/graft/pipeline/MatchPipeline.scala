@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.decode.DynamoDecode
+import graft.metrics.Observability
 import graft.rules.Rules
 
 /** Batch assembly of the CDC match-notification pipeline: the reference's
@@ -73,9 +74,6 @@ object MatchPipeline {
     *
     * Scale: both layers hash-partition on (event_id, lower(email)) —
     * the same exchange serves the join build and the window sort. */
-  def withDupHit(dec: DataFrame): DataFrame =
-    withDupHit(dec, 1, Rules.DefaultDenyDomains, Rules.DefaultDenyPrefixes)
-
   def withDupHit(dec: DataFrame, minMatches: Int,
       denyDomains: Seq[String], denyPrefixes: Seq[String]): DataFrame = {
     val st = statusKeys(dec)
@@ -90,18 +88,6 @@ object MatchPipeline {
       .withColumn("snap_dup", coalesce(col("s_hit"), lit(false)))
       .drop("s_event_id", "s_guest_email", "s_hit")
 
-    val reaches = Rules.reachesDupCheck(
-      eventName = col("event_name"),
-      hasNewImage = col("has_new_image"),
-      parseError = col("parse_error"),
-      emailStatus = col("email_status"),
-      emailSent = col("email_sent"),
-      deliveryStatus = col("delivery_status"),
-      newMatches = col("new_matches"),
-      oldEmailStatus = col("old_email_status"),
-      oldEmailSent = col("old_email_sent"),
-      oldDeliveryStatus = col("old_delivery_status"),
-      oldTotalMatches = col("old_total_matches"))
     val wouldWrite = col("snap_dup") || Rules.passesValidationAndRules(
       eventId = col("event_id"),
       guestId = col("guest_id"),
@@ -112,7 +98,7 @@ object MatchPipeline {
       minMatches = minMatches,
       denyDomains = denyDomains,
       denyPrefixes = denyPrefixes)
-    val blocker = reaches && wouldWrite &&
+    val blocker = reachesDupCheck && wouldWrite &&
       col("guest_email") === lowerEmail
     val w = Window
       .partitionBy(col("event_id"), lowerEmail)
@@ -131,10 +117,8 @@ object MatchPipeline {
     * block, index.js:11-23): `spark.graft.minMatches`,
     * `spark.graft.denyList.{domains,prefixes}`. */
   def decide(envelope: DataFrame): DataFrame = {
-    val s = envelope.sparkSession
-    graft.GraftConf.validate(s) // fail-fast before any record is processed
-    decide(envelope, graft.GraftConf.minMatches(s),
-      graft.GraftConf.denyDomains(s), graft.GraftConf.denyPrefixes(s))
+    val (minMatches, denyDomains, denyPrefixes) = confRules(envelope.sparkSession)
+    decide(envelope, minMatches, denyDomains, denyPrefixes)
   }
 
   /** Decode + dedup join + full rule cascade → decoded frame with
@@ -147,7 +131,51 @@ object MatchPipeline {
       denyDomains: Seq[String] = Rules.DefaultDenyDomains,
       denyPrefixes: Seq[String] = Rules.DefaultDenyPrefixes): DataFrame = {
     val d = withDupHit(decoded(envelope), minMatches, denyDomains, denyPrefixes)
-    val decision = Rules.decisionStruct(
+    val out = d
+      .withColumn("decision",
+        decision(col("dup_hit"), minMatches, denyDomains, denyPrefixes))
+      .withColumn("action", col("decision").getField("action"))
+      .withColumn("reason", col("decision").getField("reason"))
+      .drop("decision")
+    // ENABLE_DEBUG_LOGGING dump sites (index.js:38-40, 223-225): at
+    // Spark scale the useful dump is the decided frame's schema +
+    // optimized plan, not row payloads — zero jobs, driver-side only.
+    graft.GraftLog.debugPlan("decide", out)
+    out
+  }
+
+  /** The cascade's thresholds from the session conf — (minMatches,
+    * denyDomains, denyPrefixes) — read after the fail-fast check of
+    * every `spark.graft.*` conf, so a malformed deployment stops before
+    * any record is processed. */
+  def confRules(spark: SparkSession): (Int, Seq[String], Seq[String]) = {
+    graft.GraftConf.validate(spark)
+    (graft.GraftConf.minMatches(spark),
+      graft.GraftConf.denyDomains(spark), graft.GraftConf.denyPrefixes(spark))
+  }
+
+  /** Whether a record reaches the O7 dedup lookup (Rules.reachesDupCheck)
+    * over the decoded column names. */
+  def reachesDupCheck: Column = Rules.reachesDupCheck(
+    eventName = col("event_name"),
+    hasNewImage = col("has_new_image"),
+    parseError = col("parse_error"),
+    emailStatus = col("email_status"),
+    emailSent = col("email_sent"),
+    deliveryStatus = col("delivery_status"),
+    newMatches = col("new_matches"),
+    oldEmailStatus = col("old_email_status"),
+    oldEmailSent = col("old_email_sent"),
+    oldDeliveryStatus = col("old_delivery_status"),
+    oldTotalMatches = col("old_total_matches"))
+
+  /** The full rule cascade (Rules.decisionStruct) over the decoded
+    * column names, `dupHit` standing for the O7 verdict. The batch
+    * pipeline passes its dedup join's hit; the stream passes false and
+    * lets its state machine find the duplicates. */
+  def decision(dupHit: Column, minMatches: Int,
+      denyDomains: Seq[String], denyPrefixes: Seq[String]): Column =
+    Rules.decisionStruct(
       eventName = col("event_name"),
       hasNewImage = col("has_new_image"),
       parseError = col("parse_error"),
@@ -164,20 +192,10 @@ object MatchPipeline {
       oldEmailSent = col("old_email_sent"),
       oldDeliveryStatus = col("old_delivery_status"),
       oldTotalMatches = col("old_total_matches"),
-      dupHit = col("dup_hit"),
+      dupHit = dupHit,
       minMatches = minMatches,
       denyDomains = denyDomains,
       denyPrefixes = denyPrefixes)
-    val out = d.withColumn("decision", decision)
-      .withColumn("action", col("decision").getField("action"))
-      .withColumn("reason", col("decision").getField("reason"))
-      .drop("decision")
-    // ENABLE_DEBUG_LOGGING dump sites (index.js:38-40, 223-225): at
-    // Spark scale the useful dump is the decided frame's schema +
-    // optimized plan, not row payloads — zero jobs, driver-side only.
-    graft.GraftLog.debugPlan("decide", out)
-    out
-  }
 
   /** Per-record outcome — the reference's handler result rows
     * (index.js:63-68, 148-315). Takes a decide()d frame so callers can
@@ -215,20 +233,9 @@ object MatchPipeline {
     decided.filter(col("action") === "error")
       .select(col("record_id").as("item_identifier"))
 
-  /** O15 — the per-batch metrics record (index.js:42-49). A single
-    * partial+final aggregation; no keyed shuffle. Error records do not
-    * count as processed (index.js:61-71). */
+  /** O15 — the per-batch metrics record (index.js:42-49): the
+    * [[Observability.Counters]] as a single partial+final aggregation;
+    * no keyed shuffle. */
   def metrics(decided: DataFrame): DataFrame =
-    decided.agg(
-      count(lit(1)).as("total_records"),
-      sum(when(col("action") =!= "error", 1L).otherwise(0L))
-        .as("processed_records"),
-      sum(when(col("action") === "email_triggered", 1L).otherwise(0L))
-        .as("emails_triggered"),
-      sum(when(col("action") === "skipped", 1L).otherwise(0L))
-        .as("skipped_records"),
-      sum(when(col("action") === "duplicate_prevented", 1L).otherwise(0L))
-        .as("duplicates_prevented"),
-      sum(when(col("action") === "error", 1L).otherwise(0L))
-        .as("error_records"))
+    decided.agg(Observability.Counters.head, Observability.Counters.tail: _*)
 }

@@ -1,17 +1,18 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.JobLabel
 
-/** O14 + O8/O11 as an effectively-once batch sink (SURVEY.md §7.4.2):
-  * email jobs appended idempotently by dedup_id, and the status table
-  * merged last-write-wins by (event_id, guest_id).
+/** O14 as an effectively-once batch sink (SURVEY.md §7.4.2): email jobs
+  * appended idempotently by dedup_id, plus the commit log that makes a
+  * replayed micro-batch free. The status table (O8/O11) is not kept
+  * here: it lives behind the conditional-write store
+  * [[graft.sink.StatusStore]], and graft.streaming.StreamPipeline's
+  * `casSinkTo` drives both.
   *
   * The job append anti-joins the incoming batch against the keys already
   * in the sink, so replaying a batch (checkpoint recovery, at-least-once
@@ -19,10 +20,8 @@ import graft.JobLabel
   * reference's advisory dedupId (index.js:572, advisory only because
   * standard SQS doesn't enforce it).
   *
-  * Storage is plain parquet with a tmp-dir swap for the merge; a
-  * transactional table format (Delta/Iceberg) replaces the swap with a
-  * real MERGE at production scale — the dataflow (anti-join append +
-  * keyed merge) is identical.
+  * Storage is plain parquet appends; a transactional table format
+  * (Delta/Iceberg) gives the same anti-join append at production scale.
   */
 object EmailJobSink {
 
@@ -52,48 +51,6 @@ object EmailJobSink {
   }
 
   private val DedupIdSchema = StructType(Seq(StructField("dedup_id", StringType)))
-
-  /** Last-write-wins merge of status updates into the status table,
-    * keyed (event_id, guest_id); `seq` breaks ties within the batch.
-    *
-    * The merged table is written to `<statusDir>.tmp`, then swapped in
-    * by two renames (the old table to `<statusDir>.old`, the new one
-    * into place) before the old one is deleted. A crash between the
-    * renames leaves no table but a complete tmp; the next merge
-    * finishes the swap before it reads, so no earlier row is lost. */
-  def mergeStatus(updates: DataFrame, statusDir: String): Unit = {
-    val spark = updates.sparkSession
-    val target = Paths.get(statusDir)
-    val tmp = Paths.get(statusDir + ".tmp")
-    val old = Paths.get(statusDir + ".old")
-    if (!Files.exists(target) && Files.exists(tmp.resolve("_SUCCESS")))
-      Files.move(tmp, target)
-    deleteRecursively(old)
-    val incoming = updates.select(
-      col("event_id"), col("guest_id"),
-      col("new_delivery_status").as("delivery_status"))
-    val merged = graft.DirIO.readParquet(spark, statusDir) match {
-      case Some(cur) =>
-        // incoming wins over current on key collision
-        cur.join(incoming.select("event_id", "guest_id"),
-            Seq("event_id", "guest_id"), "left_anti")
-          .unionByName(incoming)
-      case None => incoming
-    }
-    JobLabel(spark, "status:write") {
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    }
-    if (Files.exists(target)) Files.move(target, old)
-    Files.move(tmp, target)
-    deleteRecursively(old)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 
   /** Batch-commit log: the exactly-once foreachBatch pattern. A batch id
     * is committed by creating a marker file AFTER its writes complete;

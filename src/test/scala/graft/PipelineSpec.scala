@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{MatchFixture, MatchPipeline}
+import graft.streaming.StreamPipeline
 
 /** End-to-end batch pipeline behavior on a tiny controlled fixture:
   * each outcome path, the intra-batch dedup chain, and the error path. */
@@ -18,6 +19,13 @@ class PipelineSpec extends SparkSpec {
   private def decidedFor(ks: Long*): Map[String, (String, String)] =
     MatchPipeline.decide(MatchFixture.envelope(cust(ks: _*)))
       .select("record_id", "action", "reason").collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+
+  /** The same map from the stream's keyed state machine, run in batch
+    * mode. */
+  private def streamedFor(ks: Long*): Map[String, (String, String)] =
+    StreamPipeline.outcomes(MatchFixture.envelope(cust(ks: _*)))
+      .select("recordId", "action", "reason").collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
 
   test("REMOVE events are skipped as irrelevant (k%10==9)") {
@@ -56,8 +64,11 @@ class PipelineSpec extends SparkSpec {
       assert(d("r18")._1 == "skipped")
       assert(d("r18")._2.startsWith("Insufficient matches: "))
       assert(d("r18")._2.endsWith(" < 999"))
+      // the stream reads the same conf, so it skips the record alike
+      assert(streamedFor(18)("r18") == d("r18"))
     } finally spark.conf.unset(GraftConf.MinMatchesKey)
     assert(decidedFor(18)("r18")._1 == "email_triggered") // default restored
+    assert(streamedFor(18)("r18")._1 == "email_triggered")
   }
 
   test("spark.graft.denyList.domains extends the deny list at runtime") {
@@ -65,6 +76,7 @@ class PipelineSpec extends SparkSpec {
     try {
       val d = decidedFor(18)
       assert(d("r18") == ("skipped", "Test or invalid email address"))
+      assert(streamedFor(18)("r18") == d("r18"))
     } finally spark.conf.unset(GraftConf.DenyDomainsKey)
   }
 

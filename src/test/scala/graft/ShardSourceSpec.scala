@@ -200,7 +200,7 @@ class ShardSourceSpec extends SparkSpec {
       val envelope = raw.select(
         from_json(col("value"), Model.envelopeSchema).as("r")).select("r.*")
       // the durable foreachBatch delivery path (memory sink can't recover)
-      StreamPipeline.startWithSink(envelope, s"$base/ck",
+      StreamPipeline.casSinkTo(StreamPipeline.outcomes(envelope), s"$base/ck",
         s"$base/jobs", s"$base/status")
     }
     // run 1: k=28 triggers its email key, then the process "dies"
@@ -218,7 +218,7 @@ class ShardSourceSpec extends SparkSpec {
         .map(_.getAs[String]("record_id")).toSet
       // 28's job from run 1 not duplicated; 1128 blocked by RESTORED state
       assert(jobs == Set("r28", "r18"), s"jobs: $jobs")
-      val status = spark.read.parquet(s"$base/status").collect()
+      val status = graft.sink.StatusStore.read(spark, s"$base/status").get.collect()
         .map(r => r.getAs[String]("guest_id") ->
           r.getAs[String]("delivery_status")).toMap
       assert(status("g28") == "processing")

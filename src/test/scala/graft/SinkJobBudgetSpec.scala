@@ -13,7 +13,7 @@ import graft.pipeline.MatchFixture
 import graft.sink.StatusStore
 import graft.streaming.{StreamOutcome, StreamPipeline}
 
-/** Pins the job budget of the stream sinks per micro-batch.
+/** Pins the job budget of the stream sink (`casSinkTo`) per micro-batch.
   *
   * Every sink batch starts with one counting job; a batch whose counts
   * say there is nothing to write stops there. A regression that puts
@@ -134,43 +134,6 @@ class SinkJobBudgetSpec extends SparkSpec {
       assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
         s"zero-row batch $b ran ${perBatch.getOrElse(b, Nil)}")
     }
-  }
-
-  test("plain sink: an empty or all-skipped batch runs one job and writes nothing") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // keys that are `skipped` on their own: no dedup state involved
-    val skippedKeys = StreamPipeline.outcomes(MatchFixture.envelope(
-        (1L to 60L).map(k => (k, s"Customer#$k")).toDF("c_custkey", "c_name")))
-      .filter($"action" === "skipped").select($"recordId").as[String].collect()
-      .map(_.stripPrefix("r").toLong).sorted.take(3)
-    assert(skippedKeys.length == 3)
-    val base = Files.createTempDirectory("graft-budget-plain").toString
-    val statusDir = s"$base/status"
-    val jobsDir = s"$base/jobs"
-    val input = MemoryStream[(Long, String)]
-    val envelope = MatchFixture.envelope(input.toDF().toDF("c_custkey", "c_name"))
-    var afterTrigger = (Set.empty[String], Set.empty[String])
-    val perBatch = jobsPerBatch(StreamPipeline.startWithSink(envelope,
-        s"$base/ck", jobsDir, statusDir)) { q =>
-      input.addData((28L, "Customer#28"))                       // batch 0
-      q.processAllAvailable()
-      afterTrigger = (dataFiles(statusDir), dataFiles(jobsDir))
-      input.addData(Seq.empty[(Long, String)])                  // batch 1
-      q.processAllAvailable()
-      input.addData(skippedKeys.map(k => (k, s"Customer#$k")).toSeq) // batch 2
-      q.processAllAvailable()
-    }
-    assert(afterTrigger._1.nonEmpty && afterTrigger._2.nonEmpty)
-    Seq(1L, 2L).foreach { b =>
-      assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
-        s"batch $b ran ${perBatch.getOrElse(b, Nil)}")
-    }
-    // the status table was not rewritten and no job file landed
-    assert(dataFiles(statusDir) == afterTrigger._1)
-    assert(dataFiles(jobsDir) == afterTrigger._2)
-    // the commit log is compacted to its high-water mark
-    assert(DirIO.listNames(Paths.get(jobsDir, "_txn")) == List("hwm"))
   }
 
   test("JobLabel nests inside an outer step and restores the description") {

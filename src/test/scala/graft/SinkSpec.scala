@@ -8,8 +8,8 @@ import graft.pipeline.{MatchFixture, MatchPipeline}
 import graft.sink.EmailJobSink
 import graft.streaming.StreamPipeline
 
-/** Idempotent sink behavior: replay cannot double-send; status merge is
-  * last-write-wins. */
+/** Idempotent sink behavior: replay cannot double-send; the status table
+  * moves only by conditional writes. */
 class SinkSpec extends SparkSpec {
 
   private def decidedFor(ks: Long*) = {
@@ -29,39 +29,6 @@ class SinkSpec extends SparkSpec {
     val jobs2 = MatchPipeline.emailJobs(decidedFor(32L, 42L))
     assert(EmailJobSink.appendJobs(jobs2, dir) == 1L)
     assert(spark.read.parquet(dir).select("dedup_id").distinct().count() == 3L)
-  }
-
-  test("mergeStatus is last-write-wins by (event_id, guest_id)") {
-    val dir = Files.createTempDirectory("graft-status").toString + "/status"
-    EmailJobSink.mergeStatus(
-      MatchPipeline.statusUpdates(decidedFor(18L)), dir)
-    val first = spark.read.parquet(dir).collect()
-    assert(first.length == 1 &&
-      first.head.getAs[String]("delivery_status") == "processing")
-    // same key reappears as a duplicate in a later batch → delivered wins
-    import spark.implicits._
-    val manual = Seq(("ev18", "g18", "delivered"))
-      .toDF("event_id", "guest_id", "new_delivery_status")
-    EmailJobSink.mergeStatus(manual, dir)
-    val after = spark.read.parquet(dir).collect()
-    assert(after.length == 1 &&
-      after.head.getAs[String]("delivery_status") == "delivered")
-  }
-
-  test("mergeStatus finishes a swap a crash interrupted instead of losing the table") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-status-crash").toString + "/status"
-    EmailJobSink.mergeStatus(Seq(("ev1", "g1", "processing"))
-      .toDF("event_id", "guest_id", "new_delivery_status"), dir)
-    // the crash: the old table is gone, the complete new one is still
-    // at its tmp name
-    Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(dir + ".tmp"))
-    EmailJobSink.mergeStatus(Seq(("ev2", "g2", "delivered"))
-      .toDF("event_id", "guest_id", "new_delivery_status"), dir)
-    val rows = spark.read.parquet(dir).collect()
-      .map(r => (r.getAs[String]("event_id"), r.getAs[String]("delivery_status"))).sorted
-    assert(rows.toSeq == Seq(("ev1", "processing"), ("ev2", "delivered")))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".tmp")))
   }
 
   test("stream sink compacts its commit log and still skips a committed batch") {
@@ -209,7 +176,7 @@ class SinkSpec extends SparkSpec {
     val input =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val envelope = MatchFixture.envelope(input.toDF().toDF("c_custkey", "c_name"))
-    val q1 = StreamPipeline.startWithCasSink(envelope, s"$base/ck",
+    val q1 = StreamPipeline.casSinkTo(StreamPipeline.outcomes(envelope), s"$base/ck",
       s"$base/jobs", s"$base/status", failSend = () => fail.get())
     input.addData((28L, "Customer#28"))
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -228,7 +195,7 @@ class SinkSpec extends SparkSpec {
     // restart: offsets were never committed, the batch replays, the CAS
     // re-acquires the reverted key, the send succeeds exactly once
     fail.set(false)
-    val q2 = StreamPipeline.startWithCasSink(envelope, s"$base/ck",
+    val q2 = StreamPipeline.casSinkTo(StreamPipeline.outcomes(envelope), s"$base/ck",
       s"$base/jobs", s"$base/status")
     try {
       q2.processAllAvailable()
@@ -246,7 +213,7 @@ class SinkSpec extends SparkSpec {
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val envelope = MatchFixture.envelope(
       input.toDF().toDF("c_custkey", "c_name"))
-    val q = StreamPipeline.startWithSink(envelope, s"$base/ck",
+    val q = StreamPipeline.casSinkTo(StreamPipeline.outcomes(envelope), s"$base/ck",
       s"$base/jobs", s"$base/status")
     try {
       input.addData((28L, "Customer#28"), (578L, "Customer#578"))
@@ -257,7 +224,7 @@ class SinkSpec extends SparkSpec {
       val jobs = spark.read.parquet(s"$base/jobs")
       assert(jobs.count() == 1L)
       assert(jobs.head.getAs[String]("dedup_id").startsWith("ev28-"))
-      val status = spark.read.parquet(s"$base/status").collect()
+      val status = graft.sink.StatusStore.read(spark, s"$base/status").get.collect()
       // g28 processing (triggered); g578 & g1128 delivered (duplicates)
       val byGuest = status.map(r => r.getAs[String]("guest_id") ->
         r.getAs[String]("delivery_status")).toMap

@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.pipeline.MatchFixture
 import graft.streaming.StreamPipeline
@@ -19,6 +21,16 @@ class StreamPipelineSpec extends SparkSpec {
       ks.map(k => (k, s"Customer#$k")).toDF("c_custkey", "c_name"))
   }
 
+  /** Runs `out` into the memory sink `name`, checkpointed in a fresh
+    * temp dir. */
+  private def toMemory(out: Dataset[_], name: String): StreamingQuery =
+    out.writeStream
+      .outputMode(OutputMode.Append)
+      .format("memory").queryName(name)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-ck").toString)
+      .start()
+
   test("state machine dedups within and across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -26,8 +38,7 @@ class StreamPipelineSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val envelope = MatchFixture.envelope(
       input.toDF().toDF("c_custkey", "c_name"))
-    val checkpoint = Files.createTempDirectory("graft-ck").toString
-    val q = StreamPipeline.start(envelope, "outcomes_test", checkpoint)
+    val q = toMemory(StreamPipeline.outcomes(envelope), "outcomes_test")
     try {
       // batch 0: k=28 triggers; k=578 same (event, email) → in-batch dup
       input.addData((28L, "Customer#28"), (578L, "Customer#578"))
@@ -51,8 +62,7 @@ class StreamPipelineSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val envelope = MatchFixture.envelope(
       input.toDF().toDF("c_custkey", "c_name"))
-    val checkpoint = Files.createTempDirectory("graft-ck").toString
-    val q = StreamPipeline.start(envelope, "outcomes_test2", checkpoint)
+    val q = toMemory(StreamPipeline.outcomes(envelope), "outcomes_test2")
     try {
       input.addData((19L, "Customer#19"), (20L, "Customer#20"),
         (17L, "Customer#17"))
@@ -73,13 +83,8 @@ class StreamPipelineSpec extends SparkSpec {
     val envelope = MatchFixture.envelope(
       input.toDF().toDF("c_custkey", "c_name"))
     // synthetic event time = seq = customer key, 1s per unit; ttl 60s
-    val q = graft.streaming.StreamPipeline
-      .outcomesWithTtl(envelope, ttlMs = 60000L).writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("ttl_test")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ck").toString)
-      .start()
+    val q = toMemory(
+      StreamPipeline.outcomesWithTtl(envelope, ttlMs = 60000L), "ttl_test")
     try {
       // batch 0: k=28 triggers; its timer is set to evt(28s) + 60s = 88s
       input.addData((28L, "Customer#28"))
@@ -115,14 +120,8 @@ class StreamPipelineSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val envelope = MatchFixture.envelope(
       input.toDF().toDF("c_custkey", "c_name"))
-    val q = graft.metrics.Observability.observed(
-      StreamPipeline.outcomes(envelope).toDF(), "stream_metrics")
-      .writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .format("memory").queryName("metrics_test")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-ck").toString)
-      .start()
+    val q = toMemory(graft.metrics.Observability.observed(
+      StreamPipeline.outcomes(envelope).toDF(), "stream_metrics"), "metrics_test")
     try {
       // 28 triggers, 19 skips, 17 errors → one observed row for the batch
       input.addData((28L, "Customer#28"), (19L, "Customer#19"),
@@ -140,131 +139,6 @@ class StreamPipelineSpec extends SparkSpec {
     } finally {
       q.stop()
       spark.streams.removeListener(listener)
-    }
-  }
-
-  /** Run a body with the RocksDB state store provider set (required by
-    * transformWithState), restoring the previous provider after. */
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("transformWithState CCAS matches fMGWS and the batch pipeline (in-batch + cross-batch dedup)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val input = MemoryStream[(Long, String)]
-      val envelope = MatchFixture.envelope(
-        input.toDF().toDF("c_custkey", "c_name"))
-      val q = StreamPipeline.outcomesTws(envelope).writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("memory").queryName("tws_outcomes")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-ck").toString)
-        .start()
-      try {
-        // batch 0: 28 triggers; 578 same key → in-batch dup; 17/19
-        // stateless error/skip pass through
-        input.addData((28L, "Customer#28"), (578L, "Customer#578"),
-          (17L, "Customer#17"), (19L, "Customer#19"))
-        q.processAllAvailable()
-        // batch 1: 1128 ≡ 28 (mod 550) → cross-batch dup via state
-        input.addData((1128L, "Customer#1128"))
-        q.processAllAvailable()
-        val tws = spark.table("tws_outcomes")
-          .select("recordId", "action").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-        // fMGWS twin over the same records, one batch-mode pass
-        val fmgws = StreamPipeline.outcomes(
-          envelopeFor(Seq(28L, 578L, 17L, 19L, 1128L)))
-          .select(col("recordId"), col("action")).collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-        assert(tws == fmgws)
-        // batch-pipeline pin (the reference's decision table)
-        assert(tws("r28") == "email_triggered")
-        assert(tws("r578") == "duplicate_prevented")
-        assert(tws("r1128") == "duplicate_prevented")
-        assert(tws("r17") == "error")
-        assert(tws("r19") == "skipped")
-      } finally q.stop()
-    }
-  }
-
-  test("transformWithState CCAS state survives a checkpoint restart") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val checkpoint = Files.createTempDirectory("graft-ck").toString
-      val input = MemoryStream[(Long, String)]
-      val envelope = MatchFixture.envelope(
-        input.toDF().toDF("c_custkey", "c_name"))
-      // memory sinks can't recover from a checkpoint; foreachBatch can
-      val collected = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-      def startQuery() = StreamPipeline.outcomesTws(envelope).writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.streaming.StreamOutcome], _: Long) =>
-            batch.collect().foreach(o => collected.add(o.recordId -> o.action))
-            ()
-        }
-        .start()
-      val q1 = startQuery()
-      try {
-        input.addData((28L, "Customer#28"))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      // restart from the same checkpoint: the triggered flag for 28's
-      // key must come back from the store, so the same email key dedups
-      val q2 = startQuery()
-      try {
-        input.addData((1128L, "Customer#1128")) // ≡ 28 mod 550
-        q2.processAllAvailable()
-        val out = collected.toArray(Array.empty[(String, String)]).toMap
-        assert(out("r28") == "email_triggered")
-        assert(out("r1128") == "duplicate_prevented")
-      } finally q2.stop()
-    }
-  }
-
-  test("transformWithState event-time TTL evicts dedup state like the fMGWS form") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val input = MemoryStream[(Long, String)]
-      val envelope = MatchFixture.envelope(
-        input.toDF().toDF("c_custkey", "c_name"))
-      val q = StreamPipeline.outcomesTwsTtl(envelope, ttlMs = 60000L)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .format("memory").queryName("tws_ttl")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-ck").toString)
-        .start()
-      try {
-        // same schedule as the fMGWS TTL test: trigger, advance the
-        // watermark past the timer, let it fire, then re-trigger
-        input.addData((28L, "Customer#28"))
-        q.processAllAvailable()
-        input.addData((2000L, "Customer#2000"))
-        q.processAllAvailable()
-        input.addData((2001L, "Customer#2001"))
-        q.processAllAvailable()
-        input.addData((3878L, "Customer#3878")) // ≡ 28 mod 550
-        q.processAllAvailable()
-        val out = spark.table("tws_ttl")
-          .select("recordId", "action").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-        assert(out("r28") == "email_triggered")
-        assert(out("r3878") == "email_triggered")
-      } finally q.stop()
     }
   }
 

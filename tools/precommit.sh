@@ -2,7 +2,15 @@
 # Suite-green guard (round-10 process fix for the r9 stale-spec ship):
 # refuse to commit if test sources don't compile. Full `sbt test` is the
 # bar for claims; this catches the cheap-and-common failure (a main-only
-# refactor that strands a spec) in ~30 s. Skip with GRAFT_SKIP_PRECOMMIT=1.
-[ -n "$GRAFT_SKIP_PRECOMMIT" ] && exit 0
+# refactor that strands a spec) in ~30 s. Skip the compile with
+# GRAFT_SKIP_PRECOMMIT=1.
 cd "$(git rev-parse --show-toplevel)"
+# A literal NUL byte makes git treat a source file as binary, so its
+# diffs show no lines; write such characters as "\u0000" instead.
+if nul=$(git grep -l -P '\x00' -- '*.scala'); then
+  echo "NUL bytes in source files (write \"\\u0000\" instead):" >&2
+  echo "$nul" >&2
+  exit 1
+fi
+[ -n "$GRAFT_SKIP_PRECOMMIT" ] && exit 0
 exec sbt -batch Test/compile
