@@ -3,60 +3,50 @@ package graft.sink
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.JobLabel
 
-/** O14 as an effectively-once batch sink (SURVEY.md §7.4.2): email jobs
-  * appended idempotently by dedup_id, plus the commit log that makes a
-  * replayed micro-batch free. The status table (O8/O11) is not kept
-  * here: it lives behind the conditional-write store
-  * [[graft.sink.StatusStore]], and graft.streaming.StreamPipeline's
-  * `casSinkTo` drives both.
+/** O14 as an effectively-once batch sink (SURVEY.md §7.4.2): each
+  * micro-batch's email jobs written as its own partition of the jobs
+  * table, plus the commit log that makes a replayed micro-batch free.
+  * The status table (O8/O11) is not kept here: it lives behind the
+  * conditional-write store [[graft.sink.StatusStore]], and
+  * graft.streaming.StreamPipeline's `casSinkTo` drives both.
   *
-  * The job append anti-joins the incoming batch against the keys already
-  * in the sink, so replaying a batch (checkpoint recovery, at-least-once
-  * upstream) cannot double-send — the engine-side realization of the
-  * reference's advisory dedupId (index.js:572, advisory only because
-  * standard SQS doesn't enforce it).
+  * A batch's write needs no read of the jobs already written. A job
+  * reaches the write only when the trigger CAS moved its status key
+  * 'pending' → 'processing', and every later CAS on that key rejects,
+  * so no later batch writes a job for it again; a replay of a
+  * committed batch is skipped by [[TxnLog]]; and a replay of a batch
+  * whose write failed overwrites that batch's own partition. (A dedup
+  * id is not a key here: an email key whose TTL expired triggers again
+  * under a new status key, and its job is written, as the TTL means.) This
+  * is the engine-side realization of the reference's advisory dedupId
+  * (index.js:572, advisory only because standard SQS doesn't enforce
+  * it).
   *
-  * Storage is plain parquet appends; a transactional table format
-  * (Delta/Iceberg) gives the same anti-join append at production scale.
+  * Storage is one parquet directory per batch, `batch_id=<id>`, which
+  * a reader of the jobs dir sees as a partition column; a
+  * transactional table format (Delta/Iceberg) gives the same
+  * per-batch replace at production scale.
   */
 object EmailJobSink {
 
-  /** Idempotent append: only jobs whose dedup_id is not yet in the sink
-    * are written. Returns the number of newly written rows.
-    *
-    * Two jobs at most: the count (`append:dedup`) materializes the
-    * anti-joined frame into the cache, and the write (`append:write`)
-    * reads it from there, so the anti-join runs once. The jobs dir is
-    * read with the one column the anti-join needs, so no
-    * schema-inference job runs. The write stays conditional: an empty
-    * Append would still create the directory. */
-  def appendJobs(jobs: DataFrame, jobsDir: String): Long = {
-    val spark = jobs.sparkSession
-    val fresh = (graft.DirIO.readParquet(spark, jobsDir, Some(DedupIdSchema)) match {
-      case Some(existing) =>
-        jobs.join(existing.distinct(), Seq("dedup_id"), "left_anti")
-      case None => jobs
-    }).cache()
-    try {
-      val n = JobLabel(spark, "append:dedup")(fresh.count())
-      if (n > 0) JobLabel(spark, "append:write") {
-        fresh.write.mode(SaveMode.Append).parquet(jobsDir)
-      }
-      n
-    } finally fresh.unpersist()
-  }
-
-  private val DedupIdSchema = StructType(Seq(StructField("dedup_id", StringType)))
+  /** Writes the jobs of micro-batch `batchId` as the partition
+    * `batch_id=<batchId>` under `jobsDir`, replacing whatever an
+    * earlier attempt of the same batch left there. One job, labelled
+    * `jobs:write`; the caller writes only a non-empty batch, since an
+    * empty write would still create the partition. */
+  def writeBatch(jobs: DataFrame, jobsDir: String, batchId: Long): Unit =
+    JobLabel(jobs.sparkSession, "jobs:write") {
+      jobs.write.mode(SaveMode.Overwrite).parquet(s"$jobsDir/batch_id=$batchId")
+    }
 
   /** Batch-commit log: the exactly-once foreachBatch pattern. A batch id
     * is committed by creating a marker file AFTER its writes complete;
     * `runOnce` skips batches whose marker already exists, so a replay
     * after a crash between sink-write and checkpoint-commit does nothing
-    * (the data-level idempotence above already makes the replay safe —
+    * (the per-batch overwrite above already makes the replay safe —
     * the log makes it also FREE, and gives downstream readers a watermark
     * of fully-committed batches). Marker creation is atomic at the
     * filesystem level (create-new); object stores replace this with a

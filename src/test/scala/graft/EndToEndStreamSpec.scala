@@ -80,8 +80,7 @@ class EndToEndStreamSpec extends SparkSpec {
     assert(st2 == Map("g28" -> "processing", "g578" -> "delivered",
       "g1128" -> "delivered", "g1146" -> "processing"))
 
-    // every batch id committed (the watermark machinery appends empty
-    // batches — also committed), and the restarted query continued the
+    // every batch id committed, and the restarted query continued the
     // id sequence instead of restarting it, which would have been
     // skipped as replays. The sink compacts its commit log after each
     // commit, so the log is one high-water mark at q2's last batch id.
@@ -91,6 +90,61 @@ class EndToEndStreamSpec extends SparkSpec {
     val log = s"$base/jobs/_txn"
     assert(DirIO.listNames(Paths.get(log)) == List("hwm"))
     assert(graft.sink.EmailJobSink.TxnLog.highWaterMark(log) == last2)
+  }
+
+  test("batch split: files of 1, 7 and all records give the same jobs and status table") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    // k and k+550 share an email key. Split into files of 7, the feed is
+    // [17 .. 28] [32 .. 583] [1103]: the duplicates 568 and 578 come a
+    // file after their triggers 18 and 28, and 1103, a null-guest
+    // duplicate of 553 whose status key is (ev3, ""), comes a file after
+    // 553. 582 is given 32's guest, as a second update of one guest row:
+    // its status key (ev32, g32) is triggered by 32 and marked duplicate
+    // by 582 in the same file. Files of 1 put every record in its own
+    // micro-batch; one file puts them all in one.
+    val feed = Seq(17L, 18L, 19L, 20L, 21L, 22L, 28L,
+      32L, 33L, 553L, 568L, 578L, 582L, 583L, 1103L).map(k => (k, s"Customer#$k"))
+    def envelope(customer: org.apache.spark.sql.DataFrame) =
+      MatchFixture.envelope(customer.toDF("c_custkey", "c_name"))
+        .withColumn("dynamodb", when(col("dynamodb.SequenceNumber") === "582",
+          col("dynamodb").withField("NewImage.guestId", struct(lit("g32").as("S"))))
+          .otherwise(col("dynamodb")))
+    val twin = StreamPipeline.outcomes(envelope(feed.toDF()))
+      .select("recordId", "eventId", "guestId", "action").collect()
+      .map(r => r.getString(0) -> ((r.getString(1), r.getString(2), r.getString(3)))).toMap
+    assert(twin("r32") == (("ev32", "g32", "email_triggered")))
+    assert(twin("r582") == (("ev32", "g32", "duplicate_prevented")))
+    assert(twin("r28") == (("ev28", "g28", "email_triggered")))
+    assert(twin("r578") == (("ev28", "g578", "duplicate_prevented")))
+    assert(twin("r1103") == (("ev3", "", "duplicate_prevented")))
+
+    def run(perFile: Int): (Set[(String, String)], Set[(String, String, String, String)]) = {
+      val base = Files.createTempDirectory(s"graft-split-$perFile").toString
+      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+      val q = StreamPipeline.casSinkTo(
+        StreamPipeline.outcomesWithTtl(envelope(input.toDF()), ttlMs = 10_000_000_000L),
+        s"$base/ck", s"$base/jobs", s"$base/status")
+      try feed.grouped(perFile).foreach { file =>
+        input.addData(file: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val jobs = spark.read.parquet(s"$base/jobs").select("record_id", "dedup_id")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val status = graft.sink.StatusStore.read(spark, s"$base/status").get.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
+      (jobs, status)
+    }
+    val (jobs, status) = run(feed.size)
+    assert(jobs.map(_._1) == twin.collect { case (r, (_, _, "email_triggered")) => r }.toSet)
+    assert(status.contains(("ev32", "g32", "delivered", null)))
+    assert(status.contains(("ev28", "g28", "processing", null)))
+    assert(status.contains(("ev3", "", "delivered", null)))
+    Seq(7, 1).foreach { n =>
+      val (splitJobs, splitStatus) = run(n)
+      assert(splitJobs == jobs, s"files of $n: jobs differ from one file")
+      assert(splitStatus == status, s"files of $n: status differs from one file")
+    }
   }
 
   test("a query started on an empty shard directory writes the jobs of the first file landed") {

@@ -97,10 +97,10 @@ class SinkJobBudgetSpec extends SparkSpec {
       q.processAllAvailable()
     }
     assert(afterTrigger._1 == 1L && afterTrigger._2.nonEmpty)
-    // the trigger-only batch: count, the trigger CAS (verdicts + write)
-    // and the append (dedup count + write)
+    // the trigger-only batch: count, the status commit (verdicts +
+    // snapshot write) and the job write
     val trig = perBatch.getOrElse(0L, Nil)
-    assert(trig.size <= 5, s"trigger-only batch ran ${trig.size} jobs: $trig")
+    assert(trig.size <= 4, s"trigger-only batch ran ${trig.size} jobs: $trig")
     assert(trig.headOption.contains("sink:count"), s"first job: $trig")
     Seq(1L, 2L).foreach { b =>
       assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
@@ -110,29 +110,57 @@ class SinkJobBudgetSpec extends SparkSpec {
     assert(dataFiles(jobsDir) == afterTrigger._2)
   }
 
-  test("CAS sink: the zero-row batch the TTL watermark adds runs one job") {
+  test("CAS sink: a batch with triggers and duplicates makes one status commit in at most 4 jobs") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-budget-mixed").toString
+    val statusDir = s"$base/status"
+    val input = MemoryStream[StreamOutcome]
+    val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(input.toDS(),
+        s"$base/ck", s"$base/jobs", statusDir)) { q =>
+      input.addData(out("r1", "ev1", "email_triggered"),
+        out("r2", "ev2", "email_triggered"),
+        out("r3", "ev3", "duplicate_prevented"),
+        out("r4", "ev4", "duplicate_prevented"))
+      q.processAllAvailable()
+    }
+    // count, the status commit (verdicts + snapshot write), the job write
+    val mixed = perBatch.getOrElse(0L, Nil)
+    assert(mixed.size <= 4, s"mixed batch ran ${mixed.size} jobs: $mixed")
+    assert(StatusStore.currentVersion(statusDir) == 1L)
+    val st = StatusStore.read(spark, statusDir).get.collect()
+      .map(r => r.getAs[String]("guest_id") -> r.getAs[String]("delivery_status")).toMap
+    assert(st == Map("gr1" -> "processing", "gr2" -> "processing",
+      "gr3" -> "delivered", "gr4" -> "delivered"))
+    assert(spark.read.parquet(s"$base/jobs").count() == 2L)
+  }
+
+  test("CAS sink: a TTL stream runs exactly one micro-batch per landed input") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val base = Files.createTempDirectory("graft-budget-ttl").toString
     val input = MemoryStream[(Long, String)]
     val envelope = MatchFixture.envelope(input.toDF().toDF("c_custkey", "c_name"))
+    val ks = Seq(28L, 2000L, 3878L)
     var batches = Seq.empty[(Long, Long)]
     val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(
         StreamPipeline.outcomesWithTtl(envelope, ttlMs = 1000L),
         s"$base/ck", s"$base/jobs", s"$base/status")) { q =>
-      input.addData((28L, "Customer#28"))
-      q.processAllAvailable()
+      ks.foreach { k =>
+        input.addData((k, s"Customer#$k"))
+        q.processAllAvailable()
+      }
       batches = q.recentProgress.toSeq.map(p => (p.batchId, p.numInputRows))
     }
-    // batch 0 carries the record; the watermark it moves adds batch 1
-    // with no input, which must not run the sink's writes
-    // (idle progress reports repeat the last batch id with 0 rows)
-    val noData = batches.groupBy(_._1)
-      .collect { case (b, ps) if b >= 0 && ps.forall(_._2 == 0L) => b }
-    assert(noData.nonEmpty, s"no zero-row batch ran: $batches")
-    noData.foreach { b =>
-      assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
-        s"zero-row batch $b ran ${perBatch.getOrElse(b, Nil)}")
+    // each input moves the watermark, and no zero-row batch may follow
+    // it (idle progress reports repeat the last batch id with 0 rows,
+    // so batch ids are counted, not reports)
+    val ran = batches.collect { case (b, _) if b >= 0 => b }.distinct.sorted
+    assert(ran == ks.indices.map(_.toLong), s"batches: $batches")
+    assert(perBatch.keySet == ran.toSet, s"jobs per batch: $perBatch")
+    ran.foreach { b =>
+      assert(batches.exists { case (id, rows) => id == b && rows == 1L },
+        s"batch $b carried no input: $batches")
     }
   }
 

@@ -18,16 +18,18 @@ class SinkSpec extends SparkSpec {
       ks.map(k => (k, s"Customer#$k")).toDF("c_custkey", "c_name")))
   }
 
-  test("appendJobs is idempotent under batch replay") {
+  test("writeBatch replaces a batch's own partition when the batch is written again") {
     val dir = Files.createTempDirectory("graft-jobs").toString + "/jobs"
     val jobs = MatchPipeline.emailJobs(decidedFor(18L, 32L))
-    assert(EmailJobSink.appendJobs(jobs, dir) == 2L)
-    // replay the same batch: nothing new lands
-    assert(EmailJobSink.appendJobs(jobs, dir) == 0L)
+    EmailJobSink.writeBatch(jobs, dir, 0L)
+    // replay the same batch: its partition is replaced, nothing doubles
+    EmailJobSink.writeBatch(jobs, dir, 0L)
     assert(spark.read.parquet(dir).count() == 2L)
-    // a later batch with one overlapping dedup key writes only the new row
-    val jobs2 = MatchPipeline.emailJobs(decidedFor(32L, 42L))
-    assert(EmailJobSink.appendJobs(jobs2, dir) == 1L)
+    // a later batch adds its own partition and leaves batch 0's alone
+    EmailJobSink.writeBatch(MatchPipeline.emailJobs(decidedFor(42L)), dir, 1L)
+    val perBatch = spark.read.parquet(dir).groupBy("batch_id").count().collect()
+      .map(r => r.get(0).toString.toLong -> r.getLong(1)).toMap
+    assert(perBatch == Map(0L -> 2L, 1L -> 1L))
     assert(spark.read.parquet(dir).select("dedup_id").distinct().count() == 3L)
   }
 
@@ -155,9 +157,9 @@ class SinkSpec extends SparkSpec {
     def runBatch(): Long = {
       val cas = StatusStore.casMerge(
         StatusStore.markProcessing(triggered.select("event_id", "guest_id")), statusDir)
-      val winners = triggered.join(cas.appliedKeys,
-        Seq("event_id", "guest_id"), "left_semi")
-      EmailJobSink.appendJobs(winners, jobsDir)
+      if (cas.applied > 0) EmailJobSink.writeBatch(triggered.join(cas.appliedKeys,
+        Seq("event_id", "guest_id"), "left_semi"), jobsDir, 0L)
+      cas.applied
     }
     assert(runBatch() == 1L) // first delivery: job written
     // replay of the same batch by a recovered worker WITHOUT a txn log:
@@ -203,6 +205,36 @@ class SinkSpec extends SparkSpec {
       val st = graft.sink.StatusStore.read(spark, s"$base/status").get.collect()
       assert(st.length == 1 && st.head.getAs[String]("delivery_status") == "processing")
     } finally q2.stop()
+  }
+
+  test("a crash between the trigger CAS and the job write loses the job: the key stays 'processing'") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    import graft.sink.StatusStore
+    import graft.streaming.StreamOutcome
+    val base = Files.createTempDirectory("graft-cas-crash").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamOutcome]
+    val batch = Seq(
+      StreamOutcome("r1", "ev1", "g1", "ev1|a@x.com", "email_triggered", ""),
+      StreamOutcome("r2", "ev2", "g2", "ev2|b@x.com", "email_triggered", ""))
+    // the crashed attempt of batch 0 committed its trigger CAS and died
+    // before the job write: no job, no commit-log entry, no offset commit
+    StatusStore.casMerge(StatusStore.markProcessing(
+      batch.map(o => (o.eventId, o.guestId)).toDF("event_id", "guest_id")), s"$base/status")
+    // the replay of batch 0: its CAS finds the batch's own keys
+    // 'processing' and rejects them, so neither job is written
+    val q = StreamPipeline.casSinkTo(input.toDS(), s"$base/ck",
+      s"$base/jobs", s"$base/status")
+    try {
+      input.addData(batch: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(graft.DirIO.readParquet(spark, s"$base/jobs").forall(_.count() == 0L),
+      "a job was written for a key the crashed attempt already moved")
+    val st = StatusStore.read(spark, s"$base/status").get.collect()
+      .map(r => r.getAs[String]("guest_id") -> r.getAs[String]("delivery_status")).toMap
+    assert(st == Map("g1" -> "processing", "g2" -> "processing"))
+    assert(StatusStore.currentVersion(s"$base/status") == 1L)
   }
 
   test("streaming foreachBatch sink: triggered jobs land once, status merges") {

@@ -109,6 +109,46 @@ class StreamPipelineSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("TTL outcomes do not depend on no-data micro-batches; casSinkTo leaves the setting as it was") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val was = spark.conf.getOption(key)
+    try {
+      for (noData <- Seq(true, false); spacer <- Seq(false, true)) {
+        val input = MemoryStream[(Long, String)]
+        val envelope = MatchFixture.envelope(
+          input.toDF().toDF("c_custkey", "c_name"))
+        val name = s"ttl_nodata_${noData}_spacer_$spacer"
+        spark.conf.set(key, noData.toString)
+        val q = toMemory(
+          StreamPipeline.outcomesWithTtl(envelope, ttlMs = 60000L), name)
+        try {
+          // 28 triggers (expiry 28s + 60s); 2000 moves the watermark to
+          // 2000s; the spacer is a batch in which 28's timeout fires;
+          // 3878 has 28's email key and arrives after the expiry
+          (Seq(28L, 2000L) ++ (if (spacer) Seq(2001L) else Nil) :+ 3878L).foreach { k =>
+            input.addData((k, s"Customer#$k"))
+            q.processAllAvailable()
+          }
+          val out = spark.table(name)
+            .select("recordId", "action").collect()
+            .map(r => r.getString(0) -> r.getString(1)).toMap
+          assert(out("r28") == "email_triggered")
+          assert(out("r3878") == "email_triggered",
+            s"noDataMicroBatches=$noData spacer=$spacer: r3878 ${out("r3878")}")
+        } finally q.stop()
+      }
+      // the CDC sink turns no-data batches off for its own query only
+      spark.conf.set(key, "true")
+      val input = MemoryStream[graft.streaming.StreamOutcome]
+      val base = Files.createTempDirectory("graft-nodata-conf").toString
+      StreamPipeline.casSinkTo(input.toDS(), s"$base/ck", s"$base/jobs",
+        s"$base/status").stop()
+      assert(spark.conf.get(key) == "true")
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("streaming metrics: observed counters arrive once per micro-batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
