@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
@@ -8,12 +9,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** The one place the directory-stream-hygiene idiom lives: every
-  * `Files.list` MUST be closed (the javadoc requires try-with-
-  * resources; an unclosed stream leaks a file descriptor until
-  * finalization — fatal on per-micro-batch hot paths like TxnLog
-  * marker scans and manifest reads). Hand-rolling the try/finally at
-  * each call site is exactly how the leak recurred across five files
-  * in the first place. */
+  * `Files.list` / `Files.walk` MUST be closed (the javadoc requires
+  * try-with-resources; an unclosed stream keeps its file descriptor
+  * open, even after GC — fatal on per-micro-batch hot paths like the
+  * shard source's offset poll, TxnLog marker scans and manifest
+  * reads). Hand-rolling the try/finally at each call site is exactly
+  * how the leak recurred across five files, so `tools/precommit.sh`
+  * refuses either call in `src/main` outside this file and
+  * [[Generations]]. */
 object DirIO {
 
   /** Entry names of `dir`, stream closed. */
@@ -60,11 +63,21 @@ object DirIO {
   }
 
   /** The `<prefix><long>` entries of `dir`, parsed and ascending —
-    * the manifest-generation / txn-marker scan every store shares. */
+    * the manifest-generation / txn-marker / status-version scan every
+    * store shares. Names that do not parse (a commit temp) are skipped. */
   def numberedEntries(dir: Path, prefix: String): List[Long] =
     if (!Files.exists(dir)) Nil
     else listNames(dir)
-      .collect { case n if n.startsWith(prefix) =>
-        n.stripPrefix(prefix).toLong }
+      .flatMap(n =>
+        if (n.startsWith(prefix)) n.stripPrefix(prefix).toLongOption else None)
       .sorted
+
+  /** Delete `p` and everything under it; nothing when it is absent. */
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(Comparator.reverseOrder[Path]())
+        .forEach(f => { Files.deleteIfExists(f); () })
+      finally s.close()
+    }
 }

@@ -1,8 +1,8 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Generations
 
 /** PERSISTED k-means centroids — the frozen clustering geometry behind
   * semantic dedup, published once and loaded by every consumer:
@@ -20,12 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   _commits/manifest-<gen> the commit: which dir is live, k, iters
   * }}}
   *
-  * Commit protocol — MANIFEST GENERATIONS, the [[EmbedIndex]] /
-  * [[TokenizerStore]] single-file-atomicity contract verbatim: data
-  * dirs are immutable and carry no authority, the highest-generation
-  * manifest is the only truth, every publish is write-temp + atomic
-  * rename. A writer dying mid-train leaves orphan dirs and no
-  * manifest; a torn manifest temp is invisible to readers.
+  * Commit protocol — MANIFEST GENERATIONS through [[graft.Generations]],
+  * shared with [[EmbedIndex]] and [[TokenizerStore]]: data dirs are
+  * immutable and carry no authority, the highest-generation manifest
+  * is the only truth, and every publish is write-temp + hard link,
+  * first writer wins. A writer dying mid-train leaves orphan dirs and
+  * no manifest; a torn manifest temp is invisible to readers.
   *
   * Like the tokenizer (and PQ codebooks), centroids are train-time
   * FROZEN: there are no streaming appends, because moving a centroid
@@ -41,71 +41,24 @@ object CentroidStore {
   final case class Manifest(gen: Long, epoch: Long, k: Int, iters: Int,
       centroids: String)
 
-  private def commitDir(dir: String) = Paths.get(dir, "_commits")
-
-  /** The current committed manifest, if any generation has published. */
-  def manifest(dir: String): Option[Manifest] =
-    committedGens(dir).lastOption.map(readManifest(dir, _))
-
-  private def committedGens(dir: String): Seq[Long] =
-    graft.DirIO.numberedEntries(commitDir(dir), "manifest-")
-
   /** Manifest format version — a mismatch errors LOUDLY for readers;
     * only [[build]] recovers (retrain as a fresh epoch). */
   private val FormatVersion = 1
 
-  private def readManifest(dir: String, gen: Long): Manifest = {
-    val kv = new String(Files.readAllBytes(
-      commitDir(dir).resolve(s"manifest-$gen")), "UTF-8")
-      .linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }
-      .toMap
-    val found = kv.get("format").map(_.toInt).getOrElse(0)
-    if (found != FormatVersion) throw new IllegalStateException(
-      s"centroid store at $dir uses manifest format $found; this " +
-        s"build reads format $FormatVersion — run build() (it starts " +
-        "a fresh epoch beside the old data and publishes a readable " +
-        "generation; vacuum reclaims the old files), or read with a " +
-        "matching library version")
-    Manifest(gen, kv("epoch").toLong, kv("k").toInt, kv("iters").toInt,
-      kv("centroids"))
-  }
+  private def gens(dir: String) = new Generations(dir, "centroid store",
+    FormatVersion, unversioned = 0)((gen, kv) => Manifest(gen,
+      kv("epoch").toLong, kv("k").toInt, kv("iters").toInt, kv("centroids")))
 
-  /** Commit a manifest generation FIRST WRITER WINS: full content to
-    * a temp, then an atomic hard link (link(2) — complete content,
-    * EEXIST for every linker but the first; a rename-based move would
-    * silently REPLACE on POSIX, letting a racing builder clobber a
-    * committed generation). The loser errors loudly — its data dir is
-    * an orphan [[vacuum]] reclaims. */
-  private[graft] def publish(dir: String, m: Manifest): Unit = {
-    Files.createDirectories(commitDir(dir))
-    val body = s"format=$FormatVersion\nepoch=${m.epoch}\nk=${m.k}\n" +
-      s"iters=${m.iters}\ncentroids=${m.centroids}\n"
-    val tmp = commitDir(dir).resolve(s".manifest-${m.gen}.tmp-${m.centroids}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    try Files.createLink(commitDir(dir).resolve(s"manifest-${m.gen}"), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"centroid store at $dir: generation ${m.gen} was committed " +
-            "by a concurrent builder — this build's centroids " +
-            s"(${m.centroids}) are NOT published; re-run build() to " +
-            "train the next generation (vacuum reclaims the orphan)")
-      case _: UnsupportedOperationException =>
-        // filesystem without hard links (exFAT, some NFS/object-store
-        // mounts): fall back to the rename commit — atomic, but
-        // last-writer-wins rather than first (rename REPLACES on
-        // POSIX), i.e. the single-writer contract is on the operator
-        // there; stated rather than silently unsupported
-        Files.move(tmp, commitDir(dir).resolve(s"manifest-${m.gen}"),
-          StandardCopyOption.ATOMIC_MOVE)
-        ()
-    } finally {
-      Files.deleteIfExists(tmp)
-      ()
-    }
-    ()
-  }
+  /** The current committed manifest, if any generation has published. */
+  def manifest(dir: String): Option[Manifest] = gens(dir).latest
+
+  /** Commit a manifest generation FIRST WRITER WINS
+    * ([[graft.Generations.commit]]): a racing builder that computed
+    * the same generation cannot clobber the committed one, and errors
+    * loudly — its data dir is an orphan [[vacuum]] reclaims. */
+  private[graft] def publish(dir: String, m: Manifest): Unit =
+    gens(dir).publish(m.gen, "epoch" -> m.epoch, "k" -> m.k,
+      "iters" -> m.iters, "centroids" -> m.centroids)
 
   /** Train at the [[EmbedOps.scaledK]] cluster count and publish the
     * centroid frame as the next generation at `dir`. A first build
@@ -124,16 +77,8 @@ object CentroidStore {
     * manifest — invisible to readers, reclaimed by [[vacuum]]. */
   def build(embeddings: DataFrame, dir: String,
       targetBlock: Int = 1024, iters: Int = 2): Unit = {
-    val (prev, legacyLastGen) =
-      try (manifest(dir), None) catch {
-        case _: IllegalStateException =>
-          (None, committedGens(dir).lastOption)
-      }
-    val gen = prev.map(_.gen + 1)
-      .orElse(legacyLastGen.map(_ + 1)).getOrElse(0L)
-    val epoch = prev.map(_.epoch + 1).getOrElse(gen)
+    val (gen, epoch) = gens(dir).next(_.epoch)
     val k = EmbedOps.scaledK(embeddings.count(), targetBlock)
-    Files.createDirectories(Paths.get(dir))
     val nonce = java.lang.Long.toHexString(
       ProcessHandle.current().pid() ^ (System.nanoTime() << 16))
     val dataName = s"e$epoch-centroids-$nonce"
@@ -152,10 +97,9 @@ object CentroidStore {
 
   /** Time travel: the centroid frame of a retained generation. */
   def centroidsAt(spark: SparkSession, dir: String, gen: Long): DataFrame = {
-    require(committedGens(dir).contains(gen),
+    require(gens(dir).committed.contains(gen),
       s"generation $gen is not committed at $dir")
-    val man = readManifest(dir, gen)
-    spark.read.parquet(s"$dir/${man.centroids}")
+    spark.read.parquet(s"$dir/${gens(dir).at(gen).centroids}")
   }
 
   /** Reclaim superseded generations (their manifests AND the data
@@ -172,58 +116,6 @@ object CentroidStore {
     * reader still scans (shared store roots); `graceMs = 0` is the
     * single-writer teardown form. */
   def vacuum(dir: String, keepGenerations: Int = 1,
-      graceMs: Long = 15 * 60 * 1000L): Unit = {
-    require(keepGenerations >= 1,
-      s"keepGenerations must be >= 1 (got $keepGenerations)")
-    val keep = committedGens(dir).takeRight(keepGenerations)
-    val snapMaxGen = keep.lastOption.getOrElse(Long.MinValue)
-    val live: Set[String] =
-      keep.map(readManifest(dir, _)).map(_.centroids).toSet
-    val cutoff = System.currentTimeMillis() - graceMs
-    def graced(p: java.nio.file.Path): Boolean = scala.util.Try(
-      Files.getLastModifiedTime(p).toMillis <= cutoff).getOrElse(false)
-    // ORDER: retire superseded manifests FIRST, data dirs second — a
-    // crash (or a concurrent time-travel reader listing generations)
-    // between the phases then sees a manifest-less orphan dir (benign,
-    // re-vacuumable) instead of a committed manifest pointing at a
-    // wiped dir (a loud require beats a parquet path-not-found).
-    // Two concurrent-publisher guards on the _commits pass itself:
-    // (1) only a manifest whose gen sits STRICTLY BELOW the snapshot's
-    // newest gen is "superseded" — a generation published between the
-    // keep snapshot and this delete pass has gen > snapMaxGen and is
-    // never touched (deleting it would silently un-publish a commit
-    // whose publish() succeeded); (2) the graceMs window applies to
-    // _commits entries too — a .manifest-*.tmp is a publisher mid-link
-    // and even a superseded manifest may still be under a concurrent
-    // time-travel reader's feet, so only entries older than the grace
-    // cutoff are retired.
-    if (Files.exists(commitDir(dir)))
-      graft.DirIO.listPaths(commitDir(dir))
-        .filter { p =>
-          val n = p.getFileName.toString
-          graced(p) && (n.startsWith(".") ||
-            (n.startsWith("manifest-") &&
-              scala.util.Try(n.stripPrefix("manifest-").toLong).toOption
-                .exists(g => !keep.contains(g) && g < snapMaxGen)))
-        }
-        .foreach(p => { Files.deleteIfExists(p); () })
-    // grace window: a non-live dir modified within graceMs may be a
-    // CONCURRENT builder's in-flight attempt (nonce dirs have no
-    // manifest until publish) — wiping it would let that builder
-    // publish a manifest referencing a vanished dir. Recently-touched
-    // orphans are left for the next vacuum; pass graceMs = 0 for the
-    // single-writer teardown case.
-    graft.DirIO.listPaths(Paths.get(dir)).foreach { p =>
-      val n = p.getFileName.toString
-      val old = scala.util.Try(
-        Files.getLastModifiedTime(p).toMillis <= cutoff).getOrElse(false)
-      if (n != "_commits" && !live.contains(n) && old) wipe(p)
-    }
-  }
-
-  private def wipe(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => { Files.deleteIfExists(q); () })
-    }
+      graceMs: Long = 15 * 60 * 1000L): Unit =
+    gens(dir).vacuum(keepGenerations, graceMs)(m => Seq(m.centroids))
 }

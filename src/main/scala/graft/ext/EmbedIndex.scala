@@ -1,9 +1,9 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Generations
 
 /** A PERSISTED, incrementally-maintained IVF-PQ index — the missing
   * half of the ANN family: [[EmbedOps.trainPq]]/[[EmbedOps.ivfPqTopKFrom]]
@@ -27,12 +27,15 @@ import org.apache.spark.sql.functions._
   * manifest, a small text file naming the live codebook dir, the live
   * segment dirs, the live sums dir, the PQ geometry, and two counters.
   * Every commit (build, append, streamed batch, compaction) writes its
-  * data dirs FIRST, then publishes a NEW manifest via write-temp +
-  * atomic rename. A writer dying mid-operation leaves orphan dirs and
-  * no manifest — a torn write is invisible, readers keep serving the
-  * previous generation. Compaction is what the manifest protocol buys:
-  * folding N segments into one is a single manifest swap, impossible
-  * to make atomic with per-segment commit markers.
+  * data dirs FIRST, then publishes a NEW manifest through
+  * [[graft.Generations]]: write-temp + hard link, first writer wins, so
+  * a writer that lost a race for a generation fails loudly instead of
+  * replacing the committed manifest. A writer dying mid-operation
+  * leaves orphan dirs and no manifest — a torn write is invisible,
+  * readers keep serving the previous generation. Compaction is what
+  * the manifest protocol buys: folding N segments into one is a single
+  * manifest swap, impossible to make atomic with per-segment commit
+  * markers.
   *
   * Two id namespaces, deliberately DISJOINT:
   *
@@ -91,21 +94,6 @@ object EmbedIndex {
   final case class State(cents: DataFrame, codes: DataFrame,
       coarse: DataFrame, m: Int, dsub: Int)
 
-  private def commitDir(dir: String) = Paths.get(dir, "_commits")
-
-  /** The current committed manifest, if any generation has published
-    * (atomic rename means a manifest file is complete or absent —
-    * never torn). */
-  def manifest(dir: String): Option[Manifest] =
-    committedGens(dir).lastOption.map(readManifest(dir, _))
-
-  /** Every committed manifest generation number, ascending — readable
-    * without parsing manifest bodies, so it works across format
-    * versions (the upgrade path in [[build]] needs the latest gen of
-    * an index it cannot otherwise read). */
-  private def committedGens(dir: String): Seq[Long] =
-    graft.DirIO.numberedEntries(commitDir(dir), "manifest-")
-
   /** Manifest format version. v2 (r14) added `epoch` (rebuild
     * namespacing), inlined the PQ geometry, and moved segment/sums/
     * codebook references to explicit dir NAMES (the cseg compaction
@@ -113,45 +101,22 @@ object EmbedIndex {
     * mismatch is a LOUD error, never a silent reinterpretation. */
   private val FormatVersion = 2
 
-  private def readManifest(dir: String, gen: Long): Manifest = {
-    val kv = new String(Files.readAllBytes(
-      commitDir(dir).resolve(s"manifest-$gen")), "UTF-8")
-      .linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }
-      .toMap
-    val found = kv.get("format").map(_.toInt).getOrElse(1)
-    if (found != FormatVersion) throw new IllegalStateException(
-      s"index at $dir uses manifest format $found; this build reads " +
-        s"format $FormatVersion — run build() (it starts a fresh epoch " +
-        "beside the old data and publishes a readable generation; " +
-        "vacuum reclaims the old files), or read with a matching " +
-        "library version")
-    Manifest(gen, kv("epoch").toLong, kv("high").toLong,
-      kv("m").toInt, kv("dsub").toInt, kv("cents"), kv("sums"),
-      kv("segs").split(",").filter(_.nonEmpty).toSeq)
-  }
+  private def gens(dir: String) = new Generations(dir, "index",
+    FormatVersion, unversioned = 1)((gen, kv) => Manifest(gen,
+      kv("epoch").toLong, kv("high").toLong, kv("m").toInt,
+      kv("dsub").toInt, kv("cents"), kv("sums"),
+      kv("segs").split(",").filter(_.nonEmpty).toSeq))
 
-  /** Publish a manifest generation: write to a temp name, atomic-rename
-    * into place — the single filesystem operation every commit rides. */
-  private def publish(dir: String, m: Manifest): Unit = {
-    Files.createDirectories(commitDir(dir))
-    val body = s"format=$FormatVersion\nepoch=${m.epoch}\nhigh=${m.high}\n" +
-      s"m=${m.m}\ndsub=${m.dsub}\ncents=${m.cents}\nsums=${m.sums}\n" +
-      s"segs=${m.segs.mkString(",")}\n"
-    val tmp = commitDir(dir).resolve(s".manifest-${m.gen}.tmp")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, commitDir(dir).resolve(s"manifest-${m.gen}"),
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  /** The current committed manifest, if any generation has published
+    * (a hard-linked manifest is complete or absent — never torn). */
+  def manifest(dir: String): Option[Manifest] = gens(dir).latest
 
-  private def wipe(dir: String): Unit = {
-    val d = Paths.get(dir)
-    if (Files.exists(d)) {
-      Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-    }
-  }
+  /** Publish a manifest generation — the single filesystem operation
+    * every commit rides; a lost race for `m.gen` throws. */
+  private def publish(dir: String, m: Manifest): Unit =
+    gens(dir).publish(m.gen, "epoch" -> m.epoch, "high" -> m.high,
+      "m" -> m.m, "dsub" -> m.dsub, "cents" -> m.cents, "sums" -> m.sums,
+      "segs" -> m.segs.mkString(","))
 
   /** Train on `embeddings` and publish the result as the next
     * generation at `dir`: codebooks, segment 0's codes (with their
@@ -171,17 +136,9 @@ object EmbedIndex {
     // with legacy data names; the old files sit beside it until
     // vacuum. Readers still fail loudly on the old format — only
     // build() recovers, because rebuilding is the documented remedy.
-    val (prev, legacyLastGen) =
-      try (manifest(dir), None) catch {
-        case _: IllegalStateException =>
-          (None, committedGens(dir).lastOption)
-      }
-    val gen = prev.map(_.gen + 1)
-      .orElse(legacyLastGen.map(_ + 1)).getOrElse(0L)
-    val epoch = prev.map(_.epoch + 1).getOrElse(gen)
+    val (gen, epoch) = gens(dir).next(_.epoch)
     val pq = EmbedOps.trainPq(embeddings, m, dsub, ksub)
     try {
-      Files.createDirectories(Paths.get(dir))
       // mode=overwrite: a crashed build retried before any publish
       // recomputes the same epoch and overwrites its own torn dirs
       pq.cents.write.mode("overwrite").parquet(s"$dir/e$epoch-cents")
@@ -202,7 +159,7 @@ object EmbedIndex {
   /** Append `delta` as a new segment: encode with the frozen codebooks,
     * write O(|delta|) code rows, merge the coarse sums exactly, publish
     * the next manifest generation. Readers racing the append see the
-    * previous generation until the rename lands. */
+    * previous generation until the manifest link lands. */
   def append(delta: DataFrame, dir: String): Unit = {
     val man = manifest(dir).getOrElse(
       throw new IllegalArgumentException(
@@ -276,7 +233,7 @@ object EmbedIndex {
   }
 
   /** Fold all live segments into one: rewrites code rows (never raw
-    * vectors), then swaps the manifest in one rename — the atomic
+    * vectors), then swaps the manifest in one commit — the atomic
     * multi-segment replace the manifest protocol exists for. Results
     * are identical by construction (same rows, one dir); sums and the
     * batch high-water mark are untouched (the folded segment lives in
@@ -302,44 +259,8 @@ object EmbedIndex {
     * deployment can impose a grace period for readers still scanning
     * an older generation — deletion is the only non-reversible step in
     * the protocol. */
-  def vacuum(dir: String, graceMs: Long = 15 * 60 * 1000L): Unit = {
-    manifest(dir).foreach { man =>
-      val live = man.segs.toSet ++ Set(man.sums, man.cents, "_commits")
-      val cutoff = System.currentTimeMillis() - graceMs
-      def graced(p: java.nio.file.Path): Boolean = scala.util.Try(
-        Files.getLastModifiedTime(p).toMillis <= cutoff).getOrElse(false)
-      // ORDER: retire superseded manifests FIRST, data second — a
-      // crash between the phases leaves a manifest-less orphan
-      // (benign, re-vacuumable), never a committed manifest pointing
-      // at a wiped dir (the CentroidStore.vacuum discipline).
-      // Concurrent-publisher guards (the CentroidStore.vacuum rules):
-      // only a manifest with gen STRICTLY BELOW the snapshot's gen is
-      // superseded — one published between the manifest(dir) snapshot
-      // and this pass has a higher gen and is never touched — and the
-      // graceMs window applies here too (.manifest-*.tmp is a
-      // publisher mid-move; a fresh superseded manifest may still be
-      // under a time-travel reader's feet).
-      graft.DirIO.listPaths(commitDir(dir))
-        .filter { p =>
-          val n = p.getFileName.toString
-          graced(p) && (n.startsWith(".") ||
-            (n.startsWith("manifest-") &&
-              scala.util.Try(n.stripPrefix("manifest-").toLong).toOption
-                .exists(_ < man.gen)))
-        }
-        .foreach(p => { Files.deleteIfExists(p); () })
-      // grace window: a non-live path touched within graceMs may be a
-      // concurrent appender/compactor's un-published segment on a
-      // shared index root — spare it for the next vacuum; graceMs = 0
-      // is the single-writer teardown form
-      graft.DirIO.listPaths(Paths.get(dir))
-        .filterNot(p => live.contains(p.getFileName.toString))
-        .filter(p => scala.util.Try(
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
-          .getOrElse(false))
-        .foreach(p => wipe(p.toString))
-    }
-  }
+  def vacuum(dir: String, graceMs: Long = 15 * 60 * 1000L): Unit =
+    gens(dir).vacuum(keep = 1, graceMs)(m => m.segs ++ Seq(m.sums, m.cents))
 
   /** Load the committed read-view: the current generation's live code
     * segments, the frozen codebooks, and centroids derived from the
@@ -356,9 +277,9 @@ object EmbedIndex {
     * lives under its own epoch prefix). Fails loudly when the
     * generation was vacuumed away. */
   def loadAt(spark: SparkSession, dir: String, gen: Long): State = {
-    require(Files.exists(commitDir(dir).resolve(s"manifest-$gen")),
+    require(gens(dir).committed.contains(gen),
       s"generation $gen at $dir does not exist or was vacuumed")
-    loadAt(spark, dir, readManifest(dir, gen))
+    loadAt(spark, dir, gens(dir).at(gen))
   }
 
   private def loadAt(spark: SparkSession, dir: String,

@@ -1,9 +1,9 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Generations
 
 /** A PERSISTED trained BPE tokenizer — the shared artifact of a real
   * training-data pipeline: one job trains the merge rules
@@ -21,12 +21,14 @@ import org.apache.spark.sql.functions._
   *   _commits/manifest-<gen> the commit: which dirs are live
   * }}}
   *
-  * Commit protocol — MANIFEST GENERATIONS, exactly [[EmbedIndex]]'s
-  * single-file-atomicity contract: data dirs are immutable and carry
+  * Commit protocol — MANIFEST GENERATIONS through [[graft.Generations]],
+  * exactly [[EmbedIndex]]'s contract: data dirs are immutable and carry
   * no authority; the highest-generation manifest is the only truth;
-  * every publish is write-temp + atomic rename, so a writer dying
-  * mid-train leaves orphan dirs and no manifest (readers keep serving
-  * the previous generation) and a torn manifest temp is invisible.
+  * every publish is write-temp + hard link, first writer wins, so a
+  * writer dying mid-train leaves orphan dirs and no manifest (readers
+  * keep serving the previous generation), a torn manifest temp is
+  * invisible, and a builder that lost the race for a generation fails
+  * loudly.
   *
   * What this store deliberately does NOT have: streaming appends.
   * Merge rules are train-time-frozen like PQ codebooks — applying
@@ -48,51 +50,18 @@ object TokenizerStore {
   final case class Manifest(gen: Long, epoch: Long, rounds: Int,
       merges: String, vocab: String)
 
-  private def commitDir(dir: String) = Paths.get(dir, "_commits")
-
-  /** The current committed manifest, if any generation has published. */
-  def manifest(dir: String): Option[Manifest] =
-    committedGens(dir).lastOption.map(readManifest(dir, _))
-
-  /** Every committed generation number, ascending — readable without
-    * parsing manifest bodies (the upgrade path in [[build]] needs the
-    * latest gen of a store it cannot otherwise read). */
-  private def committedGens(dir: String): Seq[Long] =
-    graft.DirIO.numberedEntries(commitDir(dir), "manifest-")
-
   /** Manifest format version. Bumped on any incompatible layout
     * change; a version mismatch is a LOUD error for readers, never a
     * silent reinterpretation — only [[build]] recovers (retraining is
     * the documented remedy, exactly [[EmbedIndex]]'s rule). */
   private val FormatVersion = 1
 
-  private def readManifest(dir: String, gen: Long): Manifest = {
-    val kv = new String(Files.readAllBytes(
-      commitDir(dir).resolve(s"manifest-$gen")), "UTF-8")
-      .linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }
-      .toMap
-    val found = kv.get("format").map(_.toInt).getOrElse(0)
-    if (found != FormatVersion) throw new IllegalStateException(
-      s"tokenizer store at $dir uses manifest format $found; this " +
-        s"build reads format $FormatVersion — run build() (it starts " +
-        "a fresh epoch beside the old data and publishes a readable " +
-        "generation; vacuum reclaims the old files), or read with a " +
-        "matching library version")
-    Manifest(gen, kv("epoch").toLong, kv("rounds").toInt,
-      kv("merges"), kv("vocab"))
-  }
+  private def gens(dir: String) = new Generations(dir, "tokenizer store",
+    FormatVersion, unversioned = 0)((gen, kv) => Manifest(gen,
+      kv("epoch").toLong, kv("rounds").toInt, kv("merges"), kv("vocab")))
 
-  private def publish(dir: String, m: Manifest): Unit = {
-    Files.createDirectories(commitDir(dir))
-    val body = s"format=$FormatVersion\nepoch=${m.epoch}\n" +
-      s"rounds=${m.rounds}\nmerges=${m.merges}\nvocab=${m.vocab}\n"
-    val tmp = commitDir(dir).resolve(s".manifest-${m.gen}.tmp")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, commitDir(dir).resolve(s"manifest-${m.gen}"),
-      StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  /** The current committed manifest, if any generation has published. */
+  def manifest(dir: String): Option[Manifest] = gens(dir).latest
 
   /** Train on `documents` and publish merges + vocab as the next
     * generation at `dir`. A FIRST build commits generation 0; a
@@ -103,17 +72,9 @@ object TokenizerStore {
     * can extend": the rebuild starts past the legacy generations under
     * a non-colliding epoch (the [[EmbedIndex]] upgrade path). */
   def build(documents: DataFrame, dir: String, rounds: Int = 3): Unit = {
-    val (prev, legacyLastGen) =
-      try (manifest(dir), None) catch {
-        case _: IllegalStateException =>
-          (None, committedGens(dir).lastOption)
-      }
-    val gen = prev.map(_.gen + 1)
-      .orElse(legacyLastGen.map(_ + 1)).getOrElse(0L)
-    val epoch = prev.map(_.epoch + 1).getOrElse(gen)
+    val (gen, epoch) = gens(dir).next(_.epoch)
     val merges = TextOps.bpeTrainMerges(documents, rounds)
       .localCheckpoint() // pin: the vocab derives from the same rules
-    Files.createDirectories(Paths.get(dir))
     // mode=overwrite: a crashed build retried before any publish
     // recomputes the same epoch and overwrites its own torn dirs
     merges.write.mode("overwrite").parquet(s"$dir/e$epoch-merges")
@@ -144,8 +105,8 @@ object TokenizerStore {
         lit("merged").as("kind"))
     base.unionAll(mergedToks)
       .write.mode("overwrite").parquet(s"$dir/e$epoch-vocab")
-    publish(dir, Manifest(gen = gen, epoch = epoch, rounds = rounds,
-      merges = s"e$epoch-merges", vocab = s"e$epoch-vocab"))
+    gens(dir).publish(gen, "epoch" -> epoch, "rounds" -> rounds,
+      "merges" -> s"e$epoch-merges", "vocab" -> s"e$epoch-vocab")
   }
 
   /** The committed merge table — [[TextOps.bpeEncodeFrom]]'s loaded
@@ -156,10 +117,9 @@ object TokenizerStore {
 
   /** Time travel: the merge table of a retained earlier generation. */
   def mergesAt(spark: SparkSession, dir: String, gen: Long): DataFrame = {
-    require(committedGens(dir).contains(gen),
+    require(gens(dir).committed.contains(gen),
       s"generation $gen is not committed at $dir")
-    val man = readManifest(dir, gen)
-    spark.read.parquet(s"$dir/${man.merges}")
+    spark.read.parquet(s"$dir/${gens(dir).at(gen).merges}")
   }
 
   /** The committed token vocabulary (token_id, token, kind). */
@@ -170,24 +130,10 @@ object TokenizerStore {
   }
 
   /** Reclaim data dirs no manifest generation references and abandoned
-    * manifest temps — the only destructive step in the protocol. */
-  def vacuum(dir: String): Unit = {
-    val live: Set[String] = committedGens(dir)
-      .map(readManifest(dir, _))
-      .flatMap(m => Seq(m.merges, m.vocab)).toSet
-    graft.DirIO.listPaths(Paths.get(dir)).foreach { p =>
-      val n = p.getFileName.toString
-      if (n != "_commits" && !live.contains(n)) wipe(p)
-    }
-    if (Files.exists(commitDir(dir)))
-      graft.DirIO.listPaths(commitDir(dir))
-        .filter(_.getFileName.toString.startsWith("."))
-        .foreach(p => { Files.deleteIfExists(p); () })
-  }
-
-  private def wipe(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => { Files.deleteIfExists(q); () })
-    }
+    * manifest temps — the only destructive step in the protocol. Every
+    * committed generation stays readable, and nothing is spared for
+    * being recent (the single-writer form of the shared vacuum). */
+  def vacuum(dir: String): Unit =
+    gens(dir).vacuum(keep = Int.MaxValue, graceMs = 0L)(m =>
+      Seq(m.merges, m.vocab))
 }

@@ -1,13 +1,12 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.JobLabel
+import graft.{DirIO, Generations, JobLabel}
 
 /** Cross-process optimistic CCAS on the persistent status table — the
   * reference's conditional UpdateItem (index.js:448-497: transition to
@@ -23,9 +22,11 @@ import graft.JobLabel
   * object stores also provide:
   *
   *  - snapshots are immutable parquet directories `snap-<v>-<writer>`;
-  *  - version v is COMMITTED by atomically creating `_commits/<v>`
-  *    (create-new move — fails if the name exists; on S3/GCS this is
-  *    the conditional PUT / if-generation-match write).
+  *  - version v is COMMITTED by creating `_commits/<v>` (8 digits)
+  *    through [[graft.Generations.commit]]: the body goes to a temp,
+  *    which is hard-linked to the marker name — atomic, and EEXIST for
+  *    every writer but the first; on S3/GCS this is the conditional
+  *    PUT / if-generation-match write.
   *
   * A writer reads the latest committed snapshot, applies its
   * compare-and-set row conditions against it, writes a new snapshot,
@@ -62,18 +63,8 @@ object StatusStore {
   private def commitsDir(dir: String): Path = Paths.get(dir, "_commits")
 
   /** Highest committed version, 0 when the table is empty. */
-  def currentVersion(dir: String): Long = {
-    val d = commitsDir(dir)
-    if (!Files.exists(d)) 0L
-    else {
-      val s = Files.list(d)
-      try {
-        val vs = s.toArray.map(_.asInstanceOf[Path].getFileName.toString)
-          .flatMap(n => scala.util.Try(n.toLong).toOption)
-        if (vs.isEmpty) 0L else vs.max
-      } finally s.close()
-    }
-  }
+  def currentVersion(dir: String): Long =
+    DirIO.numberedEntries(commitsDir(dir), "").lastOption.getOrElse(0L)
 
   private def snapshotPath(dir: String, version: Long): Option[String] = {
     val marker = commitsDir(dir).resolve(f"$version%08d")
@@ -165,21 +156,11 @@ object StatusStore {
           merged.write.mode("overwrite").parquet(snapDir.toString)
         }
 
-        Files.createDirectories(commitsDir(dir))
-        val tmp = commitsDir(dir).resolve(s".tmp-$writerId-$attempt")
-        Files.write(tmp, snapName.getBytes("UTF-8"))
+        // first writer wins: false iff another writer committed v+1
+        // first — the conditional PUT of the protocol
         val committed =
-          try {
-            // create-new move: atomic, fails iff another writer committed
-            // v+1 first — the conditional-PUT of the protocol
-            Files.move(tmp, commitsDir(dir).resolve(f"${v + 1}%08d"))
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              Files.deleteIfExists(tmp)
-              deleteRecursively(snapDir) // orphan snapshot of the lost race
-              false
-          }
+          Generations.commit(commitsDir(dir).resolve(f"${v + 1}%08d"), snapName)
+        if (!committed) DirIO.deleteRecursively(snapDir) // lost race's orphan
         val keys = verdicts.filter(col("holds")).select("event_id", "guest_id")
         verdicts.unpersist() // keys re-evaluate against the immutable snapshot
         if (committed) return CasResult(nApplied, nRejected, v + 1, keys)
@@ -223,9 +204,4 @@ object StatusStore {
       lit(null).cast("string").as("expected_status"),
       lit("deleted").as("new_status"),
       lit(null).cast("string").as("error_at"))
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
 }

@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -94,13 +92,8 @@ private class ShardBatchWrite(path: String, valueIdx: Int)
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     cleanupStaging()
 
-  private def cleanupStaging(): Unit = {
-    val staging = Paths.get(path, ".staging", writeId)
-    if (Files.isDirectory(staging)) {
-      Files.list(staging).iterator().asScala.foreach(Files.deleteIfExists(_))
-      Files.deleteIfExists(staging)
-    }
-  }
+  private def cleanupStaging(): Unit =
+    graft.DirIO.deleteRecursively(Paths.get(path, ".staging", writeId))
 }
 
 private[graft] case class ShardWriterFactory(path: String, writeId: String,

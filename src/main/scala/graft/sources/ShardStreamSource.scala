@@ -4,8 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform, Expression => V2Expression}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
@@ -50,9 +48,9 @@ object ShardStreamSource {
     StructField("shard_file", StringType),
     StructField("line_no", LongType)))
 
-  private[sources] def sortedShards(path: String): Seq[String] =
+  private[graft] def sortedShards(path: String): Seq[String] =
     if (path == null || !Files.isDirectory(Paths.get(path))) Seq.empty
-    else Files.list(Paths.get(path)).iterator().asScala
+    else graft.DirIO.listPaths(Paths.get(path))
       .filter(p => Files.isRegularFile(p))
       // metadata, never data: commit manifests (_manifest-*) and any
       // hidden/staging entries — same convention as Hadoop outputs
@@ -60,7 +58,7 @@ object ShardStreamSource {
         val n = p.getFileName.toString
         !n.startsWith("_") && !n.startsWith(".")
       }
-      .map(_.toString).toSeq.sorted
+      .map(_.toString).sorted
 
   /** The pushed shard_file filters as a file predicate — ONE
     * definition shared by the row scan and the count scan, so a new

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.DirIO
+import graft.{DirIO, Generations}
 import graft.sink.EmailJobSink.TxnLog
 
 /** Continuous corpus ingestion with incremental dedup — the streaming
@@ -407,7 +407,7 @@ object CorpusIngest {
         // epoch committed BEFORE the first data lands, first writer
         // wins, then re-validated — the substring path's (w, occCap)
         // stamp discipline applied to the clustering geometry
-        stampCentroidEpoch(indexDir, epoch, batchId)
+        stampCentroidEpoch(indexDir, epoch)
         validateCentroidEpoch(indexDir, epoch)
         // order matters for the crash windows: data first (the drain
         // key), then reps (healed from data on replay evidence)
@@ -427,10 +427,7 @@ object CorpusIngest {
       epoch: Long): Unit = {
     val meta = Paths.get(indexDir, "_meta")
     if (Files.exists(meta)) {
-      val kv = new String(Files.readAllBytes(meta), "UTF-8")
-        .linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }
-        .toMap
+      val kv = Generations.read(meta)
       require(kv.get("centroid_epoch").contains(epoch.toString),
         s"semantic-centroid corpus at $indexDir was bucketed under " +
           s"centroid epoch ${kv.getOrElse("centroid_epoch", "?")}; the " +
@@ -454,7 +451,7 @@ object CorpusIngest {
     * mixed-geometry corpus into exactly the silent-recall-hole state
     * [[validateCentroidEpoch]] exists to reject loudly. */
   private[graft] def stampCentroidEpoch(indexDir: String, epoch: Long,
-      batchId: Long, dirHoldsRebucketedData: Boolean = false): Unit = {
+      dirHoldsRebucketedData: Boolean = false): Unit = {
     val meta = Paths.get(indexDir, "_meta")
     if (!Files.exists(meta)) {
       require(dirHoldsRebucketedData ||
@@ -466,20 +463,7 @@ object CorpusIngest {
           "centroid_ids stop colliding with new arrivals: a recall " +
           "hole). Migrate with rebucketSemanticCentroid into a fresh " +
           "dir, or restore the dir's original _meta")
-      Files.createDirectories(Paths.get(indexDir))
-      val tmp = Paths.get(indexDir, s".meta.$batchId.tmp")
-      Files.write(tmp, s"centroid_epoch=$epoch\n".getBytes("UTF-8"))
-      try Files.createLink(meta, tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => ()
-        case _: UnsupportedOperationException =>
-          Files.move(tmp, meta,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          ()
-      } finally {
-        Files.deleteIfExists(tmp)
-        ()
-      }
+      Generations.commit(meta, s"centroid_epoch=$epoch\n")
       ()
     }
   }
@@ -536,7 +520,7 @@ object CorpusIngest {
       .drop("rn")
       .write.mode(SaveMode.Overwrite).parquet(s"$newIndexDir/reps")
     Files.deleteIfExists(Paths.get(newIndexDir, "_meta"))
-    stampCentroidEpoch(newIndexDir, man.epoch, batchId = -1L,
+    stampCentroidEpoch(newIndexDir, man.epoch,
       dirHoldsRebucketedData = true)
     n
   }
@@ -758,7 +742,7 @@ object CorpusIngest {
         // wrong-width windows could land in wins/ where they would
         // silently match nothing forever (and before its docs could
         // be admitted unexcised at the surviving parameters)
-        stampSubstringMeta(corpusDir, w, occCap, batchId)
+        stampSubstringMeta(corpusDir, w, occCap)
         validateSubstringMeta(corpusDir, w, occCap)
         cleaned.write.mode(SaveMode.Append).parquet(dataDir)
         val ws = graft.ext.TextOps.winOcc(cleaned, w).localCheckpoint()
@@ -815,10 +799,7 @@ object CorpusIngest {
       occCap: Int): Unit = {
     val meta = Paths.get(corpusDir, "_meta")
     if (Files.exists(meta)) {
-      val kv = new String(Files.readAllBytes(meta), "UTF-8")
-        .linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }
-        .toMap
+      val kv = Generations.read(meta)
       require(kv.get("w").contains(w.toString) &&
         kv.get("occ_cap").contains(occCap.toString),
         s"substring corpus at $corpusDir was built with " +
@@ -830,37 +811,19 @@ object CorpusIngest {
     }
   }
 
-  /** Commit the (w, occCap) stamp FIRST WRITER WINS: the content is
-    * written to a batch-keyed temp, then HARD-LINKED to `_meta` —
-    * link(2) is atomic, carries complete content (unlike a bare
-    * CREATE_NEW write, whose partial flush a concurrent reader could
-    * see), and fails with EEXIST for every writer but the first. A
-    * losing racer returns normally; the caller's re-validation
-    * against the committed stamp is what fails its batch. */
-  private[graft] def stampSubstringMeta(corpusDir: String, w: Int, occCap: Int,
-      batchId: Long): Unit = {
+  /** Commit the (w, occCap) stamp FIRST WRITER WINS through
+    * [[graft.Generations.commit]] (a hard link carries complete
+    * content, unlike a bare CREATE_NEW write whose partial flush a
+    * concurrent reader could see). A losing racer returns normally;
+    * the caller's re-validation against the committed stamp is what
+    * fails its batch. Without hard links the commit is a rename, last
+    * writer wins, and that re-validation catches a mismatch on the
+    * NEXT batch instead. */
+  private[graft] def stampSubstringMeta(corpusDir: String, w: Int,
+      occCap: Int): Unit = {
     val meta = Paths.get(corpusDir, "_meta")
     if (!Files.exists(meta)) {
-      Files.createDirectories(Paths.get(corpusDir))
-      val tmp = Paths.get(corpusDir, s".meta.$batchId.tmp")
-      Files.write(tmp, s"w=$w\nocc_cap=$occCap\n".getBytes("UTF-8"))
-      try Files.createLink(meta, tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => ()
-        case _: UnsupportedOperationException =>
-          // no hard links on this filesystem (exFAT, some NFS/object
-          // mounts): rename commit — atomic but last-writer-wins, so
-          // the first-batch race protection degrades to the caller's
-          // re-validation catching a mismatch on the NEXT batch;
-          // single-writer deployments (the documented contract) are
-          // unaffected
-          Files.move(tmp, meta,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          ()
-      } finally {
-        Files.deleteIfExists(tmp)
-        ()
-      }
+      Generations.commit(meta, s"w=$w\nocc_cap=$occCap\n")
       ()
     }
   }
@@ -1194,13 +1157,8 @@ object CorpusIngest {
     // cost is trivial either way
     val all = committedIds(sketchDir, prefix).sorted
     all.dropRight(2).foreach { id =>
-      scala.util.Try {
-        val d = Paths.get(s"$sketchDir/$prefix-$id")
-        if (Files.exists(d)) {
-          Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { Files.deleteIfExists(p); () })
-        }
-      }
+      scala.util.Try(
+        DirIO.deleteRecursively(Paths.get(s"$sketchDir/$prefix-$id")))
     }
     // ... and fold the now-dirless batch markers into the TxnLog
     // high-water mark (retaining markers for the surviving version

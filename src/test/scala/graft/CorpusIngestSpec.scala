@@ -491,8 +491,8 @@ class CorpusIngestSpec extends SparkSpec {
     // _meta yet); the stamp primitive must admit exactly one, and the
     // loser must fail its re-validation BEFORE its wrong-width windows
     // land. Drive the primitives in the losing order:
-    CorpusIngest.stampSubstringMeta(dir, w = 4, occCap = 64, batchId = 0L)
-    CorpusIngest.stampSubstringMeta(dir, w = 6, occCap = 32, batchId = 1L)
+    CorpusIngest.stampSubstringMeta(dir, w = 4, occCap = 64)
+    CorpusIngest.stampSubstringMeta(dir, w = 6, occCap = 32)
     // first stamp survives (hard-link create, EEXIST for the loser)
     CorpusIngest.validateSubstringMeta(dir, 4, 64) // winner passes
     val e = intercept[IllegalArgumentException] {

@@ -12,5 +12,16 @@ if nul=$(git grep -l -P '\x00' -- '*.scala'); then
   echo "$nul" >&2
   exit 1
 fi
+# An unclosed Files.list / Files.walk stream keeps its file descriptor
+# open, and a hand-rolled link commit drifts from the shared first-
+# writer-wins protocol: the three calls live in DirIO.scala and
+# Generations.scala only.
+if raw=$(git grep -n -e 'Files\.list(' -e 'Files\.walk(' -e 'Files\.createLink(' \
+    -- src/main ':!src/main/scala/graft/DirIO.scala' \
+    ':!src/main/scala/graft/Generations.scala'); then
+  echo "Files.list/walk/createLink outside DirIO and Generations (use them):" >&2
+  echo "$raw" >&2
+  exit 1
+fi
 [ -n "$GRAFT_SKIP_PRECOMMIT" ] && exit 0
 exec sbt -batch Test/compile
