@@ -133,6 +133,15 @@ object Generations {
     } finally { Files.deleteIfExists(tmp); () }
   }
 
+  /** `base` suffixed with a fresh writer nonce — the name of a data dir
+    * a build or append is about to write. Two writers that computed the
+    * same generation and epoch then write disjoint dirs, so the one
+    * whose manifest commits serves only its own rows; the loser's dirs
+    * are orphans [[Generations.vacuum]] reclaims. */
+  def fresh(base: String): String =
+    s"$base-${java.lang.Long.toHexString(
+      java.util.UUID.randomUUID().getLeastSignificantBits)}"
+
   /** The `key=value` lines of a committed body; other lines are skipped. */
   def read(file: Path): Map[String, String] =
     new String(Files.readAllBytes(file), "UTF-8")

@@ -16,7 +16,7 @@ import graft.Generations
   *
   * On-disk layout (one parquet dir per epoch + tiny manifests):
   * {{{
-  *   e<E>-centroids/         (centroid_id, cv: array<long>) — FROZEN
+  *   e<E>-centroids-<nonce>/ (centroid_id, cv: array<long>) — FROZEN
   *   _commits/manifest-<gen> the commit: which dir is live, k, iters
   * }}}
   *
@@ -79,11 +79,9 @@ object CentroidStore {
       targetBlock: Int = 1024, iters: Int = 2): Unit = {
     val (gen, epoch) = gens(dir).next(_.epoch)
     val k = EmbedOps.scaledK(embeddings.count(), targetBlock)
-    val nonce = java.lang.Long.toHexString(
-      ProcessHandle.current().pid() ^ (System.nanoTime() << 16))
-    val dataName = s"e$epoch-centroids-$nonce"
+    val dataName = Generations.fresh(s"e$epoch-centroids")
     EmbedOps.kmeansCentroids(embeddings, k, iters)
-      .write.mode("overwrite").parquet(s"$dir/$dataName")
+      .write.parquet(s"$dir/$dataName")
     publish(dir, Manifest(gen = gen, epoch = epoch, k = k,
       iters = iters, centroids = dataName))
   }

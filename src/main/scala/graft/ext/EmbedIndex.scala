@@ -14,12 +14,15 @@ import graft.Generations
   *
   * On-disk layout (parquet dirs + tiny text files, under `dir`):
   * {{{
-  *   e<E>-cents/                (sub, centroid_id, cv) codebooks — FROZEN
-  *   e<E>-seg-<id>/             (vec_id, sub, centroid_id, label) codes
-  *   e<E>-cseg-<gen>/           a compaction-folded code segment
-  *   e<E>-sums-<id>/            (label, i, s, n) CUMULATIVE coarse stats
+  *   e<E>-cents-<n>/            (sub, centroid_id, cv) codebooks — FROZEN
+  *   e<E>-seg-<id>-<n>/         (vec_id, sub, centroid_id, label) codes
+  *   e<E>-cseg-<gen>-<n>/       a compaction-folded code segment
+  *   e<E>-sums-<id>-<n>/        (label, i, s, n) CUMULATIVE coarse stats
   *   _commits/manifest-<gen>    the commit: which dirs are live (+geometry)
   * }}}
+  * `<n>` is a writer nonce ([[graft.Generations.fresh]]): two writers
+  * racing for one generation write disjoint dirs, so the committed
+  * manifest names only the winner's.
   *
   * Commit protocol — MANIFEST GENERATIONS (Iceberg-style, single-file
   * atomicity): data dirs are immutable once written and carry no
@@ -138,18 +141,17 @@ object EmbedIndex {
     // build() recovers, because rebuilding is the documented remedy.
     val (gen, epoch) = gens(dir).next(_.epoch)
     val pq = EmbedOps.trainPq(embeddings, m, dsub, ksub)
+    val cents = Generations.fresh(s"e$epoch-cents")
+    val seg = Generations.fresh(s"e$epoch-seg-0")
+    val sums = Generations.fresh(s"e$epoch-sums-0")
     try {
-      // mode=overwrite: a crashed build retried before any publish
-      // recomputes the same epoch and overwrites its own torn dirs
-      pq.cents.write.mode("overwrite").parquet(s"$dir/e$epoch-cents")
+      pq.cents.write.parquet(s"$dir/$cents")
       pq.codes
         .join(embeddings.select(col("vec_id"), col("label")), Seq("vec_id"))
-        .write.mode("overwrite").parquet(s"$dir/e$epoch-seg-0")
-      EmbedOps.coarseSums(embeddings).write.mode("overwrite")
-        .parquet(s"$dir/e$epoch-sums-0")
+        .write.parquet(s"$dir/$seg")
+      EmbedOps.coarseSums(embeddings).write.parquet(s"$dir/$sums")
       publish(dir, Manifest(gen = gen, epoch = epoch, high = 0,
-        m = m, dsub = dsub, cents = s"e$epoch-cents",
-        sums = s"e$epoch-sums-0", segs = Seq(s"e$epoch-seg-0")))
+        m = m, dsub = dsub, cents = cents, sums = sums, segs = Seq(seg)))
     } finally {
       // build is one-shot: the trainPq caches have served their writes
       pq.subs.unpersist(); pq.codes.unpersist(); ()
@@ -183,10 +185,11 @@ object EmbedIndex {
     * namespace it would satisfy `segId <= high` and be silently
     * discarded — permanent data loss under the documented
     * compact-between-batches usage). A torn dir from a crashed attempt
-    * is overwritten; a batch id that maps BEHIND the high-water mark
-    * without being a replay (a stream restarted with a FRESH
-    * checkpoint against a populated index) fails loudly rather than
-    * silently rewriting history. */
+    * is an orphan [[vacuum]] reclaims (the retry writes fresh dirs); a
+    * batch id that maps BEHIND the high-water mark without being a
+    * replay (a stream restarted with a FRESH checkpoint against a
+    * populated index) fails loudly rather than silently rewriting
+    * history. */
   def appendBatch(delta: DataFrame, dir: String, batchId: Long): Unit = {
     val man = manifest(dir).getOrElse(
       throw new IllegalArgumentException(
@@ -217,17 +220,17 @@ object EmbedIndex {
   private def appendAt(delta: DataFrame, dir: String, man: Manifest,
       segId: Long): Unit = {
     val spark = delta.sparkSession
-    val seg = s"e${man.epoch}-seg-$segId"
-    val sums = s"e${man.epoch}-sums-$segId"
+    val seg = Generations.fresh(s"e${man.epoch}-seg-$segId")
+    val sums = Generations.fresh(s"e${man.epoch}-sums-$segId")
     val cents = spark.read.parquet(s"$dir/${man.cents}")
     EmbedOps.encodePq(delta, cents, man.m, man.dsub)
       .join(delta.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .write.mode("overwrite").parquet(s"$dir/$seg")
+      .write.parquet(s"$dir/$seg")
     spark.read.parquet(s"$dir/${man.sums}")
       .unionByName(EmbedOps.coarseSums(delta))
       .groupBy(col("label"), col("i"))
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-      .write.mode("overwrite").parquet(s"$dir/$sums")
+      .write.parquet(s"$dir/$sums")
     publish(dir, man.copy(gen = man.gen + 1, high = segId,
       sums = sums, segs = man.segs :+ seg))
   }
@@ -244,11 +247,9 @@ object EmbedIndex {
     val man = manifest(dir).getOrElse(
       throw new IllegalArgumentException(s"no committed index at $dir"))
     if (man.segs.size > 1) {
-      // gen-scoped name: each compaction commits exactly one new gen,
-      // so `cseg-<gen+1>` never collides with an earlier fold
-      val seg = s"e${man.epoch}-cseg-${man.gen + 1}"
+      val seg = Generations.fresh(s"e${man.epoch}-cseg-${man.gen + 1}")
       spark.read.parquet(man.segs.map(n => s"$dir/$n"): _*)
-        .write.mode("overwrite").parquet(s"$dir/$seg")
+        .write.parquet(s"$dir/$seg")
       publish(dir, man.copy(gen = man.gen + 1, segs = Seq(seg)))
     }
   }

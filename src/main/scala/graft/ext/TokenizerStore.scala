@@ -14,9 +14,9 @@ import graft.Generations
   *
   * On-disk layout (parquet dirs + tiny text files, under `dir`):
   * {{{
-  *   e<E>-merges/            (merge_rank, pair_left, pair_right,
+  *   e<E>-merges-<n>/        (merge_rank, pair_left, pair_right,
   *                            merged, pair_count) — FROZEN rule table
-  *   e<E>-vocab/             (token_id, token, kind) — base alphabet +
+  *   e<E>-vocab-<n>/         (token_id, token, kind) — base alphabet +
   *                            merged tokens, deterministic ids
   *   _commits/manifest-<gen> the commit: which dirs are live
   * }}}
@@ -28,7 +28,8 @@ import graft.Generations
   * writer dying mid-train leaves orphan dirs and no manifest (readers
   * keep serving the previous generation), a torn manifest temp is
   * invisible, and a builder that lost the race for a generation fails
-  * loudly.
+  * loudly. `<n>` is a writer nonce ([[graft.Generations.fresh]]), so
+  * racing builders never write each other's dirs.
   *
   * What this store deliberately does NOT have: streaming appends.
   * Merge rules are train-time-frozen like PQ codebooks — applying
@@ -75,9 +76,9 @@ object TokenizerStore {
     val (gen, epoch) = gens(dir).next(_.epoch)
     val merges = TextOps.bpeTrainMerges(documents, rounds)
       .localCheckpoint() // pin: the vocab derives from the same rules
-    // mode=overwrite: a crashed build retried before any publish
-    // recomputes the same epoch and overwrites its own torn dirs
-    merges.write.mode("overwrite").parquet(s"$dir/e$epoch-merges")
+    val mergesDir = Generations.fresh(s"e$epoch-merges")
+    val vocabDir = Generations.fresh(s"e$epoch-vocab")
+    merges.write.parquet(s"$dir/$mergesDir")
     // base alphabet: every code-point token of the training corpus's
     // words (the same seeding as the trainer / encoder), binary-sorted
     // with dense ids 0..B-1. The distinct-token frame is bounded by
@@ -103,10 +104,9 @@ object TokenizerStore {
       .select((col("merge_rank").cast("long") + lit(baseCount - 1))
         .as("token_id"), col("merged").as("token"),
         lit("merged").as("kind"))
-    base.unionAll(mergedToks)
-      .write.mode("overwrite").parquet(s"$dir/e$epoch-vocab")
+    base.unionAll(mergedToks).write.parquet(s"$dir/$vocabDir")
     gens(dir).publish(gen, "epoch" -> epoch, "rounds" -> rounds,
-      "merges" -> s"e$epoch-merges", "vocab" -> s"e$epoch-vocab")
+      "merges" -> mergesDir, "vocab" -> vocabDir)
   }
 
   /** The committed merge table — [[TextOps.bpeEncodeFrom]]'s loaded

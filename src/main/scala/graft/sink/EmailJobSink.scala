@@ -2,9 +2,11 @@ package graft.sink
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import graft.JobLabel
+import graft.{DirIO, Generations, JobLabel}
 
 /** O14 as an effectively-once batch sink (SURVEY.md §7.4.2): each
   * micro-batch's email jobs written as its own partition of the jobs
@@ -43,74 +45,58 @@ object EmailJobSink {
     }
 
   /** Batch-commit log: the exactly-once foreachBatch pattern. A batch id
-    * is committed by creating a marker file AFTER its writes complete;
-    * `runOnce` skips batches whose marker already exists, so a replay
-    * after a crash between sink-write and checkpoint-commit does nothing
-    * (the per-batch overwrite above already makes the replay safe —
-    * the log makes it also FREE, and gives downstream readers a watermark
-    * of fully-committed batches). Marker creation is atomic at the
-    * filesystem level (create-new); object stores replace this with a
-    * conditional PUT — same protocol. */
+    * is committed by the marker `batch-<id>`, published AFTER its
+    * writes complete through [[graft.Generations.commit]] (temp write,
+    * hard link: atomic, first writer wins); `runOnce` skips a committed
+    * batch, so a replay after a crash between sink-write and
+    * checkpoint-commit does nothing (the per-batch overwrite above
+    * already makes the replay safe — the log makes it also FREE, and
+    * gives downstream readers a watermark of fully-committed batches).
+    *
+    * The log keeps ONE marker: after a commit, the markers below it are
+    * deleted, so the newest marker is the high-water mark and a batch
+    * is committed iff its id is at or below it. That holds because
+    * micro-batch ids commit in increasing order within a stream, as
+    * foreachBatch provides; an id LOWER than the newest marker reads as
+    * committed without running. A crash between the link and the
+    * deletes leaves extra markers below the newest: harmless, the next
+    * commit deletes them. A log an earlier layout wrote (one marker per
+    * batch, or an `hwm` file holding the folded-away maximum, or both)
+    * reads as committed up to the largest id they hold; its next commit
+    * deletes them. Object stores replace the link with a conditional
+    * PUT — same protocol. */
   object TxnLog {
-    /** Committed = explicit marker present OR at/below the compacted
-      * high-water mark. Micro-batch ids commit in order within a
-      * stream, so "id ≤ max committed id" is exactly the replay-skip
-      * predicate the per-batch markers encode — the hwm file is their
-      * lossless compaction. */
-    def committed(logDir: String, batchId: Long): Boolean =
-      Files.exists(Paths.get(logDir, s"batch-$batchId")) ||
-        batchId <= highWaterMark(logDir)
 
-    /** Max batch id folded into the hwm file by [[compact]]; -1 when
-      * no compaction has run. */
+    /** The newest committed batch id: the newest marker, or the `hwm`
+      * file an earlier layout folded its markers into; -1 when no batch
+      * has committed. */
     def highWaterMark(logDir: String): Long = {
-      val p = Paths.get(logDir, "hwm")
-      if (!Files.exists(p)) -1L
-      else scala.util.Try(
-        new String(Files.readAllBytes(p), "UTF-8").trim.toLong).getOrElse(-1L)
+      val legacy = Paths.get(logDir, "hwm")
+      val folded = if (!Files.exists(legacy)) None else Try(
+        new String(Files.readAllBytes(legacy), "UTF-8").trim.toLong).toOption
+      (DirIO.numberedEntries(Paths.get(logDir), "batch-") ++ folded)
+        .maxOption.getOrElse(-1L)
     }
 
-    /** All batch ids with an explicit marker file (excludes ids only
-      * covered by the hwm). */
-    def markerIds(logDir: String): Seq[Long] = {
-      val log = Paths.get(logDir)
-      if (!Files.exists(log)) Seq.empty
-      else {
-        graft.DirIO.numberedEntries(log, "batch-")
-      }
-    }
+    def committed(logDir: String, batchId: Long): Boolean =
+      batchId <= highWaterMark(logDir)
 
-    /** Fold committed markers into the hwm file, then delete every
-      * marker at/below it except those in `retain` (ids whose sidecar
-      * artifacts — e.g. versioned sketch dirs — still exist and are
-      * located via their markers). Without this the log grows one file
-      * per micro-batch for the stream's lifetime. Crash-safe: the hwm
-      * is written to a temp file and atomically moved BEFORE any
-      * marker is deleted, so a crash at any point leaves every id
-      * still provably committed (marker or hwm). */
-    def compact(logDir: String, retain: Set[Long] = Set.empty): Unit = {
-      val ids = markerIds(logDir)
-      if (ids.nonEmpty) {
-        val hwm = math.max(ids.max, highWaterMark(logDir))
-        val tmp = Paths.get(logDir, "hwm.tmp")
-        Files.write(tmp, hwm.toString.getBytes("UTF-8"))
-        Files.move(tmp, Paths.get(logDir, "hwm"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        ids.filter(id => id <= hwm && !retain.contains(id)).foreach { id =>
-          Files.deleteIfExists(Paths.get(logDir, s"batch-$id")); ()
-        }
-      }
-    }
-
-    /** Run `write` iff `batchId` is not yet committed, then commit it.
-      * Returns true when the batch executed, false when skipped. */
+    /** Run `write` iff `batchId` is not yet committed, then commit it and
+      * delete what the new marker supersedes. Returns true when the
+      * batch executed, false when skipped; throws when another writer
+      * committed the same id first. */
     def runOnce(logDir: String, batchId: Long)(write: => Unit): Boolean =
       if (committed(logDir, batchId)) false
       else {
         write
-        Files.createDirectories(Paths.get(logDir))
-        Files.createFile(Paths.get(logDir, s"batch-$batchId"))
+        val log = Paths.get(logDir)
+        if (!Generations.commit(log.resolve(s"batch-$batchId"), ""))
+          throw new IllegalStateException(s"batch $batchId at $logDir was " +
+            "committed by a concurrent writer")
+        DirIO.numberedEntries(log, "batch-").filter(_ < batchId).foreach {
+          id => Files.deleteIfExists(log.resolve(s"batch-$id")); ()
+        }
+        Files.deleteIfExists(log.resolve("hwm"))
         true
       }
   }

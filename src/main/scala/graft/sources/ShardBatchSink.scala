@@ -23,13 +23,16 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    `abort()`ed and their staged files deleted.
   *  - **Driver phase**: `BatchWrite.commit` publishes each staged file
   *    with an atomic same-filesystem rename to
-  *    `shard-<writeId>-<partition>.json`, then writes the manifest
+  *    `shard-<writeId>-<partition>.json`, then commits the manifest
   *    `_manifest-<writeId>` LAST — the job-level commit record listing
-  *    every shard and row count. `abort` deletes the staging
-  *    directory; a crash mid-publish leaves no manifest, so an
-  *    auditing reader can distinguish a torn job (shards without
-  *    manifest) from a committed one — the same marker-is-the-commit
-  *    design as the TxnLog sink (`sink/EmailJobSink.scala`).
+  *    every shard and row count — through [[graft.Generations.commit]]
+  *    (temp write, hard link), so a manifest is complete or absent,
+  *    never torn, and a crash leaves at most a `.`-temp no reader
+  *    lists. `abort` deletes the staging directory; a crash mid-publish
+  *    leaves no manifest, so an auditing reader can distinguish a torn
+  *    job (shards without manifest) from a committed one — the same
+  *    marker-is-the-commit design as the TxnLog sink
+  *    (`sink/EmailJobSink.scala`).
   *
   * The written files are byte-compatible with the read side: one JSON
   * payload per line, so `spark.read.format(shard source).load()` on
@@ -66,6 +69,11 @@ private class ShardBatchWrite(path: String, valueIdx: Int)
       info: PhysicalWriteInfo): DataWriterFactory =
     ShardWriterFactory(path, writeId, valueIdx)
 
+  /** Publishes the staged shards, then the manifest — the job's commit
+    * record — through [[graft.Generations.commit]]: complete or absent,
+    * never torn. A crash before its link leaves shards without a
+    * manifest (a torn job) and at most a `.`-temp, which neither
+    * [[ShardStreamSource.sortedShards]] nor a `_manifest-` scan lists. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: ShardCommitMessage => m }
       .sortBy(_.partitionId)
@@ -78,14 +86,12 @@ private class ShardBatchWrite(path: String, valueIdx: Int)
         StandardCopyOption.ATOMIC_MOVE)
       (dest.getFileName.toString, m.rows)
     }
-    // the manifest is the job-level commit record — written LAST, so
-    // its absence marks a torn job to any auditor
     val manifest = published
       .map { case (f, n) => s"""{"shard":"$f","rows":$n}""" }
       .mkString("", "\n", "\n")
-    Files.write(dir.resolve(s"_manifest-$writeId"),
-      manifest.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE_NEW)
+    if (!graft.Generations.commit(dir.resolve(s"_manifest-$writeId"), manifest))
+      throw new IllegalStateException(s"write $writeId at $path: manifest " +
+        "already committed")
     cleanupStaging()
   }
 

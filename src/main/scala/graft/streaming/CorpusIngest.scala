@@ -701,20 +701,16 @@ object CorpusIngest {
               // double every count, and doubled counts OVERCOUNT,
               // the one drift direction that silently drops recall
               // (a hash at occCap/2 true occurrences reads as
-              // capped). The atomic marker create admits exactly one
-              // persister; losers (and a winner that crashed between
-              // marker and append — permanent benign undercount,
-              // visible in substringIndexAudit) still USE the
-              // in-flight recount for this batch's filter.
+              // capped). The first-writer-wins marker commit admits
+              // exactly one persister; losers (and a winner that
+              // crashed between marker and append — permanent benign
+              // undercount, visible in substringIndexAudit) still USE
+              // the in-flight recount for this batch's filter.
               val init = storedWins.groupBy(col("h"))
                 .agg(count(lit(1)).as("cnt")).localCheckpoint()
-              val marker = Paths.get(corpusDir, ".wincnt_bootstrap")
-              val won =
-                try { Files.createFile(marker); true }
-                catch {
-                  case _: java.nio.file.FileAlreadyExistsException => false
-                }
-              if (won) init.write.mode(SaveMode.Append).parquet(cntDir)
+              if (Generations.commit(
+                  Paths.get(corpusDir, ".wincnt_bootstrap"), ""))
+                init.write.mode(SaveMode.Append).parquet(cntDir)
               init.select(col("h"), col("cnt").as("nocc"))
           }
           val spans = graft.ext.TextOps.crossDupSpansWithCounts(
@@ -1134,13 +1130,20 @@ object CorpusIngest {
 
   /** Versioned micro-batch publish: build the merged frame from the
     * latest COMMITTED version, write it to an immutable
-    * <prefix>-<batchId> dir, then commit the TxnLog marker. A crash
-    * mid-write leaves the previous committed version untouched — an
-    * in-place Overwrite instead deletes the old files before the new
-    * job commits, so a crash there (or a concurrent reader that
-    * listed the old files) loses the sketch. The merged frame is
-    * pinned (localCheckpoint) before the write — the
-    * read-your-own-write hazard pin the ingest paths share. */
+    * <prefix>-<batchId> dir, then commit the batch through
+    * [[TxnLog.runOnce]]. The versions are the <prefix>-<id> dirs at or
+    * below the log's newest committed id: a dir above it is a torn
+    * write (its marker never landed), invisible and overwritten by the
+    * batch's replay. A crash mid-write therefore leaves the previous
+    * committed version untouched — an in-place Overwrite instead
+    * deletes the old files before the new job commits, so a crash
+    * there (or a concurrent reader that listed the old files) loses
+    * the sketch. The merged frame is pinned (localCheckpoint) before
+    * the write — the read-your-own-write hazard pin the ingest paths
+    * share. After the commit, every version but the two newest is
+    * deleted (the older one guards a reader that listed it just before
+    * this batch published); versions are sketch-sized (k rows /
+    * depth·width rows), so retention cost is trivial either way. */
   private def mergePublish(spark: SparkSession, sketchDir: String,
       prefix: String, batchId: Long)
       (merge: Option[DataFrame] => DataFrame): Unit = {
@@ -1150,40 +1153,24 @@ object CorpusIngest {
       merged.write.mode(SaveMode.Overwrite)
         .parquet(s"$sketchDir/$prefix-$batchId")
     }
-    // best-effort compaction AFTER commit: keep the two newest
-    // committed versions (the -1 guards a reader that listed the
-    // previous latest just before this batch published); the version
-    // dirs are sketch-sized (k rows / depth·width rows), so retention
-    // cost is trivial either way
-    val all = committedIds(sketchDir, prefix).sorted
-    all.dropRight(2).foreach { id =>
+    committedIds(sketchDir, prefix).dropRight(2).foreach { id =>
       scala.util.Try(
         DirIO.deleteRecursively(Paths.get(s"$sketchDir/$prefix-$id")))
     }
-    // ... and fold the now-dirless batch markers into the TxnLog
-    // high-water mark (retaining markers for the surviving version
-    // dirs, which committedIds locates through them) — otherwise _txn
-    // grows one marker file per micro-batch for the stream's lifetime
-    scala.util.Try(
-      TxnLog.compact(s"$sketchDir/_txn", retain = all.takeRight(2).toSet))
-    ()
   }
 
   private def committedIds(sketchDir: String, prefix: String): Seq[Long] = {
-    val log = Paths.get(s"$sketchDir/_txn")
-    if (!Files.exists(log)) Seq.empty
-    else {
-      graft.DirIO.numberedEntries(log, "batch-")
-        .filter(id => Files.exists(Paths.get(s"$sketchDir/$prefix-$id")))
-    }
+    val newest = TxnLog.highWaterMark(s"$sketchDir/_txn")
+    DirIO.numberedEntries(Paths.get(sketchDir), s"$prefix-")
+      .filter(_ <= newest)
   }
 
   /** The latest COMMITTED version of a sketch frame, if any batch has
-    * published one (marker present AND version dir present — a torn
-    * write without its marker is invisible). */
+    * published one (a torn write above the newest marker is
+    * invisible). */
   private def readLatest(spark: SparkSession, sketchDir: String,
       prefix: String): Option[DataFrame] =
-    committedIds(sketchDir, prefix).sorted.lastOption.map(id =>
+    committedIds(sketchDir, prefix).lastOption.map(id =>
       spark.read.parquet(s"$sketchDir/$prefix-$id"))
 
   /** The latest committed KMV mins frame ([[updateKmvSketch]]). */
@@ -1202,14 +1189,4 @@ object CorpusIngest {
         col("id").as("k"), col("id").as("vk"),
         col("id").cast("double").as("n_distinct_est"))
     }
-
-  /** Streaming entry for the sketch-maintenance path. */
-  def startKmv(docs: DataFrame, sketchDir: String,
-      checkpointDir: String, k: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        updateKmvSketch(batch, batchId, sketchDir, k); ()
-      }
-      .start()
 }

@@ -36,22 +36,6 @@ object EventStream extends Serializable {
         col("w.start").as("window_start"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** Session windows (30-minute gap) per user under the same watermark. */
-  def userSessions(events: DataFrame, lateness: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("n_events"))
-
-  /** Streaming dedup: first event per (user, type) within the watermark
-    * horizon — dropDuplicatesWithinWatermark keeps state bounded. */
-  def dedupedEvents(events: DataFrame, lateness: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-
   /** Streaming funnel core: per-user ordered-stage progression as a
     * keyed state machine ([[StageEvent]] buffer + event-time timeout),
     * the streaming form of [[graft.ext.EventOps.funnel]]'s join chain.

@@ -241,16 +241,13 @@ object StreamPipeline {
   /** Runs `write` for a batch the sink's commit log (`_txn` under the
     * jobs dir, underscore-prefixed so parquet readers skip it) has not
     * seen, over the batch cached for the length of the call. A replayed
-    * batch id is skipped outright, with no job. After a commit the log
-    * is compacted, so it holds the high-water mark and no per-batch
-    * marker. */
+    * batch id is skipped outright, with no job. The log holds one
+    * marker, the newest committed batch id. */
   private def onceWithLog(batch: Dataset[StreamOutcome], batchId: Long,
       jobsDir: String)(write: DataFrame => Unit): Unit = {
     val df = batch.toDF().cache()
-    val log = s"$jobsDir/_txn"
-    try {
-      if (TxnLog.runOnce(log, batchId)(write(df))) TxnLog.compact(log)
-    } finally df.unpersist()
+    try { TxnLog.runOnce(s"$jobsDir/_txn", batchId)(write(df)); () }
+    finally df.unpersist()
   }
 
   private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"

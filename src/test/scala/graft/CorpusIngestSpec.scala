@@ -787,10 +787,12 @@ class CorpusIngestSpec extends SparkSpec {
         .map(i => (i.toLong, s"t$i")).toDF("doc_id", "text")
       CorpusIngest.updateKmvSketch(batch, b.toLong, sketchDir, k)
     }
-    // mergePublish compacts as it goes: only markers for the retained
-    // version dirs survive; everything older is folded into the hwm
-    assert(TxnLog.markerIds(logDir).sorted == Seq(4L, 5L))
-    assert(TxnLog.highWaterMark(logDir) >= 3L)
+    // the log keeps one marker, the newest batch id, and mergePublish
+    // keeps the two newest version dirs, found without markers
+    assert(DirIO.listNames(Paths.get(logDir)) == List("batch-5"))
+    assert(TxnLog.highWaterMark(logDir) == 5L)
+    assert(DirIO.listNames(Paths.get(sketchDir)).filter(_.startsWith("mins-"))
+      .sorted == List("mins-4", "mins-5"))
     // every historical batch id still reads as committed (replay skip)
     (0 until 6).foreach(b => assert(TxnLog.committed(logDir, b.toLong)))
     assert(!TxnLog.committed(logDir, 6L))
@@ -801,7 +803,7 @@ class CorpusIngestSpec extends SparkSpec {
       Seq((0L, "t0")).toDF("doc_id", "text"), 0L, sketchDir, k)
     assert(CorpusIngest.readKmvSketch(spark, sketchDir).get
       .orderBy("hv").as[Long].collect().toSeq == sketchBefore)
-    // readLatest still locates the newest version through its marker
+    // readLatest still locates the newest version through the marker
     val whole = (0 until 60).map(i => s"t$i").toDF("text")
       .select(org.apache.spark.sql.functions.conv(
         org.apache.spark.sql.functions.substring(

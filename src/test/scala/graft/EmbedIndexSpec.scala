@@ -36,6 +36,9 @@ class EmbedIndexSpec extends SparkSpec {
   private def searchSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
 
+  /** A data-dir name without its writer nonce ([[Generations.fresh]]). */
+  private def unnonced(name: String) = name.replaceAll("-[0-9a-f]+$", "")
+
   test("an old-format manifest is upgradable THROUGH build(), not a dead end") {
     // simulate a v1 (pre-epoch) index: a committed manifest without the
     // current format key. Readers must fail loudly naming the remedy;
@@ -118,8 +121,8 @@ class EmbedIndexSpec extends SparkSpec {
     EmbedIndex.build(all.filter(col("vec_id") < 20), dir, m = 2, dsub = 2, ksub = 4)
     EmbedIndex.append(all.filter(col("vec_id") >= 20 && col("vec_id") < 30), dir)
     EmbedIndex.append(all.filter(col("vec_id") >= 30), dir)
-    assert(EmbedIndex.manifest(dir).get.segs ==
-      Seq("e0-seg-0", "e0-seg-1", "e0-seg-2"))
+    val appended = EmbedIndex.manifest(dir).get.segs
+    assert(appended.map(unnonced) == Seq("e0-seg-0", "e0-seg-1", "e0-seg-2"))
     val st = EmbedIndex.load(spark, dir)
     assert(st.codes.select("vec_id").distinct().count() == 40)
     // latest sums cover the whole corpus
@@ -138,12 +141,10 @@ class EmbedIndexSpec extends SparkSpec {
     val manC = EmbedIndex.manifest(dir).get
     // the fold lives in the cseg namespace; the BATCH high-water mark
     // is untouched (compaction must never consume append segment ids)
-    assert(manC.segs == Seq("e0-cseg-3") && manC.high == 2L)
+    assert(manC.segs.map(unnonced) == Seq("e0-cseg-3") && manC.high == 2L)
     assert(searchSet(EmbedIndex.search(spark, dir, queries)) == before)
     EmbedIndex.vacuum(dir, graceMs = 0L)
-    assert(!Files.exists(Paths.get(dir, "e0-seg-0")) &&
-      !Files.exists(Paths.get(dir, "e0-seg-1")) &&
-      !Files.exists(Paths.get(dir, "e0-seg-2")))
+    assert(appended.forall(s => !Files.exists(Paths.get(dir, s))))
     assert(searchSet(EmbedIndex.search(spark, dir, queries)) == before)
     // a replayed stream batch whose segment was compacted away is still
     // recognized as committed (the check is against `high`, not the
@@ -183,6 +184,7 @@ class EmbedIndexSpec extends SparkSpec {
     val queries = all.filter(col("vec_id") % 97 === 0)
       .select("vec_id", "embedding")
     val gen0 = searchSet(EmbedIndex.search(spark, dir, queries))
+    val man0 = EmbedIndex.manifest(dir).get
     // retrain-triggered rebuild over the full corpus: a NEW generation
     // under a NEW epoch prefix — the old generation's data dirs are
     // untouched until vacuum
@@ -204,8 +206,8 @@ class EmbedIndexSpec extends SparkSpec {
     assert(EmbedIndex.manifest(dir).get.high == 1L)
     // vacuum reclaims the superseded epoch; gen 0 then fails loudly
     EmbedIndex.vacuum(dir, graceMs = 0L)
-    assert(!Files.exists(Paths.get(dir, "e0-seg-0")) &&
-      !Files.exists(Paths.get(dir, "e0-cents")))
+    assert((man0.segs :+ man0.cents)
+      .forall(s => !Files.exists(Paths.get(dir, s))))
     intercept[IllegalArgumentException] {
       EmbedIndex.loadAt(spark, dir, gen = 0)
     }
@@ -240,6 +242,37 @@ class EmbedIndexSpec extends SparkSpec {
     }
   }
 
+  test("two builders racing one empty index: every round's committed generation serves exactly the winner's rows") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_idx_race")
+    val ranges = Seq(0L until 20L, 20L until 40L)
+    val rows = ranges.map(r =>
+      fixture.filter(col("vec_id") >= r.start && col("vec_id") < r.end))
+    val won = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val rounds = 8
+    val (_, none) = GenerationsSpec.race(root, rounds) { (target, body) =>
+      val w = body.stripPrefix("writer-").toInt
+      try {
+        EmbedIndex.build(rows(w), target.toString, m = 2, dsub = 2, ksub = 4)
+        won.add(target.toString -> w)
+        true
+      } catch {
+        case e: IllegalStateException
+            if e.getMessage.contains("concurrent builder") => false
+      }
+    }
+    assert(none == 0, s"$none rounds committed no build")
+    (0 until rounds).foreach { r =>
+      val dir = root.resolve(f"$r%08d").toString
+      val winners = won.toArray(Array.empty[(String, Int)])
+        .collect { case (`dir`, w) => ranges(w).toSet }
+      val served = EmbedIndex.load(spark, dir).codes
+        .select("vec_id").as[Long].collect().toSet
+      assert(winners.contains(served), s"round $r serves ${served.toSeq.sorted}")
+    }
+  }
+
   test("a torn append (data dirs without a manifest, abandoned manifest temp) is invisible") {
     import org.apache.spark.sql.functions.col
     val all = fixture
@@ -257,7 +290,7 @@ class EmbedIndexSpec extends SparkSpec {
     Files.write(Paths.get(dir, "_commits", ".manifest-9.tmp"),
       "epoch=0\nhigh=9\nm=2\ndsub=2\ncents=e0-cents\nsums=e0-sums-9\nsegs=e0-seg-9\n"
         .getBytes("UTF-8"))
-    assert(EmbedIndex.manifest(dir).get.segs == Seq("e0-seg-0"))
+    assert(EmbedIndex.manifest(dir).get.segs.map(unnonced) == Seq("e0-seg-0"))
     assert(searchSet(EmbedIndex.search(spark, dir, queries)) == before)
   }
 
@@ -281,7 +314,8 @@ class EmbedIndexSpec extends SparkSpec {
     val afterFirst = EmbedIndex.load(spark, dir).codes.count()
     // crash-replay of the same micro-batch: same id, same data
     EmbedIndex.appendBatch(delta, dir, batchId = 0)
-    assert(EmbedIndex.manifest(dir).get.segs == Seq("e0-seg-0", "e0-seg-1"))
+    assert(EmbedIndex.manifest(dir).get.segs.map(unnonced) ==
+      Seq("e0-seg-0", "e0-seg-1"))
     assert(EmbedIndex.load(spark, dir).codes.count() == afterFirst)
     // a batch id AHEAD of the high-water mark (skipped batches — a
     // desynced checkpoint) must fail loudly, not leave a silent gap

@@ -82,13 +82,13 @@ class EndToEndStreamSpec extends SparkSpec {
 
     // every batch id committed, and the restarted query continued the
     // id sequence instead of restarting it, which would have been
-    // skipped as replays. The sink compacts its commit log after each
-    // commit, so the log is one high-water mark at q2's last batch id.
+    // skipped as replays. The sink's commit log keeps one marker, the
+    // high-water mark at q2's last batch id.
     val last1 = q1.lastProgress.batchId
     val last2 = q2.lastProgress.batchId
     assert(last2 > last1, s"q1 ended at batch $last1, q2 at $last2")
     val log = s"$base/jobs/_txn"
-    assert(DirIO.listNames(Paths.get(log)) == List("hwm"))
+    assert(DirIO.listNames(Paths.get(log)) == List(s"batch-$last2"))
     assert(graft.sink.EmailJobSink.TxnLog.highWaterMark(log) == last2)
   }
 

@@ -253,6 +253,31 @@ class ShardSourceSpec extends SparkSpec {
     assert(back.select("shard_file").distinct().count() == 4)
   }
 
+  test("batch write: a manifest temp left by a crashed commit is invisible and is not a manifest") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sink-torn").toString
+    val values = (1 to 6).map(i => s"""{"k":$i}""")
+    values.toDF("value").repartition(2)
+      .write.format(classOf[ShardStreamSource].getName)
+      .option("path", dir).mode("append").save()
+    assert(!DirIO.listNames(Paths.get(dir)).exists(_.startsWith("._manifest-")))
+    // a second job that died after writing its manifest temp and
+    // before linking it (the name Generations.commit gives its temp)
+    val crashed = java.util.UUID.randomUUID()
+    Files.write(Paths.get(dir, s"._manifest-$crashed.tmp-$crashed"),
+      s"""{"shard":"shard-$crashed-00000.json","rows":1}\n""".getBytes("UTF-8"))
+    val names = DirIO.listNames(Paths.get(dir))
+    assert(names.count(_.startsWith("_manifest-")) == 1, names)
+    assert(ShardStreamSource.sortedShards(dir)
+      .map(p => Paths.get(p).getFileName.toString)
+      .count(_.startsWith("shard-")) == 2)
+    assert(ShardStreamSource.sortedShards(dir).size == 2)
+    val back = spark.read.format(classOf[ShardStreamSource].getName)
+      .option("path", dir).load()
+    assert(back.select("value").as[String].collect().sorted
+      === values.sorted.toArray)
+  }
+
   test("batch write: extra columns are accepted, only `value` lands in the shard") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-sink2").toString

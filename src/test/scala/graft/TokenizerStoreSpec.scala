@@ -80,7 +80,7 @@ class TokenizerStoreSpec extends SparkSpec {
       "format=1\nepoch=1\nrounds=2\nmerges=e1-merges\nvocab=e1-vocab\n"
         .getBytes("UTF-8"))
     val m = TokenizerStore.manifest(dir).get
-    assert(m.gen == 0L && m.merges == "e0-merges", m)
+    assert(m.gen == 0L && m.merges.startsWith("e0-merges-"), m)
     assert(TokenizerStore.merges(spark, dir)
       .collect().map(_.toSeq).toSet == before)
   }

@@ -13,13 +13,14 @@ if nul=$(git grep -l -P '\x00' -- '*.scala'); then
   exit 1
 fi
 # An unclosed Files.list / Files.walk stream keeps its file descriptor
-# open, and a hand-rolled link commit drifts from the shared first-
-# writer-wins protocol: the three calls live in DirIO.scala and
-# Generations.scala only.
+# open, and a hand-rolled commit record (link, create-new marker,
+# replacing move) drifts from the shared first-writer-wins protocol:
+# these calls live in DirIO.scala and Generations.scala only.
 if raw=$(git grep -n -e 'Files\.list(' -e 'Files\.walk(' -e 'Files\.createLink(' \
+    -e 'Files\.createFile(' -e 'REPLACE_EXISTING' \
     -- src/main ':!src/main/scala/graft/DirIO.scala' \
     ':!src/main/scala/graft/Generations.scala'); then
-  echo "Files.list/walk/createLink outside DirIO and Generations (use them):" >&2
+  echo "Files.list/walk/createLink/createFile or REPLACE_EXISTING outside DirIO and Generations (use them):" >&2
   echo "$raw" >&2
   exit 1
 fi
