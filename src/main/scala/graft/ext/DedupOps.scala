@@ -276,19 +276,22 @@ object DedupOps {
   /** Exact-Jaccard verification of externally generated candidate
     * pairs (doc_a, doc_b) against the docs frame — the public bipartite
     * face of the relational verify stage. `docs` must contain every id
-    * the pairs reference. */
+    * the pairs reference. `cache` caches the shingle sets; a caller
+    * that must release them (a per-micro-batch step) passes its own. */
   def verifyJaccardPairs(cand: DataFrame, docs: DataFrame,
-      threshold: Double): DataFrame =
-    jaccardVerify(cand, withShingleSets(docs).cache(), threshold)
+      threshold: Double,
+      cache: DataFrame => DataFrame = _.cache()): DataFrame =
+    jaccardVerify(cand, cache(withShingleSets(docs)), threshold)
 
-  def minhashNearDups(documents: DataFrame, threshold: Double = 0.5): DataFrame = {
+  def minhashNearDups(documents: DataFrame, threshold: Double = 0.5,
+      cache: DataFrame => DataFrame = _.cache()): DataFrame = {
     // cache: the band self-join and the verify stage reference these
     // frames from several subtrees, and Spark's broadcast-subtree jobs
     // would otherwise recompute the whole interpreted shingle+hash
     // pipeline once per reference (3× measured). The cached plan is also
     // shared with dedup_ngram / text_fingerprint in the same session.
     minhashNearDupsFrom(
-      withShingleSets(documents).cache(), bandKeys(documents).cache(), threshold)
+      cache(withShingleSets(documents)), cache(bandKeys(documents)), threshold)
   }
 
   /** [[minhashNearDups]] over precomputed shingle-set and band-key
@@ -361,9 +364,10 @@ object DedupOps {
     * doc per component, drop the rest).
     *
     * Deterministic: component id = min doc_id of the component. */
-  def nearDupClusters(documents: DataFrame, threshold: Double = 0.5): DataFrame =
+  def nearDupClusters(documents: DataFrame, threshold: Double = 0.5,
+      cache: DataFrame => DataFrame = _.cache()): DataFrame =
     nearDupClustersFrom(documents.select(col("doc_id")),
-      minhashNearDups(documents, threshold))
+      minhashNearDups(documents, threshold, cache))
 
   /** [[nearDupClusters]] over a precomputed verified pair frame —
     * clustering as a cheap derivation of the materialized pair output,

@@ -268,14 +268,6 @@ object EmbedOps {
       .select(col("vec_a"), col("vec_b"), col("sig"), col("cosine"))
   }
 
-  /** (vec_id, sig) — the hyperplane-signature keys a stored LSH index
-    * persists; streaming ingestion probes new vectors' keys against it
-    * ([[graft.streaming.CorpusIngest.ingestBatchSemantic]]), the exact
-    * analog of [[DedupOps.bandKeys]] for the embedding space. */
-  def signatureKeys(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), quantized(col("embedding")).as("q"))
-      .select(col("vec_id"), lshSignature(col("q")).as("sig"))
-
   /** Exact-cosine verification of candidate (vec_a, vec_b) pairs
     * against the given vectors — the shared verify stage for any
     * candidate generator (stored-index probe, band join). Only

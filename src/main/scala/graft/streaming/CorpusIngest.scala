@@ -2,12 +2,14 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.{DirIO, Generations}
+import graft.ext.{CentroidStore, DedupOps, EmbedOps, TextOps}
 import graft.sink.EmailJobSink.TxnLog
 
 /** Continuous corpus ingestion with incremental dedup — the streaming
@@ -23,7 +25,10 @@ import graft.sink.EmailJobSink.TxnLog
   * checkpoint-commit is skipped; even without the marker the anti-join
   * re-suppresses previously appended content — the two layers mirror
   * the reference's dedupId + conditional-write pairing (index.js:572,
-  * 448-497).
+  * 448-497). Every ingest layer commits through one step,
+  * [[appendOnce]]: a layer is a decision plus the writes of its rows.
+  * A stream runs a layer per micro-batch with
+  * `writeStream.foreachBatch`.
   *
   * Scale posture: the anti-join probe reads ONLY the digest column of
   * the corpus (column pruning → a 16-byte-per-doc scan); at 100 TB the
@@ -33,35 +38,60 @@ import graft.sink.EmailJobSink.TxnLog
   */
 object CorpusIngest {
 
-  /** Dedup + anti-join + append for one micro-batch; returns rows
-    * appended (0 when the batch replays or brings nothing new). */
-  def ingestBatch(batch: DataFrame, batchId: Long, corpusDir: String): Long = {
-    val spark = batch.sparkSession
-    val dataDir = s"$corpusDir/data"
-    val logDir = s"$corpusDir/_txn"
-    var appended = 0L
-    TxnLog.runOnce(logDir, batchId) {
-      val withDigest = batch
-        .withColumn("content_md5", md5(col("text").cast("binary")))
-      val firstPerDigest = withDigest
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("content_md5")).orderBy(col("doc_id"))))
-        .filter(col("rn") === 1).drop("rn")
-      // pinned before writing, like ingestBatchNear: the count and the
-      // append must act on ONE evaluation of the lazy decision
-      val fresh = (seenDigests(spark, dataDir) match {
-        case Some(seen) =>
-          firstPerDigest.join(seen, Seq("content_md5"), "left_anti")
-        case None => firstPerDigest
-      }).localCheckpoint()
-      appended = fresh.count()
-      if (appended > 0) fresh.write.mode(SaveMode.Append).parquet(dataDir)
-    }
-    appended
+  /** The one effectively-once append step of every ingest layer.
+    * Unless `batchId` is already committed under `logDir`, it evaluates
+    * `decide`, pins the decision (localCheckpoint), counts it, and runs
+    * `write` only when the count is above 0; the batch marker commits
+    * after the write. The pin makes the count and every write act on
+    * ONE evaluation: the decision's lazy plan reads the dirs the writes
+    * append to, so a second write would otherwise re-evaluate it after
+    * the first and see its own rows (the read-your-own-write hazard).
+    * `decide` caches the frames it reuses through the function it is
+    * given; they are released when the step ends, also when it throws.
+    * A decision of None (nothing to decide against) appends nothing
+    * and runs no job. Returns the rows appended, 0 for a replay. */
+  private def appendOnce(logDir: String, batchId: Long)(
+      decide: (DataFrame => DataFrame) => Option[DataFrame])(
+      write: DataFrame => Unit): Long = {
+    val cached = ArrayBuffer.empty[DataFrame]
+    var n = 0L
+    try TxnLog.runOnce(logDir, batchId) {
+      decide { df => cached += df.cache(); df }.foreach { decision =>
+        val fresh = decision.localCheckpoint()
+        n = fresh.count()
+        if (n > 0) write(fresh)
+      }
+    } finally cached.foreach(_.unpersist())
+    n
   }
 
-  private def seenDigests(spark: SparkSession, dataDir: String): Option[DataFrame] =
-    DirIO.readParquet(spark, dataDir).map(_.select(col("content_md5")).distinct())
+  private def append(rows: DataFrame, dir: String): Unit =
+    rows.write.mode(SaveMode.Append).parquet(dir)
+
+  /** `rows` without those whose `key` is in `stored`. */
+  private def minus(rows: DataFrame, stored: Option[DataFrame],
+      key: String): DataFrame =
+    stored.fold(rows)(s => rows.join(s, Seq(key), "left_anti"))
+
+  /** The exact-digest step: one canonical doc per content digest
+    * within the batch (min doc_id), minus the digests `dataDir`
+    * already stores. */
+  private def newContent(batch: DataFrame, dataDir: String): DataFrame =
+    minus(batch
+      .withColumn("content_md5", md5(col("text").cast("binary")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("content_md5")).orderBy(col("doc_id"))))
+      .filter(col("rn") === 1).drop("rn"),
+      DirIO.readParquet(batch.sparkSession, dataDir)
+        .map(_.select(col("content_md5")).distinct()),
+      "content_md5")
+
+  /** Dedup + anti-join + append for one micro-batch; returns rows
+    * appended (0 when the batch replays or brings nothing new). */
+  def ingestBatch(batch: DataFrame, batchId: Long, corpusDir: String): Long =
+    appendOnce(s"$corpusDir/_txn", batchId) { _ =>
+      Some(newContent(batch, s"$corpusDir/data"))
+    }(append(_, s"$corpusDir/data"))
 
   // ------------------------------------------------------------------
   // REMOVE-event excision (r19 — [[graft.pipeline.Tombstones]]'s
@@ -85,21 +115,11 @@ object CorpusIngest {
     * already tombstoned). Returns markers appended. */
   def tombstoneDocs(markers: DataFrame, batchId: Long,
       corpusDir: String): Long = {
-    val spark = markers.sparkSession
     val tombsDir = s"$corpusDir/tombs"
-    val logDir = s"$corpusDir/_txn_tombs"
-    var appended = 0L
-    TxnLog.runOnce(logDir, batchId) {
-      val ids = markers.select(col("doc_id")).distinct()
-      val fresh = (DirIO.readParquet(spark, tombsDir) match {
-        case Some(t) => ids.join(t, Seq("doc_id"), "left_anti")
-        case None => ids
-      }).localCheckpoint()
-      appended = fresh.count()
-      if (appended > 0)
-        fresh.write.mode(SaveMode.Append).parquet(tombsDir)
-    }
-    appended
+    appendOnce(s"$corpusDir/_txn_tombs", batchId) { _ =>
+      Some(minus(markers.select(col("doc_id")).distinct(),
+        DirIO.readParquet(markers.sparkSession, tombsDir), "doc_id"))
+    }(append(_, tombsDir))
   }
 
   /** The live view of a corpus under logical excision: data/ minus
@@ -138,35 +158,16 @@ object CorpusIngest {
     val spark = batch.sparkSession
     val dataDir = s"$corpusDir/data"
     val bandsDir = s"$corpusDir/bands"
-    val logDir = s"$corpusDir/_txn"
-    var appended = 0L
-    TxnLog.runOnce(logDir, batchId) {
-      val withDigest = batch
-        .withColumn("content_md5", md5(col("text").cast("binary")))
-      val firstPerDigest = withDigest
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("content_md5")).orderBy(col("doc_id"))))
-        .filter(col("rn") === 1).drop("rn")
-      val exactNew = seenDigests(spark, dataDir) match {
-        case Some(seen) =>
-          firstPerDigest.join(seen, Seq("content_md5"), "left_anti")
-        case None => firstPerDigest
-      }
+    appendOnce(s"$corpusDir/_txn", batchId) { cache =>
+      val exactNew = newContent(batch, dataDir)
       // in-batch near dedup: keep each cluster's canonical (min doc_id)
-      val canon = exactNew.join(
-        graft.ext.DedupOps.nearDupClusters(exactNew, threshold)
+      val canon = cache(exactNew.join(
+        DedupOps.nearDupClusters(exactNew, threshold, cache)
           .filter(col("is_canonical")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi").cache()
-      // localCheckpoint PINS the decision before any write: `fresh` is
-      // lazy and its plan READS dataDir, so the second write (band
-      // keys) would otherwise re-evaluate it after the first append —
-      // at which point the just-written docs fail their own digest
-      // anti-join and their band keys are silently never indexed
-      // (read-your-own-write hazard; caught by the spec's band-index
-      // assertion).
-      val fresh = (DirIO.readParquet(spark, bandsDir) match {
+        Seq("doc_id"), "left_semi"))
+      Some(DirIO.readParquet(spark, bandsDir) match {
         case Some(storedBands) =>
-          val cand = graft.ext.DedupOps.bandKeys(canon)
+          val cand = DedupOps.bandKeys(canon)
             .select(col("band"), col("doc_id").as("doc_a"))
             .join(storedBands.select(col("band"), col("doc_id").as("doc_b")),
               Seq("band"))
@@ -175,97 +176,26 @@ object CorpusIngest {
           val corpusCand = spark.read.parquet(dataDir)
             .join(cand.select(col("doc_b").as("doc_id")).distinct(),
               Seq("doc_id"), "left_semi")
-          val dupIds = graft.ext.DedupOps.verifyJaccardPairs(
+          val dupIds = DedupOps.verifyJaccardPairs(
               cand,
               canon.select(col("doc_id"), col("text"))
                 .unionByName(corpusCand.select(col("doc_id"), col("text"))),
-              threshold)
+              threshold, cache)
             .select(col("doc_a").as("doc_id")).distinct()
           canon.join(dupIds, Seq("doc_id"), "left_anti")
         case None => canon
-      }).localCheckpoint()
-      appended = fresh.count()
-      if (appended > 0) {
-        fresh.write.mode(SaveMode.Append).parquet(dataDir)
-        graft.ext.DedupOps.bandKeys(fresh)
-          .write.mode(SaveMode.Append).parquet(bandsDir)
-      }
-      canon.unpersist()
+      })
+    } { fresh =>
+      append(fresh, dataDir)
+      append(DedupOps.bandKeys(fresh), bandsDir)
     }
-    appended
-  }
-
-  /** Semantic (embedding-space) ingestion: the NEAR layer of
-    * [[ingestBatchNear]] transplanted to vectors. Per micro-batch:
-    * in-batch semantic dedup (one canonical vector per LSH-candidate +
-    * cosine-verified cluster), then a probe of the corpus's STORED
-    * hyperplane-signature index ([[graft.ext.EmbedOps.signatureKeys]],
-    * appended at every ingest) — only corpus vectors colliding on a
-    * signature are re-read for exact cosine verification. Incoming
-    * vectors with a verified corpus near-dup are dropped; survivors
-    * append to data/ and their signature keys to sigs/.
-    *
-    * Same effectively-once layering as the lexical path: TxnLog batch
-    * marker for replay skip, and the stored-index probe re-suppresses
-    * previously appended content even without it.
-    *
-    * Scale posture: |batch| signature probes against an indexed
-    * (sig → vec) table; candidate re-reads bounded by collisions;
-    * never a corpus rescan. */
-  def ingestBatchSemantic(batch: DataFrame, batchId: Long, indexDir: String,
-      threshold: Double = Double.NaN): Long = {
-    val spark = batch.sparkSession
-    val thr = if (threshold.isNaN)
-      graft.GraftConf.cosineThreshold(spark) else threshold
-    val dataDir = s"$indexDir/data"
-    val sigsDir = s"$indexDir/sigs"
-    val logDir = s"$indexDir/_txn"
-    var appended = 0L
-    TxnLog.runOnce(logDir, batchId) {
-      val canon = batch.join(
-        graft.ext.EmbedOps.nearDupClusters(batch, thr)
-          .filter(col("is_canonical")).select(col("vec_id")),
-        Seq("vec_id"), "left_semi").cache()
-      // localCheckpoint pins the decision before the two appends (the
-      // same read-your-own-write hazard as ingestBatchNear)
-      val fresh = (DirIO.readParquet(spark, sigsDir) match {
-        case Some(storedSigs) =>
-          val cand = graft.ext.EmbedOps.signatureKeys(canon)
-            .select(col("sig"), col("vec_id").as("vec_a"))
-            .join(storedSigs.select(col("sig"), col("vec_id").as("vec_b")),
-              Seq("sig"))
-            .select(col("vec_a"), col("vec_b")).distinct()
-          val corpusCand = spark.read.parquet(dataDir)
-            .join(cand.select(col("vec_b").as("vec_id")).distinct(),
-              Seq("vec_id"), "left_semi")
-          val dupIds = graft.ext.EmbedOps.verifyCosinePairs(
-              cand,
-              canon.select(col("vec_id"), col("embedding"))
-                .unionByName(corpusCand.select(col("vec_id"), col("embedding"))),
-              thr)
-            .select(col("vec_a").as("vec_id")).distinct()
-          canon.join(dupIds, Seq("vec_id"), "left_anti")
-        case None => canon
-      }).localCheckpoint()
-      appended = fresh.count()
-      if (appended > 0) {
-        fresh.write.mode(SaveMode.Append).parquet(dataDir)
-        graft.ext.EmbedOps.signatureKeys(fresh)
-          .write.mode(SaveMode.Append).parquet(sigsDir)
-      }
-      canon.unpersist()
-    }
-    appended
   }
 
   /** Semantic ingestion against a PERSISTED
     * [[graft.ext.CentroidStore]] — incremental SemDeDup: the batch
     * `embed_semdedup` query's EXACT geometry (frozen k-means
     * centroids, quantized cosine, semDedupFrom's keep rule) applied
-    * per micro-batch, replacing [[ingestBatchSemantic]]'s
-    * hyperplane-signature stand-in whose random projections are
-    * unrelated to the clustering the batch query dedups within.
-    * Per micro-batch:
+    * per micro-batch. Per micro-batch:
     *
     *   1. replay-drain against the append-only corpus's vec ids
     *      (vec_id is the IMMUTABLE identity, the same contract as
@@ -331,7 +261,6 @@ object CorpusIngest {
       graft.GraftConf.cosineThreshold(spark) else threshold
     val dataDir = s"$indexDir/data"
     val repsDir = s"$indexDir/reps"
-    val logDir = s"$indexDir/_txn"
     // the stored centroid_id column is only meaningful under ONE
     // frozen geometry: after a RETRAIN (a fresh CentroidStore epoch),
     // new batches would assign against epoch E+1 while stored rows
@@ -341,13 +270,22 @@ object CorpusIngest {
     // hole, the substring path's mixed-width-window class). Reject
     // loudly; the migration is [[rebucketSemanticCentroid]] into a
     // fresh dir (retrain-as-epoch, serving dirs included).
-    val epoch = graft.ext.CentroidStore.manifest(centroidDir)
+    val epoch = CentroidStore.manifest(centroidDir)
       .getOrElse(throw new IllegalStateException(
         s"no committed centroid store at $centroidDir")).epoch
-    validateCentroidEpoch(indexDir, epoch)
-    var appended = 0L
-    TxnLog.runOnce(logDir, batchId) {
-      val cents = graft.ext.CentroidStore.centroids(spark, centroidDir)
+    val geometry = Map("centroid_epoch" -> epoch.toString)
+    def checkEpoch(): Unit = checkStamp(indexDir, geometry) { got =>
+      s"semantic-centroid corpus at $indexDir was bucketed under " +
+        s"centroid epoch ${got("centroid_epoch")}; the " +
+        s"store now serves epoch $epoch — stored centroid_ids only " +
+        "match their own geometry, so this ingest would silently " +
+        "stop colliding with history (migrate with " +
+        "rebucketSemanticCentroid into a fresh dir, or point the " +
+        "stream back at the old generation)"
+    }
+    checkEpoch()
+    appendOnce(s"$indexDir/_txn", batchId) { cache =>
+      val cents = CentroidStore.centroids(spark, centroidDir)
       // replay drain + reps heal (crash window 2: data appended, reps
       // append lost). Also bootstraps reps/ for a corpus written
       // before the bounded-probe layout existed: a data dir with no
@@ -358,41 +296,36 @@ object CorpusIngest {
             .join(stored.select(col("vec_id")), Seq("vec_id"), "left_semi")
             .select(col("vec_id")).localCheckpoint()
           val replayed = already.count() > 0
-          val repsEmpty = !graft.DirIO.nonEmpty(repsDir)
+          val repsEmpty = !DirIO.nonEmpty(repsDir)
           if (replayed || repsEmpty) {
             // heal scope: on replay, the replayed ids; on an
             // unrepresented legacy/torn store, everything stored
             val scope =
               if (repsEmpty) stored
               else stored.join(already, Seq("vec_id"), "left_semi")
-            val missing = DirIO.readParquet(spark, repsDir) match {
-              case Some(r) => scope.join(
-                r.select(col("vec_id")), Seq("vec_id"), "left_anti")
-              case None => scope
-            }
+            val missing = minus(scope,
+              DirIO.readParquet(spark, repsDir).map(_.select(col("vec_id"))),
+              "vec_id")
             admitReps(spark, missing.select(col("centroid_id"),
               col("vec_id"), col("embedding")), repsDir, repCap)
           }
           batch.join(already, Seq("vec_id"), "left_anti")
         case None => batch
       }
-      val asg = graft.ext.EmbedOps.assignAgainst(incoming, cents)
+      val asg = EmbedOps.assignAgainst(incoming, cents)
       // the bounded-lifetime form: semDedupFrom's internal pair cache
       // would otherwise accumulate one dead frame per micro-batch
-      val keepIds = graft.ext.EmbedOps.semDedupKeepIds(incoming, asg, thr)
-      val canon = incoming.join(keepIds, Seq("vec_id"), "left_semi")
-        .join(asg.select(col("vec_id"), col("centroid_id")), Seq("vec_id"))
-        .cache()
-      // localCheckpoint pins the decision before the appends (the same
-      // read-your-own-write hazard as the other ingest layers)
-      val fresh = (DirIO.readParquet(spark, repsDir) match {
+      val keepIds = EmbedOps.semDedupKeepIds(incoming, asg, thr)
+      val canon = cache(incoming.join(keepIds, Seq("vec_id"), "left_semi")
+        .join(asg.select(col("vec_id"), col("centroid_id")), Seq("vec_id")))
+      Some(DirIO.readParquet(spark, repsDir) match {
         case Some(reps) =>
           val cand = canon
             .select(col("centroid_id"), col("vec_id").as("vec_a"))
             .join(reps.select(col("centroid_id"),
               col("vec_id").as("vec_b")), Seq("centroid_id"))
             .select(col("vec_a"), col("vec_b"))
-          val dupIds = graft.ext.EmbedOps.verifyCosinePairs(
+          val dupIds = EmbedOps.verifyCosinePairs(
               cand,
               canon.select(col("vec_id"), col("embedding"))
                 .unionByName(
@@ -401,61 +334,18 @@ object CorpusIngest {
             .select(col("vec_a").as("vec_id")).distinct()
           canon.join(dupIds, Seq("vec_id"), "left_anti")
         case None => canon
-      }).localCheckpoint()
-      appended = fresh.count()
-      if (appended > 0) {
-        // epoch committed BEFORE the first data lands, first writer
-        // wins, then re-validated — the substring path's (w, occCap)
-        // stamp discipline applied to the clustering geometry
-        stampCentroidEpoch(indexDir, epoch)
-        validateCentroidEpoch(indexDir, epoch)
-        // order matters for the crash windows: data first (the drain
-        // key), then reps (healed from data on replay evidence)
-        fresh.write.mode(SaveMode.Append).parquet(dataDir)
-        admitReps(spark, fresh.select(col("centroid_id"), col("vec_id"),
-          col("embedding")), repsDir, repCap)
-      }
-      canon.unpersist()
-    }
-    appended
-  }
-
-  /** Reject an ingest whose centroid epoch disagrees with the stamped
-    * `_meta` — the stored centroid_id buckets only match their own
-    * geometry. No-op until a first successful batch stamps it. */
-  private[graft] def validateCentroidEpoch(indexDir: String,
-      epoch: Long): Unit = {
-    val meta = Paths.get(indexDir, "_meta")
-    if (Files.exists(meta)) {
-      val kv = Generations.read(meta)
-      require(kv.get("centroid_epoch").contains(epoch.toString),
-        s"semantic-centroid corpus at $indexDir was bucketed under " +
-          s"centroid epoch ${kv.getOrElse("centroid_epoch", "?")}; the " +
-          s"store now serves epoch $epoch — stored centroid_ids only " +
-          "match their own geometry, so this ingest would silently " +
-          "stop colliding with history (migrate with " +
-          "rebucketSemanticCentroid into a fresh dir, or point the " +
-          "stream back at the old generation)")
-    }
-  }
-
-  /** First-writer-wins epoch stamp (the [[stampSubstringMeta]]
-    * primitive for the clustering geometry).
-    *
-    * A dir that already holds data/ rows but carries NO stamp is
-    * REFUSED (unless `dirHoldsRebucketedData`, the
-    * [[rebucketSemanticCentroid]] path, which just re-assigned every
-    * stored row under the current geometry): those rows were bucketed
-    * under an unknown — in practice older — centroid geometry, and
-    * stamping the store's CURRENT epoch onto them would grandfather a
-    * mixed-geometry corpus into exactly the silent-recall-hole state
-    * [[validateCentroidEpoch]] exists to reject loudly. */
-  private[graft] def stampCentroidEpoch(indexDir: String, epoch: Long,
-      dirHoldsRebucketedData: Boolean = false): Unit = {
-    val meta = Paths.get(indexDir, "_meta")
-    if (!Files.exists(meta)) {
-      require(dirHoldsRebucketedData ||
-        !graft.DirIO.nonEmpty(s"$indexDir/data"),
+      })
+    } { fresh =>
+      // epoch committed BEFORE the first data lands, first writer
+      // wins, then re-checked — the substring path's (w, occCap)
+      // stamp discipline applied to the clustering geometry. A dir
+      // that already holds data/ rows but carries NO stamp is REFUSED:
+      // those rows were bucketed under an unknown — in practice older
+      // — geometry, and stamping the current epoch onto them would
+      // grandfather a mixed-geometry corpus into exactly the
+      // silent-recall-hole state the check exists to reject loudly.
+      require(Files.exists(Paths.get(indexDir, "_meta")) ||
+        !DirIO.nonEmpty(dataDir),
         s"semantic-centroid corpus at $indexDir holds data/ rows but " +
           "no _meta epoch stamp — its rows were bucketed under an " +
           s"unknown (likely pre-stamp) geometry, and stamping epoch " +
@@ -463,7 +353,42 @@ object CorpusIngest {
           "centroid_ids stop colliding with new arrivals: a recall " +
           "hole). Migrate with rebucketSemanticCentroid into a fresh " +
           "dir, or restore the dir's original _meta")
-      Generations.commit(meta, s"centroid_epoch=$epoch\n")
+      stamp(indexDir, geometry)
+      checkEpoch()
+      // order matters for the crash windows: data first (the drain
+      // key), then reps (healed from data on replay evidence)
+      append(fresh, dataDir)
+      admitReps(spark, fresh.select(col("centroid_id"), col("vec_id"),
+        col("embedding")), repsDir, repCap)
+    }
+  }
+
+  /** Reject an ingest whose parameters disagree with the `_meta` stamp
+    * of `dir` — a stored index only matches at the parameters it was
+    * built with. `mismatch` words the error from the stamped values
+    * ("?" for a missing key). No-op until a first successful batch
+    * stamps the dir. */
+  private[graft] def checkStamp(dir: String, expected: Map[String, String])(
+      mismatch: Map[String, String] => String): Unit = {
+    val meta = Paths.get(dir, "_meta")
+    if (Files.exists(meta)) {
+      val got = Generations.read(meta).withDefaultValue("?")
+      require(expected.forall { case (k, v) => got(k) == v }, mismatch(got))
+    }
+  }
+
+  /** Commit `kv` as the `_meta` stamp of `dir`, FIRST WRITER WINS
+    * through [[graft.Generations.commit]] (a hard link carries complete
+    * content, unlike a bare CREATE_NEW write whose partial flush a
+    * concurrent reader could see). A losing racer returns normally;
+    * the caller's re-check against the committed stamp
+    * ([[checkStamp]]) is what fails its batch. Without hard links the
+    * commit is a rename, last writer wins, and that re-check catches
+    * a mismatch on the NEXT batch instead. */
+  private[graft] def stamp(dir: String, kv: Map[String, String]): Unit = {
+    val meta = Paths.get(dir, "_meta")
+    if (!Files.exists(meta)) {
+      Generations.commit(meta, kv.map { case (k, v) => s"$k=$v\n" }.mkString)
       ()
     }
   }
@@ -498,15 +423,15 @@ object CorpusIngest {
     require(canonical(oldIndexDir) != canonical(newIndexDir),
       "rebucket must target a FRESH dir (the old dir stays readable " +
         "until the stream has switched over)")
-    val man = graft.ext.CentroidStore.manifest(centroidDir).getOrElse(
+    val man = CentroidStore.manifest(centroidDir).getOrElse(
       throw new IllegalStateException(
         s"no committed centroid store at $centroidDir"))
     val storedOpt = DirIO.readParquet(spark, s"$oldIndexDir/data")
     if (storedOpt.isEmpty) return 0L
     val stored = storedOpt.get.drop("centroid_id")
-    val cents = graft.ext.CentroidStore.centroids(spark, centroidDir)
+    val cents = CentroidStore.centroids(spark, centroidDir)
     val rebucketed = stored.join(
-      graft.ext.EmbedOps.assignAgainst(stored, cents)
+      EmbedOps.assignAgainst(stored, cents)
         .select(col("vec_id"), col("centroid_id")), Seq("vec_id"))
       .localCheckpoint()
     val n = rebucketed.count()
@@ -519,9 +444,10 @@ object CorpusIngest {
       .filter(col("rn") <= repCap)
       .drop("rn")
       .write.mode(SaveMode.Overwrite).parquet(s"$newIndexDir/reps")
+    // every stored row was just re-assigned under the current
+    // geometry, so the new epoch is stamped onto them
     Files.deleteIfExists(Paths.get(newIndexDir, "_meta"))
-    stampCentroidEpoch(newIndexDir, man.epoch,
-      dirHoldsRebucketedData = true)
+    stamp(newIndexDir, Map("centroid_epoch" -> man.epoch.toString))
     n
   }
 
@@ -547,7 +473,7 @@ object CorpusIngest {
       .select(col("centroid_id"), col("vec_id"), col("embedding"))
       .localCheckpoint()
     if (admit.count() > 0)
-      admit.write.mode(SaveMode.Append).parquet(repsDir)
+      append(admit, repsDir)
   }
 
   /** The bounded probe's recall exposure, MEASURED instead of silent
@@ -621,17 +547,23 @@ object CorpusIngest {
     val dataDir = s"$corpusDir/data"
     val winsDir = s"$corpusDir/wins"
     val cntDir = s"$corpusDir/wincnt"
-    val logDir = s"$corpusDir/_txn"
     // the window index is only meaningful at ONE window width: a
     // restart with a different w would probe 4-token hashes against
     // 8-token hashes and silently match nothing — reject loudly (the
-    // CentroidStore manifest discipline, minimally). Validation only;
-    // the stamp lands inside the first SUCCESSFUL batch below, so a
+    // CentroidStore manifest discipline, minimally). Check only; the
+    // stamp lands inside the first SUCCESSFUL batch below, so a
     // misconfigured run that never ingested anything doesn't lock an
     // empty corpus to the wrong parameters.
-    validateSubstringMeta(corpusDir, w, occCap)
-    var appended = 0L
-    TxnLog.runOnce(logDir, batchId) {
+    val params = Map("w" -> w.toString, "occ_cap" -> occCap.toString)
+    def checkParams(): Unit = checkStamp(corpusDir, params) { got =>
+      s"substring corpus at $corpusDir was built with " +
+        s"w=${got("w")} occ_cap=${got("occ_cap")}; this ingest was " +
+        s"started with w=$w occ_cap=$occCap — the stored window index " +
+        "only matches at its own parameters (restart with them, or " +
+        "rebuild the corpus)"
+    }
+    checkParams()
+    appendOnce(s"$corpusDir/_txn", batchId) { _ =>
       // doc-id replay drain: a crash BETWEEN the data append and the
       // txn marker leaves the docs stored but the batch unmarked; on
       // replay the excision path would re-admit them (an already-
@@ -656,20 +588,16 @@ object CorpusIngest {
             // and future batches would silently stop excising text
             // duplicated from them. Windows come from the STORED
             // (cleaned) text, never the raw resend.
-            val missing = DirIO.readParquet(spark, winsDir) match {
-              case Some(ws) => already.join(
-                ws.select(col("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti")
-              case None => already
-            }
-            val heal = graft.ext.TextOps.winOcc(
+            val missing = minus(already, DirIO.readParquet(spark, winsDir)
+              .map(_.select(col("doc_id")).distinct()), "doc_id")
+            val heal = TextOps.winOcc(
               stored.join(missing, Seq("doc_id"), "left_semi"), w)
               .localCheckpoint()
             if (heal.count() > 0) {
-              heal.write.mode(SaveMode.Append).parquet(winsDir)
+              append(heal, winsDir)
               // keep the count table in step with the healed windows
-              heal.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-                .write.mode(SaveMode.Append).parquet(cntDir)
+              append(heal.groupBy(col("h")).agg(count(lit(1)).as("cnt")),
+                cntDir)
             }
           }
           incoming0.join(already, Seq("doc_id"), "left_anti")
@@ -710,44 +638,36 @@ object CorpusIngest {
                 .agg(count(lit(1)).as("cnt")).localCheckpoint()
               if (Generations.commit(
                   Paths.get(corpusDir, ".wincnt_bootstrap"), ""))
-                init.write.mode(SaveMode.Append).parquet(cntDir)
+                append(init, cntDir)
               init.select(col("h"), col("cnt").as("nocc"))
           }
-          val spans = graft.ext.TextOps.crossDupSpansWithCounts(
-            storedWins, storedCnt,
-            graft.ext.TextOps.winOcc(incoming, w), w, occCap)
-          graft.ext.TextOps.exciseIntervals(incoming,
+          val spans = TextOps.crossDupSpansWithCounts(
+            storedWins, storedCnt, TextOps.winOcc(incoming, w), w, occCap)
+          TextOps.exciseIntervals(incoming,
             spans.select(col("doc_b").as("doc_id"),
               col("start_b").as("s"), col("end_b").as("e")))
             .select(col("doc_id"), col("clean_text").as("text"))
         case None => incoming
       }).localCheckpoint()
-      // phase 2 over the cleaned text, then pin the decision before
-      // the two appends (the read-your-own-write hazard all ingest
-      // layers share)
-      val cleaned = graft.ext.TextOps.dedupExcise(phase1, w, occCap)
-        .select(col("doc_id"), col("clean_text").as("text"))
-        .localCheckpoint()
-      appended = cleaned.count()
-      if (appended > 0) {
-        // parameters committed BEFORE the first data lands, FIRST
-        // WRITER WINS (hard-link create — atomic, complete content,
-        // EEXIST for the loser), then re-validated against the
-        // COMMITTED stamp: of two racing first-batch writers with
-        // different (w, occCap), the loser fails HERE — before its
-        // wrong-width windows could land in wins/ where they would
-        // silently match nothing forever (and before its docs could
-        // be admitted unexcised at the surviving parameters)
-        stampSubstringMeta(corpusDir, w, occCap)
-        validateSubstringMeta(corpusDir, w, occCap)
-        cleaned.write.mode(SaveMode.Append).parquet(dataDir)
-        val ws = graft.ext.TextOps.winOcc(cleaned, w).localCheckpoint()
-        ws.write.mode(SaveMode.Append).parquet(winsDir)
-        ws.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-          .write.mode(SaveMode.Append).parquet(cntDir)
-      }
+      // phase 2 over the cleaned text
+      Some(TextOps.dedupExcise(phase1, w, occCap)
+        .select(col("doc_id"), col("clean_text").as("text")))
+    } { cleaned =>
+      // parameters committed BEFORE the first data lands, FIRST
+      // WRITER WINS (hard-link create — atomic, complete content,
+      // EEXIST for the loser), then re-checked against the
+      // COMMITTED stamp: of two racing first-batch writers with
+      // different (w, occCap), the loser fails HERE — before its
+      // wrong-width windows could land in wins/ where they would
+      // silently match nothing forever (and before its docs could
+      // be admitted unexcised at the surviving parameters)
+      stamp(corpusDir, params)
+      checkParams()
+      append(cleaned, dataDir)
+      val ws = TextOps.winOcc(cleaned, w).localCheckpoint()
+      append(ws, winsDir)
+      append(ws.groupBy(col("h")).agg(count(lit(1)).as("cnt")), cntDir)
     }
-    appended
   }
 
   /** The maintained count table's drift vs the ground truth, MEASURED
@@ -788,94 +708,6 @@ object CorpusIngest {
           .otherwise(0L)), lit(0L)).as("n_occ_capped"))
   }
 
-  /** Reject an ingest whose (w, occCap) disagree with the stamped
-    * `_meta` — the stored window index only matches at its own
-    * parameters. No-op until a first successful batch stamps it. */
-  private[graft] def validateSubstringMeta(corpusDir: String, w: Int,
-      occCap: Int): Unit = {
-    val meta = Paths.get(corpusDir, "_meta")
-    if (Files.exists(meta)) {
-      val kv = Generations.read(meta)
-      require(kv.get("w").contains(w.toString) &&
-        kv.get("occ_cap").contains(occCap.toString),
-        s"substring corpus at $corpusDir was built with " +
-          s"w=${kv.getOrElse("w", "?")} occ_cap=" +
-          s"${kv.getOrElse("occ_cap", "?")}; this ingest was started " +
-          s"with w=$w occ_cap=$occCap — the stored window index only " +
-          "matches at its own parameters (restart with them, or " +
-          "rebuild the corpus)")
-    }
-  }
-
-  /** Commit the (w, occCap) stamp FIRST WRITER WINS through
-    * [[graft.Generations.commit]] (a hard link carries complete
-    * content, unlike a bare CREATE_NEW write whose partial flush a
-    * concurrent reader could see). A losing racer returns normally;
-    * the caller's re-validation against the committed stamp is what
-    * fails its batch. Without hard links the commit is a rename, last
-    * writer wins, and that re-validation catches a mismatch on the
-    * NEXT batch instead. */
-  private[graft] def stampSubstringMeta(corpusDir: String, w: Int,
-      occCap: Int): Unit = {
-    val meta = Paths.get(corpusDir, "_meta")
-    if (!Files.exists(meta)) {
-      Generations.commit(meta, s"w=$w\nocc_cap=$occCap\n")
-      ()
-    }
-  }
-
-  /** Streaming entry for the substring-dedup path. */
-  def startSubstring(docs: DataFrame, corpusDir: String,
-      checkpointDir: String, w: Int = 8, occCap: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchSubstring(batch, batchId, corpusDir, w, occCap); ()
-      }
-      .start()
-
-  /** Streaming entry for the persisted-centroid semantic path. */
-  def startSemanticCentroid(vectors: DataFrame, indexDir: String,
-      centroidDir: String, checkpointDir: String,
-      threshold: Double = Double.NaN, repCap: Int = 1024): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchSemanticCentroid(
-          batch, batchId, indexDir, centroidDir, threshold, repCap); ()
-      }
-      .start()
-
-  /** Streaming entry for the semantic path. */
-  def startSemantic(vectors: DataFrame, indexDir: String, checkpointDir: String,
-      threshold: Double = Double.NaN): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchSemantic(batch, batchId, indexDir, threshold); ()
-      }
-      .start()
-
-  /** Streaming entry: docs stream → per-batch incremental dedup append. */
-  def start(docs: DataFrame, corpusDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, corpusDir); ()
-      }
-      .start()
-
-  /** Streaming entry with the near-dup layer. */
-  def startNear(docs: DataFrame, corpusDir: String, checkpointDir: String,
-      threshold: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchNear(batch, batchId, corpusDir, threshold); ()
-      }
-      .start()
-
   /** Publish (or refresh) the stored eval-shingle index the streaming
     * decontamination layer probes: the distinct 6-gram shingles of the
     * benchmark suite, one string column `s`. Eval suites are tiny next
@@ -883,7 +715,7 @@ object CorpusIngest {
     * full overwrite per release is the right cadence — the per-batch
     * path only ever READS this. */
   def writeEvalIndex(benchDocs: DataFrame, decontamDir: String): Unit =
-    graft.ext.TextOps.sixGramShingles(benchDocs)
+    TextOps.sixGramShingles(benchDocs)
       .select(col("s")).distinct()
       .write.mode(SaveMode.Overwrite).parquet(s"$decontamDir/eval_shingles")
 
@@ -899,12 +731,12 @@ object CorpusIngest {
     * would produce — stream ≡ batch by construction, and the spec
     * pins it.
     *
-    * Effectively-once: the append runs under [[TxnLog.runOnce]], so a
+    * Effectively-once: the append runs under [[appendOnce]], so a
     * replayed micro-batch after a crash between write and
     * checkpoint-commit is skipped. A missing eval index means no
     * benchmark is registered yet: nothing is flagged (decontamination
     * against an empty suite is vacuous), and the batch commits as
-    * processed.
+    * processed. Returns the docs flagged.
     *
     * Scale posture: per batch, work is |batch| docs shingled once +
     * one equi join against an eval-sized index (broadcastable in
@@ -912,35 +744,11 @@ object CorpusIngest {
     * span window over MATCHED positions only — never a corpus rescan,
     * nothing corpus-shaped materialized. */
   def decontamBatch(batch: DataFrame, batchId: Long,
-      decontamDir: String): Long = {
-    val spark = batch.sparkSession
-    val reportsDir = s"$decontamDir/reports"
-    val evalDir = s"$decontamDir/eval_shingles"
-    var flagged = 0L
-    TxnLog.runOnce(s"$decontamDir/_txn", batchId) {
-      DirIO.readParquet(spark, evalDir).foreach { evalIdx =>
-        // pinned before the count+write act on one evaluation, like
-        // every ingest path here
-        val report = graft.ext.TextOps
-          .decontaminateSpansAgainst(batch, evalIdx)
-          .localCheckpoint()
-        flagged = report.count()
-        if (flagged > 0)
-          report.write.mode(SaveMode.Append).parquet(reportsDir)
-      }
-    }
-    flagged
-  }
-
-  /** Streaming entry for the decontamination layer. */
-  def startDecontam(docs: DataFrame, decontamDir: String,
-      checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontamBatch(batch, batchId, decontamDir); ()
-      }
-      .start()
+      decontamDir: String): Long =
+    appendOnce(s"$decontamDir/_txn", batchId) { _ =>
+      DirIO.readParquet(batch.sparkSession, s"$decontamDir/eval_shingles")
+        .map(TextOps.decontaminateSpansAgainst(batch, _))
+    }(append(_, s"$decontamDir/reports"))
 
   /** Streaming KMV cardinality-sketch maintenance: each micro-batch
     * merges the stored k-minimum-values sketch with the batch's

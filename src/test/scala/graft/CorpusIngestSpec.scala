@@ -2,13 +2,30 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.CorpusIngest
+
+object CorpusIngestSpec {
+
+  /** Starts a stream that runs one ingest `layer` on every micro-batch
+    * of `input`. */
+  def ingestStream(input: DataFrame, checkpoint: String)(
+      layer: (DataFrame, Long) => Long): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        layer(batch, batchId); ()
+      }
+      .start()
+}
 
 /** Streaming incremental corpus ingestion: intra-batch dedup,
   * cross-batch digest suppression, and replay idempotency (TxnLog). */
 class CorpusIngestSpec extends SparkSpec {
+  import CorpusIngestSpec.ingestStream
   import spark.implicits._
 
   test("stream ingestion appends each content exactly once across batches") {
@@ -16,8 +33,8 @@ class CorpusIngestSpec extends SparkSpec {
     val corpusDir = Files.createTempDirectory("graft-corpus").toString
     val checkpoint = Files.createTempDirectory("graft-corpus-ck").toString
     val input = MemoryStream[(Long, String)]
-    val q = CorpusIngest.start(
-      input.toDF().toDF("doc_id", "text"), corpusDir, checkpoint)
+    val q = ingestStream(input.toDF().toDF("doc_id", "text"), checkpoint)(
+      CorpusIngest.ingestBatch(_, _, corpusDir))
     try {
       // batch 0: two distinct contents; 11 duplicates 1's content
       // intra-batch → canonical survivor is min doc_id
@@ -75,29 +92,24 @@ class CorpusIngestSpec extends SparkSpec {
     assert(CorpusIngest.ingestBatchNear(b1, 1L, corpusDir) == 0L)
   }
 
-  test("semantic ingestion suppresses embedding near-dups in-batch and cross-batch") {
-    val indexDir = Files.createTempDirectory("graft-sem-ingest").toString
-    // batch 0: v1 ≈ v2 (in-batch near-dup), v3 orthogonal
-    val b0 = Seq(
-      (1L, Array(1.0f, 1.0f, 0.0f, 0.0f)),
-      (2L, Array(0.99f, 1.01f, 0.0f, 0.0f)),
-      (3L, Array(-1.0f, 1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    assert(CorpusIngest.ingestBatchSemantic(b0, 0L, indexDir) == 2L)
-    assert(spark.read.parquet(s"$indexDir/data")
-      .select("vec_id").as[Long].collect().toSet == Set(1L, 3L))
-    // batch 1: v4 ≈ stored v1 (dropped via the signature index probe),
-    // v5 genuinely new
-    val b1 = Seq(
-      (4L, Array(1.0f, 0.98f, 0.0f, 0.0f)),
-      (5L, Array(0.0f, 0.0f, 1.0f, -1.0f))).toDF("vec_id", "embedding")
-    assert(CorpusIngest.ingestBatchSemantic(b1, 1L, indexDir) == 1L)
-    assert(spark.read.parquet(s"$indexDir/data")
-      .select("vec_id").as[Long].collect().toSet == Set(1L, 3L, 5L))
-    // signature index grew with survivors only
-    assert(spark.read.parquet(s"$indexDir/sigs")
-      .select("vec_id").distinct().as[Long].collect().toSet == Set(1L, 3L, 5L))
-    // replay of batch 1 is a txn-log no-op
-    assert(CorpusIngest.ingestBatchSemantic(b1, 1L, indexDir) == 0L)
+  test("a near ingest whose append throws releases the frame it cached") {
+    val corpusDir = Files.createTempDirectory("graft-near-fail").toString
+    val b0 = Seq((1L, "one two three four five six seven eight nine ten"))
+      .toDF("doc_id", "text")
+    assert(CorpusIngest.ingestBatchNear(b0, 0L, corpusDir) == 1L)
+    // a regular file where the parquet committer puts its staging dir
+    // makes the next data append throw after the decision is cached
+    Files.createFile(Paths.get(corpusDir, "data", "_temporary"))
+    val b1 = Seq((2L, "red green blue cyan magenta yellow black white"))
+      .toDF("doc_id", "text")
+    // numCachedEntries is spark-private in Scala, public in bytecode
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached() = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = cached()
+    intercept[Exception](CorpusIngest.ingestBatchNear(b1, 1L, corpusDir))
+    assert(cached() == before)
+    assert(!graft.sink.EmailJobSink.TxnLog.committed(s"$corpusDir/_txn", 1L))
   }
 
   test("centroid-path semantic ingestion: frozen-geometry dedup in-batch and cross-batch; stream equals batch") {
@@ -149,8 +161,8 @@ class CorpusIngestSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Array[Float])]
     val ck = Files.createTempDirectory("graft-cent-ck").toString
-    val q = CorpusIngest.startSemanticCentroid(
-      input.toDF().toDF("vec_id", "embedding"), idxStream, centDir, ck)
+    val q = ingestStream(input.toDF().toDF("vec_id", "embedding"), ck)(
+      CorpusIngest.ingestBatchSemanticCentroid(_, _, idxStream, centDir))
     try {
       input.addData((1L, Array(1.0f, 0.0f, 1.0f, 0.0f)),
         (2L, Array(0.99f, 0.0f, 1.01f, 0.0f)),
@@ -491,21 +503,27 @@ class CorpusIngestSpec extends SparkSpec {
     // _meta yet); the stamp primitive must admit exactly one, and the
     // loser must fail its re-validation BEFORE its wrong-width windows
     // land. Drive the primitives in the losing order:
-    CorpusIngest.stampSubstringMeta(dir, w = 4, occCap = 64)
-    CorpusIngest.stampSubstringMeta(dir, w = 6, occCap = 32)
+    val winner = Map("w" -> "4", "occ_cap" -> "64")
+    val other = Map("w" -> "6", "occ_cap" -> "32")
+    def mismatch(got: Map[String, String]) =
+      s"stamped w=${got("w")}, asked w=${other("w")}"
+    CorpusIngest.stamp(dir, winner)
+    CorpusIngest.stamp(dir, other)
     // first stamp survives (hard-link create, EEXIST for the loser)
-    CorpusIngest.validateSubstringMeta(dir, 4, 64) // winner passes
+    CorpusIngest.checkStamp(dir, winner)(mismatch) // winner passes
     val e = intercept[IllegalArgumentException] {
-      CorpusIngest.validateSubstringMeta(dir, 6, 32)
+      CorpusIngest.checkStamp(dir, other)(mismatch)
     }
     assert(e.getMessage.contains("w=4") && e.getMessage.contains("w=6"),
       e.getMessage)
     // and the losing INGEST therefore lands nothing: its batch fails
     // loudly at the re-validation inside the append section
     val loser = Seq((1L, "a1 a2 a3 a4 a5 a6 a7 a8")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
+    val eIngest = intercept[IllegalArgumentException] {
       CorpusIngest.ingestBatchSubstring(loser, 2L, dir, w = 6, occCap = 32)
     }
+    assert(eIngest.getMessage.contains("w=4") &&
+      eIngest.getMessage.contains("w=6"), eIngest.getMessage)
     assert(!graft.DirIO.nonEmpty(s"$dir/data"))
     assert(!graft.DirIO.nonEmpty(s"$dir/wins"))
   }
@@ -518,8 +536,8 @@ class CorpusIngestSpec extends SparkSpec {
       "the fox runs far away to a quiet den where it rests until dawn " +
       "and a new day begins with the sun rising over a calm valley"
     val input = MemoryStream[(Long, String)]
-    val q1 = CorpusIngest.startNear(
-      input.toDF().toDF("doc_id", "text"), corpusDir, checkpoint)
+    val q1 = ingestStream(input.toDF().toDF("doc_id", "text"), checkpoint)(
+      CorpusIngest.ingestBatchNear(_, _, corpusDir))
     try {
       input.addData((1L, rich))
       q1.processAllAvailable()
@@ -528,8 +546,8 @@ class CorpusIngestSpec extends SparkSpec {
     // the band index persists, near-dups of doc 1 keep being suppressed
     val input2 = MemoryStream[(Long, String)]
     input2.addData((1L, rich)) // source replays from its own start
-    val q2 = CorpusIngest.startNear(
-      input2.toDF().toDF("doc_id", "text"), corpusDir, checkpoint)
+    val q2 = ingestStream(input2.toDF().toDF("doc_id", "text"), checkpoint)(
+      CorpusIngest.ingestBatchNear(_, _, corpusDir))
     try {
       input2.addData((2L, rich.replace("calm valley", "calm meadow")))
       q2.processAllAvailable()
@@ -565,8 +583,8 @@ class CorpusIngestSpec extends SparkSpec {
     val docC = (4L, "q1 q2 q3 q4 q5 q6 c1 c2 c3 c4 c5 c6 c7 " +
       "q1 q2 q3 q4 q5 q6")
     val input = MemoryStream[(Long, String)]
-    val q = CorpusIngest.startDecontam(
-      input.toDF().toDF("doc_id", "text"), dir, checkpoint)
+    val q = ingestStream(input.toDF().toDF("doc_id", "text"), checkpoint)(
+      CorpusIngest.decontamBatch(_, _, dir))
     try {
       input.addData(docA, docB)
       q.processAllAvailable()

@@ -321,8 +321,9 @@ class RocksDbSoakSpec extends SparkSpec {
     val corpusDir = Files.createTempDirectory("graft-soak-near").toString
     val checkpoint = Files.createTempDirectory("graft-soak-near-ck").toString
     val input = MemoryStream[(Long, String)]
-    def start() = graft.streaming.CorpusIngest.startNear(
-      input.toDF().toDF("doc_id", "text"), corpusDir, checkpoint)
+    def start() = CorpusIngestSpec.ingestStream(
+        input.toDF().toDF("doc_id", "text"), checkpoint)(
+      graft.streaming.CorpusIngest.ingestBatchNear(_, _, corpusDir))
     withRocksConf {
       // DEPTH (r16): the feed arrives as 12 micro-batches — six before
       // a mid-stream restart, six after — matching the other
@@ -375,67 +376,6 @@ class RocksDbSoakSpec extends SparkSpec {
     }
   }
 
-  test("semantic ingest: 10x feed, mid-stream restart, externalized state") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // 40 bases (13x the unit fixture) of 64-dim vectors with every
-    // coordinate EXACTLY on the 0.001 quantization grid; near-dups
-    // perturb one coordinate by 0.0004, which rounds to the SAME
-    // quantized vector — signature collision and cosine 1.0 are exact,
-    // so suppression is deterministic, while random base pairs in d=64
-    // concentrate near cos 0 (sd ≈ 0.125), far under the threshold.
-    val rnd = new scala.util.Random(1915L)
-    def base(b: Int): Array[Float] = {
-      val r = new scala.util.Random(7000L + b)
-      Array.fill(64)((r.nextInt(2001) - 1000) / 1000.0f)
-    }
-    require(rnd.nextInt(2) >= 0) // keep rnd used (seed documented)
-    def near(b: Int): Array[Float] = {
-      val v = base(b); v(0) = v(0) + 0.0004f; v
-    }
-    val indexDir = Files.createTempDirectory("graft-soak-sem").toString
-    val checkpoint = Files.createTempDirectory("graft-soak-sem-ck").toString
-    val input = MemoryStream[(Long, Array[Float])]
-    def start() = graft.streaming.CorpusIngest.startSemantic(
-      input.toDF().toDF("vec_id", "embedding"), indexDir, checkpoint)
-    withRocksConf {
-      // DEPTH (r16): ten micro-batches — five before the restart, five
-      // after — so every post-restart batch probes signature state a
-      // different pre-restart batch committed (r15 soaked only 2)
-      val q1 = start()
-      val p1 = try {
-        // batches 1-5: eight bases each; in-batch near-dups ride with
-        // their canonicals
-        for (g <- 0 until 5) {
-          input.addData((g * 8 until g * 8 + 8).flatMap(b =>
-            Seq((b * 10L, base(b)), (b * 10L + 2, near(b)))): _*)
-          q1.processAllAvailable()
-        }
-        q1.recentProgress.toSeq
-      } finally q1.stop()
-      // restart; cross-batch near-dups probe the stored signature index
-      val q2 = start()
-      val p2 = try {
-        // batches 6-10: cross-restart near-dups, eight bases each
-        for (g <- 0 until 5) {
-          input.addData((g * 8 until g * 8 + 8)
-            .map(b => (b * 10L + 3, near(b))): _*)
-          q2.processAllAvailable()
-        }
-        q2.recentProgress.toSeq
-      } finally q2.stop()
-      val ids = spark.read.parquet(s"$indexDir/data")
-        .select("vec_id").as[Long].collect().toSet
-      val expected = (0 until 40).map(_ * 10L).toSet
-      assert(ids == expected,
-        s"unexpected survivors: extra=${ids -- expected} missing=${expected -- ids}")
-      assert(spark.read.parquet(s"$indexDir/sigs")
-        .select("vec_id").distinct().as[Long].collect().toSet == expected)
-      recordExternalized("corpus_ingest_semantic", p1, p2,
-        Seq(s"$indexDir/data", s"$indexDir/sigs", s"$indexDir/_txn"))
-    }
-  }
-
   test("substring ingest: 12 batches, mid-stream restart, cross-restart excision, externalized state") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -455,8 +395,9 @@ class RocksDbSoakSpec extends SparkSpec {
     val corpusDir = Files.createTempDirectory("graft-soak-substr").toString
     val checkpoint = Files.createTempDirectory("graft-soak-substr-ck").toString
     val input = MemoryStream[(Long, String)]
-    def start() = graft.streaming.CorpusIngest.startSubstring(
-      input.toDF().toDF("doc_id", "text"), corpusDir, checkpoint)
+    def start() = CorpusIngestSpec.ingestStream(
+        input.toDF().toDF("doc_id", "text"), checkpoint)(
+      graft.streaming.CorpusIngest.ingestBatchSubstring(_, _, corpusDir))
     withRocksConf {
       // six pre-restart batches: five bases each, canonical + in-batch
       // block repeat
@@ -505,11 +446,12 @@ class RocksDbSoakSpec extends SparkSpec {
   test("semantic-centroid ingest: 10 batches, mid-stream restart, bounded-probe suppression, externalized state") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    // the same grid-exact 64-dim construction as the signature soak:
-    // near() perturbs one coordinate by 0.0004, which QUANTIZES to the
-    // same vector — same frozen-centroid assignment and cosine exactly
-    // 1.0, so suppression through the bounded representative probe is
-    // deterministic. Centroids are trained ONCE on the 40 bases and
+    // grid-exact 64-dim vectors (every coordinate on the 0.001
+    // quantization grid): near() perturbs one coordinate by 0.0004,
+    // which QUANTIZES to the same vector — same frozen-centroid
+    // assignment and cosine exactly 1.0, so suppression through the
+    // bounded representative probe is deterministic. Random base pairs
+    // in d=64 concentrate near cos 0 (sd ≈ 0.125). Centroids are trained ONCE on the 40 bases and
     // FROZEN (the CentroidStore contract).
     def base(b: Int): Array[Float] = {
       val r = new scala.util.Random(9100L + b)
@@ -532,9 +474,10 @@ class RocksDbSoakSpec extends SparkSpec {
     // pairs would expectedly yield a false merge or two; dups here are
     // at cosine EXACTLY 1.0, so 0.8 (6.4σ) separates signal from noise
     // deterministically
-    def start() = graft.streaming.CorpusIngest.startSemanticCentroid(
-      input.toDF().toDF("vec_id", "embedding"), indexDir, centDir,
-      checkpoint, threshold = 0.8)
+    def start() = CorpusIngestSpec.ingestStream(
+        input.toDF().toDF("vec_id", "embedding"), checkpoint)(
+      graft.streaming.CorpusIngest.ingestBatchSemanticCentroid(
+        _, _, indexDir, centDir, threshold = 0.8))
     withRocksConf {
       // five pre-restart batches: eight bases each, canonical + an
       // in-batch semantic dup (suppressed by semDedupKeepIds over the

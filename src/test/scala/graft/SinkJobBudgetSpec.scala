@@ -6,12 +6,47 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.pipeline.MatchFixture
 import graft.sink.StatusStore
 import graft.streaming.{StreamOutcome, StreamPipeline}
+
+object SinkJobBudgetSpec {
+
+  /** The properties of every job started while registered. */
+  class JobLog extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[java.util.Properties]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).foreach(jobs.add)
+
+    /** Listener-bus delivery is async: polls until the count is stable. */
+    def settle(): Unit = {
+      var last = -1
+      var spins = 0
+      while (jobs.size != last && spins < 100) {
+        last = jobs.size
+        Thread.sleep(100)
+        spins += 1
+      }
+    }
+  }
+
+  /** Runs `body` with AQE and broadcast joins off, so the job count
+    * does not depend on runtime statistics, then restores both. */
+  def countingConf[A](spark: SparkSession)(body: => A): A = {
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
+    }
+  }
+}
 
 /** Pins the job budget of the stream sink (`casSinkTo`) per micro-batch.
   *
@@ -23,47 +58,25 @@ import graft.streaming.{StreamOutcome, StreamPipeline}
   * same AQE-off, broadcast-off conf as [[BarrierCountSpec]].
   */
 class SinkJobBudgetSpec extends SparkSpec {
-
-  /** (query id, batch id, description) of every job started. */
-  private class JobLog extends SparkListener {
-    val jobs = new ConcurrentLinkedQueue[(String, Long, String)]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).foreach { p =>
-        val q = p.getProperty("sql.streaming.queryId")
-        val b = p.getProperty("streaming.sql.batchId")
-        if (q != null && b != null)
-          jobs.add((q, b.toLong, p.getProperty("spark.job.description")))
-      }
-  }
+  import SinkJobBudgetSpec._
 
   /** Runs `body` with a started query under the counting conf, then
     * returns the job descriptions per batch id of that query. */
   private def jobsPerBatch(start: => StreamingQuery)(
       body: StreamingQuery => Unit): Map[Long, Seq[String]] = {
-    val sc = spark.sparkContext
     val log = new JobLog
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sc.addSparkListener(log)
-    val q = try start finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
-    }
+    spark.sparkContext.addSparkListener(log)
+    val q = countingConf(spark)(start)
     try body(q) finally q.stop()
-    // listener-bus delivery is async: poll until the count is stable
-    var last = -1
-    var spins = 0
-    while (log.jobs.size != last && spins < 100) {
-      last = log.jobs.size
-      Thread.sleep(100)
-      spins += 1
-    }
-    sc.removeSparkListener(log)
+    log.settle()
+    spark.sparkContext.removeSparkListener(log)
     val id = q.id.toString
-    log.jobs.asScala.toSeq.filter(_._1 == id)
-      .groupBy(_._2).view.mapValues(_.map(_._3)).toMap
+    log.jobs.asScala.toSeq.flatMap { p =>
+      val b = p.getProperty("streaming.sql.batchId")
+      if (p.getProperty("sql.streaming.queryId") == id && b != null)
+        Some(b.toLong -> p.getProperty("spark.job.description"))
+      else None
+    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
   }
 
   /** Data files of a table dir (the commit log and Spark's hidden files

@@ -24,5 +24,17 @@ if raw=$(git grep -n -e 'Files\.list(' -e 'Files\.walk(' -e 'Files\.createLink('
   echo "$raw" >&2
   exit 1
 fi
+# Every `main` in src/main is a driver entry point or a kept tool; a dev
+# probe whose question is answered leaves its artifact in bench_results/
+# and is deleted, not kept as another main. A new main joins this list.
+mains="Bench Verify PlanDump PlanShapes ScaleGen ScaleLadder ScaleProbe StageProf"
+stray=$(git grep -l -e 'def main(' -- src/main | while read -r f; do
+  case " $mains " in *" $(basename "$f" .scala) "*) ;; *) echo "$f" ;; esac
+done)
+if [ -n "$stray" ]; then
+  echo "def main( outside the allowlist in tools/precommit.sh:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 [ -n "$GRAFT_SKIP_PRECOMMIT" ] && exit 0
 exec sbt -batch Test/compile
