@@ -2,7 +2,10 @@ package graft.sink
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -28,9 +31,12 @@ import graft.{DirIO, Generations, JobLabel}
   *    every writer but the first; on S3/GCS this is the conditional
   *    PUT / if-generation-match write.
   *
-  * A writer reads the latest committed snapshot, applies its
-  * compare-and-set row conditions against it, writes a new snapshot,
-  * and tries to commit version v+1. Exactly one concurrent writer wins
+  * A writer reads the latest committed snapshot once, applies its
+  * compare-and-set row conditions against it, writes a new snapshot in
+  * the same Spark job (one job per attempt; the applied and rejected
+  * counts come from an `Observation` on that write), and tries to
+  * commit version v+1. When no row applied, it deletes the snapshot it
+  * wrote and commits nothing. Exactly one concurrent writer wins
   * the marker; losers delete their orphan snapshot and RETRY against
   * the new snapshot — where the CAS condition now sees the winner's
   * status and rejects the lost race, exactly like a conditional
@@ -90,85 +96,91 @@ object StatusStore {
   private def emptyStatus(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schema)
 
+  /** How long the counts of a written snapshot may take to arrive. The
+    * [[Observation]] is filled by a listener after the write returns; an
+    * event the listener bus dropped would otherwise block the attempt
+    * for good. */
+  private val CountsTimeout = 10.minutes
+
   /** Conditional merge with optimistic retry. `updates` columns:
     * event_id, guest_id, expected_status (nullable → unconditional),
     * new_status, error_at (nullable). Identical rows on one key collapse
     * to one: a null guest_id decodes to "", so several outcomes of one
-    * event reach here under the same key, and the left join below would
+    * event reach here under the same key, and the join below would
     * otherwise multiply that key's stored rows on every commit.
     * Conflicting rows on one key are an error of the caller. Returns
     * counts from the attempt that committed.
     *
-    * An attempt runs two jobs, labelled `cas:verdicts` and `cas:write`
-    * ([[graft.JobLabel]]): one aggregate over the cached verdicts gives
-    * both counts, and the snapshot write. The snapshot is read with
-    * [[Schema]], so no schema-inference job runs; an attempt where no
-    * row applies commits nothing and skips the write. */
+    * An attempt is one Spark job, the snapshot write, labelled
+    * `cas:write` ([[graft.JobLabel]]). The updates are full-outer-joined
+    * with the current snapshot once; a full outer join never plans as a
+    * broadcast, so the job count does not depend on the broadcast
+    * threshold. The snapshot is read once, with [[Schema]], so no
+    * schema-inference job runs, and nothing is cached. The merged rows
+    * carry an [[Observation]] that counts the update rows and the rows
+    * whose condition held; it is read after the write returns. When no
+    * row applies, the written snapshot is deleted and nothing is
+    * committed. */
   def casMerge(updates: DataFrame, dir: String, maxRetries: Int = 50): CasResult = {
     val spark = updates.sparkSession
     val writerId = java.util.UUID.randomUUID().toString.take(8)
     val up = updates.select(
       col("event_id"), col("guest_id"), col("expected_status"),
-      col("new_status"), col("error_at")).distinct().cache()
-    try {
-      var attempt = 0
-      while (true) {
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new IllegalStateException(
-            s"casMerge on $dir lost the commit race $maxRetries times")
-        val v = currentVersion(dir)
-        val cur = (if (v == 0L) None else snapshotPath(dir, v).map(readSnapshot(spark, _)))
-          .getOrElse(emptyStatus(spark))
+      col("new_status"), col("error_at")).distinct()
+      .withColumn("present", lit(true))
+    var attempt = 0
+    while (true) {
+      attempt += 1
+      if (attempt > maxRetries)
+        throw new IllegalStateException(
+          s"casMerge on $dir lost the commit race $maxRetries times")
+      val v = currentVersion(dir)
+      val cur = (if (v == 0L) None else snapshotPath(dir, v).map(readSnapshot(spark, _)))
+        .getOrElse(emptyStatus(spark))
+        .withColumn("stored", lit(true))
 
-        val joined = up.alias("u").join(cur.alias("c"),
-          Seq("event_id", "guest_id"), "left")
-        // absent key reads as 'pending' — attribute_not_exists semantics
-        val currentStatus = coalesce(col("c.delivery_status"), lit("pending"))
-        val holds = col("u.expected_status").isNull ||
-          col("u.expected_status") === currentStatus
-        val verdicts = joined.select(
-          col("event_id"), col("guest_id"),
-          col("u.new_status"), col("u.error_at"), holds.as("holds")).cache()
-        val applied = verdicts.filter(col("holds"))
-          .select(col("event_id"), col("guest_id"),
-            col("new_status").as("delivery_status"),
-            col("error_at").as("email_error_at"))
-        val counts = JobLabel(spark, "cas:verdicts") {
-          verdicts.agg(count(lit(1)), sum(when(col("holds"), 1L).otherwise(0L)))
-            .head()
-        }
-        val nApplied = if (counts.isNullAt(1)) 0L else counts.getLong(1)
-        val nRejected = counts.getLong(0) - nApplied
-
-        if (nApplied == 0L) {
-          val keys = verdicts.filter(col("holds")).select("event_id", "guest_id")
-          verdicts.unpersist() // keys re-evaluate against the immutable snapshot
-          return CasResult(0L, nRejected, v, keys) // nothing to write — no commit
-        }
-        val merged = cur
-          .join(applied.select("event_id", "guest_id"),
-            Seq("event_id", "guest_id"), "left_anti")
-          .unionByName(applied)
-        val snapName = f"snap-${v + 1}%08d-$writerId"
-        val snapDir = Paths.get(dir, snapName)
-        JobLabel(spark, "cas:write") {
-          merged.write.mode("overwrite").parquet(snapDir.toString)
-        }
-
-        // first writer wins: false iff another writer committed v+1
-        // first — the conditional PUT of the protocol
-        val committed =
-          Generations.commit(commitsDir(dir).resolve(f"${v + 1}%08d"), snapName)
-        if (!committed) DirIO.deleteRecursively(snapDir) // lost race's orphan
-        val keys = verdicts.filter(col("holds")).select("event_id", "guest_id")
-        verdicts.unpersist() // keys re-evaluate against the immutable snapshot
-        if (committed) return CasResult(nApplied, nRejected, v + 1, keys)
-        // lost the race: loop — the re-read snapshot now contains the
-        // winner's writes, so the CAS conditions re-evaluate against them
+      val joined = up.alias("u").join(cur.alias("c"),
+        Seq("event_id", "guest_id"), "full_outer")
+      // absent key reads as 'pending' — attribute_not_exists semantics
+      val currentStatus = coalesce(col("c.delivery_status"), lit("pending"))
+      val holds = col("u.present").isNotNull && (col("u.expected_status").isNull ||
+        col("u.expected_status") === currentStatus)
+      val counts = Observation()
+      // a row that holds takes the update; a key only the snapshot has,
+      // or whose update was rejected, keeps its stored row; a rejected
+      // update of an absent key leaves nothing
+      val merged = joined
+        .observe(counts, count(col("u.present")).as("updates"),
+          count(when(holds, 1)).as("applied"))
+        .filter(holds || col("c.stored").isNotNull)
+        .select(col("event_id"), col("guest_id"),
+          when(holds, col("u.new_status")).otherwise(col("c.delivery_status"))
+            .as("delivery_status"),
+          when(holds, col("u.error_at")).otherwise(col("c.email_error_at"))
+            .as("email_error_at"))
+      val snapName = f"snap-${v + 1}%08d-$writerId"
+      val snapDir = Paths.get(dir, snapName)
+      JobLabel(spark, "cas:write") {
+        merged.write.mode("overwrite").parquet(snapDir.toString)
       }
-      throw new IllegalStateException("unreachable")
-    } finally up.unpersist()
+      val row = Await.result(counts.future, CountsTimeout)
+      val nApplied = row.getLong(1)
+      val nRejected = row.getLong(0) - nApplied
+      // lazy over the immutable snapshot this attempt read
+      val keys = joined.filter(holds).select("event_id", "guest_id")
+      if (nApplied == 0L) {
+        DirIO.deleteRecursively(snapDir) // nothing applied — no commit
+        return CasResult(0L, nRejected, v, keys)
+      }
+      // first writer wins: false iff another writer committed v+1
+      // first — the conditional PUT of the protocol
+      if (Generations.commit(commitsDir(dir).resolve(f"${v + 1}%08d"), snapName))
+        return CasResult(nApplied, nRejected, v + 1, keys)
+      DirIO.deleteRecursively(snapDir) // lost race's orphan
+      // loop — the re-read snapshot now contains the winner's writes, so
+      // the CAS conditions re-evaluate against them
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** The O11 transition for a triggered batch: 'pending' → 'processing'

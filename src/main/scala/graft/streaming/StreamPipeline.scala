@@ -293,11 +293,12 @@ object StreamPipeline {
     * runs first, and each step runs only when its count says it has
     * input. A batch with neither triggers nor duplicates (an
     * all-`skipped` batch) runs that one job and no sink I/O. Otherwise
-    * the status commit runs two jobs (verdicts, snapshot write) and the
-    * job write one. When the trigger CAS rejects no key, the winners
-    * are the triggered rows themselves and no semi-join re-derives them
-    * from the CAS verdicts. A replayed batch the commit log holds runs
-    * no job. Each step's jobs carry a [[graft.JobLabel]] (`sink:count`,
+    * the status commit runs one job (the snapshot write, which also
+    * counts its verdicts) and the job write one: 3 jobs with AQE off,
+    * whatever the broadcast threshold. When the trigger CAS rejects no
+    * key, the winners are the triggered rows themselves and no semi-join
+    * re-derives them from the CAS verdicts. A replayed batch the commit
+    * log holds runs no job. Each step's jobs carry a [[graft.JobLabel]] (`sink:count`,
     * `cas:commit`, `jobs:write`, `cas:revert`, `cas:delivered`). */
   def casSinkTo(out: Dataset[StreamOutcome], checkpoint: String,
       jobsDir: String, statusDir: String,

@@ -34,13 +34,15 @@ object SinkJobBudgetSpec {
     }
   }
 
-  /** Runs `body` with AQE and broadcast joins off, so the job count
-    * does not depend on runtime statistics, then restores both. */
-  def countingConf[A](spark: SparkSession)(body: => A): A = {
+  /** Runs `body` with AQE off and, unless `broadcast`, broadcast joins
+    * off, so the job count does not depend on runtime statistics, then
+    * restores both. With `broadcast` the session's own threshold stays,
+    * the conf the benchmark runs under. */
+  def countingConf[A](spark: SparkSession, broadcast: Boolean = false)(body: => A): A = {
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
     val bcWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    if (!broadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try body finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcWas)
@@ -53,20 +55,23 @@ object SinkJobBudgetSpec {
   * Every sink batch starts with one counting job; a batch whose counts
   * say there is nothing to write stops there. A regression that puts
   * back a schema-inference read, a second count or an unconditional
-  * CAS on an empty batch fails here. Jobs are counted per
-  * `streaming.sql.batchId` from the job-start properties, under the
-  * same AQE-off, broadcast-off conf as [[BarrierCountSpec]].
+  * CAS on an empty batch fails here, and so does a join in the status
+  * commit that plans as a broadcast (its build is a job of its own).
+  * Jobs are counted per `streaming.sql.batchId` from the job-start
+  * properties, under the same AQE-off, broadcast-off conf as
+  * [[BarrierCountSpec]], and for the mixed batch also under the
+  * session's default broadcast threshold.
   */
 class SinkJobBudgetSpec extends SparkSpec {
   import SinkJobBudgetSpec._
 
   /** Runs `body` with a started query under the counting conf, then
     * returns the job descriptions per batch id of that query. */
-  private def jobsPerBatch(start: => StreamingQuery)(
+  private def jobsPerBatch(start: => StreamingQuery, broadcast: Boolean = false)(
       body: StreamingQuery => Unit): Map[Long, Seq[String]] = {
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
-    val q = countingConf(spark)(start)
+    val q = countingConf(spark, broadcast)(start)
     try body(q) finally q.stop()
     log.settle()
     spark.sparkContext.removeSparkListener(log)
@@ -110,11 +115,10 @@ class SinkJobBudgetSpec extends SparkSpec {
       q.processAllAvailable()
     }
     assert(afterTrigger._1 == 1L && afterTrigger._2.nonEmpty)
-    // the trigger-only batch: count, the status commit (verdicts +
-    // snapshot write) and the job write
+    // the trigger-only batch: count, the status commit (one snapshot
+    // write) and the job write
     val trig = perBatch.getOrElse(0L, Nil)
-    assert(trig.size <= 4, s"trigger-only batch ran ${trig.size} jobs: $trig")
-    assert(trig.headOption.contains("sink:count"), s"first job: $trig")
+    assert(trig == CommitBatch, s"trigger-only batch ran ${trig.size} jobs: $trig")
     Seq(1L, 2L).foreach { b =>
       assert(perBatch.getOrElse(b, Nil) == Seq("sink:count"),
         s"batch $b ran ${perBatch.getOrElse(b, Nil)}")
@@ -123,29 +127,38 @@ class SinkJobBudgetSpec extends SparkSpec {
     assert(dataFiles(jobsDir) == afterTrigger._2)
   }
 
-  test("CAS sink: a batch with triggers and duplicates makes one status commit in at most 4 jobs") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val base = Files.createTempDirectory("graft-budget-mixed").toString
-    val statusDir = s"$base/status"
-    val input = MemoryStream[StreamOutcome]
-    val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(input.toDS(),
-        s"$base/ck", s"$base/jobs", statusDir)) { q =>
-      input.addData(out("r1", "ev1", "email_triggered"),
-        out("r2", "ev2", "email_triggered"),
-        out("r3", "ev3", "duplicate_prevented"),
-        out("r4", "ev4", "duplicate_prevented"))
-      q.processAllAvailable()
+  /** A batch with input: the count, the status commit's one snapshot
+    * write, the job write. */
+  private val CommitBatch = Seq("sink:count", "cas:commit cas:write", "jobs:write")
+
+  Seq(false, true).foreach { broadcast =>
+    val conf = if (broadcast) "the default broadcast threshold" else "broadcast joins off"
+    test(s"CAS sink: a batch with triggers and duplicates makes one status commit in 3 jobs under $conf") {
+      import spark.implicits._
+      implicit val ctx = spark.sqlContext
+      val base = Files.createTempDirectory("graft-budget-mixed").toString
+      val statusDir = s"$base/status"
+      // a stored row, so the status commit joins a non-empty snapshot
+      StatusStore.casMerge(StatusStore.markDelivered(
+        Seq(("ev0", "gr0")).toDF("event_id", "guest_id")), statusDir)
+      val input = MemoryStream[StreamOutcome]
+      val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(input.toDS(),
+          s"$base/ck", s"$base/jobs", statusDir), broadcast) { q =>
+        input.addData(out("r1", "ev1", "email_triggered"),
+          out("r2", "ev2", "email_triggered"),
+          out("r3", "ev3", "duplicate_prevented"),
+          out("r4", "ev4", "duplicate_prevented"))
+        q.processAllAvailable()
+      }
+      val mixed = perBatch.getOrElse(0L, Nil)
+      assert(mixed == CommitBatch, s"mixed batch ran ${mixed.size} jobs: $mixed")
+      assert(StatusStore.currentVersion(statusDir) == 2L)
+      val st = StatusStore.read(spark, statusDir).get.collect()
+        .map(r => r.getAs[String]("guest_id") -> r.getAs[String]("delivery_status")).toMap
+      assert(st == Map("gr0" -> "delivered", "gr1" -> "processing",
+        "gr2" -> "processing", "gr3" -> "delivered", "gr4" -> "delivered"))
+      assert(spark.read.parquet(s"$base/jobs").count() == 2L)
     }
-    // count, the status commit (verdicts + snapshot write), the job write
-    val mixed = perBatch.getOrElse(0L, Nil)
-    assert(mixed.size <= 4, s"mixed batch ran ${mixed.size} jobs: $mixed")
-    assert(StatusStore.currentVersion(statusDir) == 1L)
-    val st = StatusStore.read(spark, statusDir).get.collect()
-      .map(r => r.getAs[String]("guest_id") -> r.getAs[String]("delivery_status")).toMap
-    assert(st == Map("gr1" -> "processing", "gr2" -> "processing",
-      "gr3" -> "delivered", "gr4" -> "delivered"))
-    assert(spark.read.parquet(s"$base/jobs").count() == 2L)
   }
 
   test("CAS sink: a TTL stream runs exactly one micro-batch per landed input") {

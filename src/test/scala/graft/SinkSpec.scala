@@ -145,6 +145,76 @@ class SinkSpec extends SparkSpec {
     assert(StatusStore.casMerge(StatusStore.markProcessing(keys), dir).applied == 1L)
   }
 
+  test("casMerge agrees with a map model over seeded random update rounds") {
+    import graft.sink.StatusStore
+    import spark.implicits._
+    type Key = (String, String)
+    val dir = Files.createTempDirectory("graft-cas-model").toString + "/status"
+    val rnd = new scala.util.Random(2017L)
+    val keys = (0 until 12).map(i => (s"e${i % 3}", s"g$i"))
+    val statuses = Seq("pending", "processing", "delivered", "deleted")
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    var model = Map.empty[Key, (String, String)] // status, email_error_at
+    var version = 0L
+    def snapshots() = {
+      val p = java.nio.file.Paths.get(dir)
+      if (!Files.exists(p)) 0 else graft.DirIO.listNames(p).count(_.startsWith("snap-"))
+    }
+    (1 to 20).foreach { round =>
+      def current(k: Key) = model.get(k).map(_._1).getOrElse("pending")
+      // one update per picked key: unconditional, matching, or a random
+      // expectation that mostly mismatches (absent keys read 'pending')
+      val rows = rnd.shuffle(keys).take(1 + rnd.nextInt(6)).map { k =>
+        val expected = rnd.nextInt(3) match {
+          case 0 => null
+          case 1 => current(k)
+          case _ => pick(statuses)
+        }
+        val errorAt = if (rnd.nextBoolean()) s"t$round" else null
+        (k._1, k._2, expected, pick(statuses), errorAt)
+      }
+      val holding = rows.filter { case (e, g, exp, _, _) => exp == null || exp == current((e, g)) }
+      // identical duplicates of some rows collapse to one
+      val batch = rnd.shuffle(rows ++ rows.filter(_ => rnd.nextInt(3) == 0))
+      val res = StatusStore.casMerge(batch.toDF(
+        "event_id", "guest_id", "expected_status", "new_status", "error_at"), dir)
+      model ++= holding.map { case (e, g, _, next, err) => (e, g) -> (next, err) }
+      if (holding.nonEmpty) version += 1
+      val what = s"round $round: $rows"
+      assert(res.applied == holding.size.toLong, what)
+      assert(res.rejected == (rows.size - holding.size).toLong, what)
+      assert(res.version == version && StatusStore.currentVersion(dir) == version, what)
+      assert(snapshots() == version, s"$what: a snapshot without a commit")
+      val stored = StatusStore.read(spark, dir).toSeq.flatMap(_.collect().toSeq).map { r =>
+        (r.getString(0), r.getString(1)) -> (r.getString(2), r.getString(3))
+      }
+      assert(stored.size == model.size && stored.toMap == model, what)
+      val won = res.appliedKeys.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(won.sorted == holding.map(h => (h._1, h._2)).sorted, what)
+    }
+    val none = StatusStore.casMerge(Seq.empty[(String, String, String, String, String)]
+      .toDF("event_id", "guest_id", "expected_status", "new_status", "error_at"), dir)
+    assert(none.applied == 0L && none.rejected == 0L && none.version == version)
+    assert(none.appliedKeys.collect().isEmpty && snapshots() == version)
+  }
+
+  test("a casMerge whose snapshot write throws leaves nothing cached") {
+    import graft.sink.StatusStore
+    import spark.implicits._
+    // a regular file where the status dir's parent belongs: the update
+    // applies, then the snapshot write throws
+    val blocker = Files.createFile(Files.createTempDirectory("graft-cas-fail").resolve("blocker"))
+    val dir = blocker.resolve("status").toString
+    // numCachedEntries is spark-private in Scala, public in bytecode
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cached() = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val before = cached()
+    intercept[Exception](StatusStore.casMerge(StatusStore.markProcessing(
+      Seq(("e1", "g1")).toDF("event_id", "guest_id")), dir))
+    assert(cached() == before)
+  }
+
   test("batch replay through the CAS store produces no duplicate email intent") {
     import graft.sink.StatusStore
     val base = Files.createTempDirectory("graft-cas-replay").toString

@@ -13,9 +13,18 @@ favour one side. Each side builds its own copy under its own
 `.bench_build/`.
 
 Writes every result line plus, per end-to-end metric of BENCHMARK.json,
-the paired medians, the parent's quartiles, and the pairs on which the
-change was better, to the `--out` JSON. Run it from the root of a
-checkout.
+what the benchmark check reads, to the `--out` JSON:
+
+- each side's median and quartiles, and its spread (quartile distance
+  over median), with `spread_within_bound` true when both spreads are
+  within the metric's `bound`;
+- the pairs on which the change was better, whether the change's median
+  is worse than the parent's by more than the bound, and whether it is
+  better by more than the parent's quartile distance;
+- per side, the runs at fault: an error, `correct: false` or
+  `failed > 0`.
+
+Run it from the root of a checkout.
 """
 import argparse
 import json
@@ -53,9 +62,19 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def summary(pairs, better_of):
-    out = {}
-    for m, better in better_of.items():
+def spread(q1, q3, median):
+    return (q3 - q1) / median if median else None
+
+
+def at_fault(run):
+    return "error" in run or run.get("correct") is False or run.get("failed", 0) > 0
+
+
+def summary(pairs, metrics):
+    out = {"runs_at_fault": {side: sum(1 for p in pairs if at_fault(p[side]))
+                             for side in ("parent", "change")}}
+    pairs = [p for p in pairs if "error" not in p["parent"] and "error" not in p["change"]]
+    for m, (better, bound) in metrics.items():
         got = [(p["parent"]["metrics"][m]["value"], p["change"]["metrics"][m]["value"])
                for p in pairs
                if m in p["parent"].get("metrics", {}) and m in p["change"].get("metrics", {})]
@@ -64,13 +83,23 @@ def summary(pairs, better_of):
         par = [a for a, _ in got]
         chg = [b for _, b in got]
         q1, q3 = quartiles(par)
+        cq1, cq3 = quartiles(chg)
         med_p, med_c = statistics.median(par), statistics.median(chg)
+        sp_p, sp_c = spread(q1, q3, med_p), spread(cq1, cq3, med_c)
+        # the change's gain in the metric's good direction
+        gain = med_p - med_c if better == "lower" else med_c - med_p
         out[m] = {
             "better": better,
+            "bound": bound,
             "pairs": len(got),
             "parent_median": med_p, "parent_q1": q1, "parent_q3": q3,
-            "change_median": med_c,
+            "change_median": med_c, "change_q1": cq1, "change_q3": cq3,
+            "parent_spread": sp_p, "change_spread": sp_c,
+            "spread_within_bound": sp_p is not None and sp_c is not None
+                                   and sp_p <= bound and sp_c <= bound,
             "delta_pct": 100.0 * (med_c - med_p) / med_p if med_p else None,
+            "worse_than_bound": bool(med_p) and -gain / abs(med_p) > bound,
+            "gain_exceeds_parent_iqr": gain > q3 - q1,
             "change_better_pairs": sum(
                 1 for a, b in got if (b < a if better == "lower" else b > a)),
         }
@@ -90,7 +119,7 @@ def main():
 
     tree = os.getcwd()
     with open(os.path.join(tree, "BENCHMARK.json")) as f:
-        better_of = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        metrics = {m["name"]: (m["better"], m["bound"]) for m in json.load(f)["end_to_end"]}
     work = args.work or tempfile.mkdtemp(prefix="abab-")
     parent = os.path.join(work, "parent")
     shutil.rmtree(parent, ignore_errors=True)
@@ -113,9 +142,7 @@ def main():
                  pair[s].get("error")) for s in ("parent", "change")}
         print(f"seed {seed} ({order[0]} first): batch_p50_ms {brief}", file=sys.stderr)
         result = {"workload": args.workload, "seconds": args.seconds, "trace": args.trace,
-                  "parent_rev": sha, "pairs": pairs, "summary": summary(
-                      [p for p in pairs if "error" not in p["parent"]
-                       and "error" not in p["change"]], better_of)}
+                  "parent_rev": sha, "pairs": pairs, "summary": summary(pairs, metrics)}
         with open(args.out, "w") as f:  # rewritten after every pair
             json.dump(result, f, indent=1)
     print(json.dumps(result["summary"], indent=1))
