@@ -4,11 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-time windowing over the `events` table — the watermark/window
+/** Event-time windowing over the `events` table — the window
   * operator family absent from the reference (SURVEY.md §2.2). Written as
-  * batch queries (the driver's oracle is batch SQL); the same expressions
-  * run under Structured Streaming with `withWatermark` — see
-  * graft.streaming for the streaming assembly.
+  * batch queries (the DuckDB oracle is batch SQL).
   *
   * Determinism: `value` is cast to DECIMAL before summing and the exact
   * decimal sum is emitted as a canonical string (decimal output columns
@@ -120,23 +118,12 @@ object EventOps {
       .agg(count(lit(1)).as("n_users"))
   }
 
-  /** Weekly cohort retention: users grouped by their first active week,
-    * then counted per (cohort, week offset) with the share of the
-    * cohort still active — the companion report to [[funnel]].
-    *
-    * All keys are integers (epoch-day div 7 against the house 1992
-    * base) and the single double division happens per output row, so
-    * the matrix hash-matches the SQL oracle. Shape: one distinct over
-    * (user, week) — map-side combinable — then user-keyed min + join
-    * that reuse one partitioning; the final per-cohort frame is tiny. */
   /** Funnel WITHIN sessions: gap-based sessionization (a >gapMinutes
     * silence starts a new session — lag + running sum of boundary
     * flags, the per-event assignment `session_window` aggregation
     * can't give), then the [[funnel]] stage chain keyed by (user,
     * session) — "did the journey convert in one sitting", the
-    * product-analytics composition of the two operators, and the batch
-    * analog of the streaming funnel's conversion window
-    * ([[graft.streaming.EventStream.funnelDepths]]).
+    * product-analytics composition of the two operators.
     *
     * Scale posture: the session assignment windows per user (one
     * exchange of the events frame); every funnel join+agg then reuses
@@ -184,22 +171,21 @@ object EventOps {
       .agg(count(lit(1)).as("n_sessions"))
   }
 
-  /** Epoch-week of an event's ts (against the house 1992 base) — shared
-    * by the batch retention matrix below and the streaming weekly-
-    * activity core ([[graft.streaming.EventStream.weeklyActivity]]). */
-  def weekCol: Column = expr(
+  /** Epoch-week of an event's ts (against the house 1992 base). */
+  private def weekCol: Column = expr(
     "CAST(datediff(CAST(ts AS DATE), DATE '1992-01-01') div 7 AS BIGINT)")
 
-  def retentionCohorts(events: DataFrame): DataFrame =
-    retentionFromWeekly(
-      events.select(col("user_id"), weekCol.as("week")).distinct())
-
-  /** Retention tail over an already-DISTINCT (user_id, week) activity
-    * frame — the report shape shared between batch (distinct inline,
-    * above) and streaming (the activity frame is the accumulated
-    * output of the watermarked streaming dedup, one row per (user,
-    * week), so this same tail runs as a tiny batch query over it). */
-  def retentionFromWeekly(weekly: DataFrame): DataFrame = {
+  /** Weekly cohort retention: users grouped by their first active week,
+    * then counted per (cohort, week offset) with the share of the
+    * cohort still active — the companion report to [[funnel]].
+    *
+    * All keys are integers (epoch-day div 7 against the house 1992
+    * base) and the single double division happens per output row, so
+    * the matrix hash-matches the SQL oracle. Shape: one distinct over
+    * (user, week) — map-side combinable — then user-keyed min + join
+    * that reuse one partitioning; the final per-cohort frame is tiny. */
+  def retentionCohorts(events: DataFrame): DataFrame = {
+    val weekly = events.select(col("user_id"), weekCol.as("week")).distinct()
     val cohort = weekly.groupBy(col("user_id"))
       .agg(min(col("week")).as("cohort_week"))
     val counts = weekly.join(cohort, Seq("user_id"))

@@ -71,46 +71,3 @@ object Model {
   val Actions: Seq[String] =
     Seq("email_triggered", "skipped", "duplicate_prevented", "error")
 }
-
-/** Typed core record produced by the decode operator — the Scala analog of
-  * the reference's parsed matchResult (index.js:350-385). Numbers default
-  * to 0, arrays to empty, everything else nullable. */
-case class FaceMatchResult(
-    eventId: String,
-    guestId: String,
-    guestName: String,
-    guestEmail: String,
-    guestPhone: String,
-    emailStatus: String,
-    emailSent: Option[Boolean],
-    whatsappStatus: String,
-    whatsappSent: Option[Boolean],
-    guestSelfieUrl: String,
-    guestRegistrationId: String,
-    totalMatches: Int,
-    newMatches: Int,
-    bestSimilarity: Double,
-    averageSimilarity: Double,
-    profileQuality: Double,
-    overallScore: Double,
-    deliveryStatus: String,
-    processedAt: String,
-    createdAt: String,
-    algorithmVersion: String,
-    updateMode: String,
-    matchedImages: Seq[MatchedImage])
-
-case class MatchedImage(
-    pool_url: String,
-    pool_filename: String,
-    similarity_score: Double,
-    match_confidence: Double)
-
-/** Delivery-status state-machine row (FIXTURES.md §2): the keyed state the
-  * reference stores in the source table itself (index.js:448-522). */
-case class DeliveryState(
-    eventId: String,
-    guestId: String,
-    guestEmail: String,
-    deliveryStatus: String, // null | pending | processing | delivered
-    emailStatus: String)    // null | sent

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Analytics, DedupOps, EmbedOps, TextOps}
+import graft.ext.{Analytics, DedupOps, EmbedOps, Scored, TextOps, TopK}
 
 /** Behavior tests of the extension operators on tiny controlled frames. */
 class ExtOpsSpec extends SparkSpec {
@@ -597,6 +597,16 @@ class ExtOpsSpec extends SparkSpec {
     assert(got(("en", 1)) == ("a b", 3L))
     assert(got(("en", 2)) == ("b a", 1L))
     assert(got(("de", 1)) == ("z z", 2L))
+  }
+
+  test("typed top-K aggregator keeps K best with deterministic ties") {
+    import spark.implicits._
+    val ds = Seq(
+      Scored("g1", "a", 0.9), Scored("g1", "b", 0.8), Scored("g1", "c", 0.95),
+      Scored("g1", "d", 0.8), Scored("g2", "x", 0.1)).toDS()
+    val out = TopK.topKPerKey(ds, 3).collect().toMap
+    assert(out("g1") == Seq("c", "a", "b")) // 0.8 tie: "b" beats "d"
+    assert(out("g2") == Seq("x"))
   }
 
   test("approx percentiles stay within the sketch's rank-error bound of the exact form") {

@@ -1,14 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import graft.streaming.EventStream
 
 /** RocksDB state-store soak: the stateful streaming pipelines' stream ≡
   * batch pins re-run against `RocksDBStateStoreProvider` with feeds
@@ -18,252 +13,32 @@ import graft.streaming.EventStream
   * HDFS-backed provider; a 100-TB deployment runs RocksDB (state
   * larger than executor heap, changelog checkpointing), and the two
   * providers exercise different serialization and range-scan paths —
-  * notably fMGWS timer scans and the TWS column families. Each soak
-  * asserts (a) answers identical to the batch twin, (b) RocksDB
-  * actually engaged (rocksdb* custom metrics present in the progress),
-  * and records state rows/bytes + batch durations to
+  * notably fMGWS timer scans. Each soak asserts (a) answers identical
+  * to the batch twin, (b) RocksDB actually engaged (rocksdb* custom
+  * metrics present in the progress), and records state rows/bytes + batch durations to
   * `target/bench_results/rocksdb_soak.json`, so a test run leaves the
   * tree clean; refreshing the committed `bench_results/` copy is a
   * deliberate copy of that file.
   *
-  * The provider conf is set per-test and restored (the same
-  * set/restore pattern as StreamingWindowSpec's TWS test); the state
-  * store provider is read at query start, so scoping it around the
-  * query is sufficient. */
+  * The provider conf is set per-test and restored; the state store
+  * provider is read at query start, so scoping it around the query is
+  * sufficient. */
 class RocksDbSoakSpec extends SparkSpec {
 
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private def ts(base: String, plusSec: Long): Timestamp =
-    new Timestamp(Timestamp.valueOf(base).getTime + plusSec * 1000L)
-
   private val soakStats =
     collection.mutable.LinkedHashMap.empty[String, Map[String, Long]]
 
-  /** Run `body` with the RocksDB provider active; collect progress
-    * metrics + assert RocksDB engaged. */
-  private def withRocks[A](name: String)(start: => StreamingQuery)(
-      drive: StreamingQuery => A): A = {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      RocksProvider)
-    val q = start
-    try {
-      val out = drive(q)
-      val progresses = q.recentProgress.filter(_.stateOperators.nonEmpty)
-      assert(progresses.nonEmpty, s"$name produced no stateful progress")
-      val custom = progresses.flatMap(_.stateOperators)
-        .flatMap(_.customMetrics.keySet.toArray.map(_.toString))
-      assert(custom.exists(_.toLowerCase.contains("rocksdb")),
-        s"$name did not run on RocksDB — custom metrics: " +
-          custom.distinct.mkString(","))
-      soakStats(name) = Map(
-        "batches" -> progresses.length.toLong,
-        "max_batch_ms" -> progresses.map(_.batchDuration).max,
-        "state_rows" -> progresses.last.stateOperators.map(_.numRowsTotal).sum,
-        "state_bytes" -> progresses.last.stateOperators.map(_.memoryUsedBytes).sum)
-      out
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
+  /** The artifact rows the tests below write; a row on disk under any
+    * other name belongs to a deleted soak and is not carried over. */
+  private val Pipelines = Set("corpus_ingest_near", "corpus_ingest_substring",
+    "corpus_ingest_semantic_centroid", "corpus_ingest_index_serve",
+    "ccas_sink_restart")
 
-  test("tumbling windows on RocksDB: 10x feed, stream equals batch") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // 4000 events, 40 users, 8 types, ~6.6 hourly windows; event time
-    // ADVANCES with feed order (a time-jumbled grid would push the
-    // watermark past earlier chunks and correctly drop them as late —
-    // the in-order feed keeps the batch twin an exact oracle)
-    val data = (0 until 4000).map { i =>
-      (ts("2024-01-01 06:00:00", i * 6L),
-        (i % 40).toLong, s"t${i % 8}", (i % 11).toDouble)
-    }
-    val input = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val streamed = withRocks("tumbling") {
-      EventStream.tumblingCounts(events).writeStream
-        .outputMode(OutputMode.Append).format("memory")
-        .queryName("rocks_tumbling")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-rck").toString)
-        .start()
-    } { q =>
-      data.grouped(500).foreach { chunk =>
-        input.addData(chunk: _*); q.processAllAvailable()
-      }
-      // sentinels: advance the watermark past every window, then fire
-      input.addData((ts("2024-01-02 10:00:00", 0), 999L, "t0", 0.0))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-02 11:00:00", 0), 999L, "t0", 0.0))
-      q.processAllAvailable()
-      spark.table("rocks_tumbling")
-        .select("window_start", "event_type", "n_events", "sum_value")
-        .collect().map(_.toSeq).toSet
-    }
-    val batch = data.toDF("ts", "user_id", "event_type", "value")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      // same decimal cast as EventStream.tumblingCounts — a double sum
-      // would hash-differ in type and rounding
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
-      .collect().map(_.toSeq).toSet
-    assert(streamed.nonEmpty && streamed == batch)
-  }
-
-  test("fMGWS funnel state machine on RocksDB: 10x users, stream equals batch") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // 80 users with deterministic per-user depth: u%4==0 → view only,
-    // 1 → view+click, 2 → full funnel, 3 → non-entrant (purchase only)
-    val data = (0 until 80).flatMap { u =>
-      val base = ts("2024-01-01 10:00:00", u * 7L)
-      u % 4 match {
-        case 0 => Seq((base, u.toLong, "view", 1.0))
-        case 1 => Seq((base, u.toLong, "view", 1.0),
-          (ts("2024-01-01 10:00:00", u * 7L + 60), u.toLong, "click", 1.0))
-        case 2 => Seq((base, u.toLong, "view", 1.0),
-          (ts("2024-01-01 10:00:00", u * 7L + 60), u.toLong, "click", 1.0),
-          (ts("2024-01-01 10:00:00", u * 7L + 120), u.toLong, "purchase", 1.0))
-        case _ => Seq((base, u.toLong, "purchase", 1.0))
-      }
-    }
-    val input = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type", "value")
-    val streamed = withRocks("funnel_fmgws") {
-      EventStream.funnelDepths(events).writeStream
-        .outputMode(OutputMode.Append).format("memory")
-        .queryName("rocks_funnel")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-rck").toString)
-        .start()
-    } { q =>
-      data.grouped(60).foreach { chunk =>
-        input.addData(chunk: _*); q.processAllAvailable()
-      }
-      input.addData((ts("2024-01-02 10:00:00", 0), 999L, "view", 0.0))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-02 11:00:00", 0), 999L, "view", 0.0))
-      q.processAllAvailable()
-      EventStream.funnelCounts(spark.table("rocks_funnel"))
-        .collect().map(r =>
-          r.getAs[Int]("funnel_stage") -> r.getAs[Long]("n_users")).toMap
-    }
-    val batch = graft.ext.EventOps
-      .funnel(data.toDF("ts", "user_id", "event_type", "value"))
-      .collect().map(r =>
-        r.getAs[Int]("funnel_stage") -> r.getAs[Long]("n_users")).toMap
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-    assert(streamed == Map(1 -> 20L, 2 -> 20L, 3 -> 20L))
-  }
-
-  test("streaming as-of (TWS) on RocksDB: 10x keys, stream equals batch") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // 50 users x (3 clicks + 2 purchases), deliberately interleaved
-    // out of order within the watermark horizon
-    val data = (0 until 50).flatMap { u =>
-      def t(s: Long) = ts("2024-01-01 10:00:00", u * 3L + s)
-      Seq(
-        (t(0), u.toLong, "click", u * 10L + 1),
-        (t(120), u.toLong, "purchase", u * 10L + 5),
-        (t(60), u.toLong, "click", u * 10L + 2), // out of order
-        (t(300), u.toLong, "purchase", u * 10L + 6),
-        (t(240), u.toLong, "click", u * 10L + 3))
-    }
-    val input = MemoryStream[(Timestamp, Long, String, Long)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type", "event_id")
-    val cols = Seq("user_id", "purchase_event_id", "purchase_ts",
-      "click_event_id", "click_ts", "gap_us")
-    def toSet(df: DataFrame) =
-      df.select(cols.head, cols.tail: _*).collect()
-        .map(r => cols.indices.map(i =>
-          if (r.isNullAt(i)) null else r.get(i).toString)).toSet
-    val streamed = withRocks("asof_tws") {
-      graft.streaming.AsOfStream.clickAsOfPurchaseStream(events).writeStream
-        .outputMode(OutputMode.Append).format("memory")
-        .queryName("rocks_asof")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-rck").toString)
-        .start()
-    } { q =>
-      data.grouped(50).foreach { chunk =>
-        input.addData(chunk: _*); q.processAllAvailable()
-      }
-      input.addData((ts("2024-01-01 20:00:00", 0), 999L, "click", 900L))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-01 21:00:00", 0), 999L, "click", 901L))
-      q.processAllAvailable()
-      toSet(spark.table("rocks_asof"))
-    }
-    val batch = toSet(graft.ext.TemporalJoins.clickAsOfPurchase(
-      data.toDF("ts", "user_id", "event_type", "event_id")))
-    assert(streamed == batch)
-    assert(streamed.size == 100) // 2 purchases x 50 users
-  }
-
-  test("streaming FORWARD as-of (r15 direction) on RocksDB: stream equals batch native") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // same interleaved 50-user feed as the backward soak, driven
-    // through the forward direction (tolerance-bounded successor
-    // search) — the candidate/miss timers exercise RocksDB timer scans
-    val data = (0 until 50).flatMap { u =>
-      def t(s: Long) = ts("2024-01-01 10:00:00", u * 3L + s)
-      Seq(
-        (t(0), u.toLong, "click", u * 10L + 1),
-        (t(120), u.toLong, "purchase", u * 10L + 5),
-        (t(60), u.toLong, "click", u * 10L + 2), // out of order
-        (t(300), u.toLong, "purchase", u * 10L + 6),
-        (t(240), u.toLong, "click", u * 10L + 3))
-    }
-    val tol = 3600000000L // 1h
-    val input = MemoryStream[(Timestamp, Long, String, Long)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type", "event_id")
-    val cols = Seq("user_id", "purchase_event_id", "purchase_ts",
-      "click_event_id", "click_ts", "gap_us")
-    def toSet(df: DataFrame) =
-      df.select(cols.head, cols.tail: _*).collect()
-        .map(r => cols.indices.map(i =>
-          if (r.isNullAt(i)) null else r.get(i).toString)).toSet
-    val streamed = withRocks("asof_fwd_tws") {
-      graft.streaming.AsOfStream.clickAsOfPurchaseStream(
-        events, toleranceUs = Some(tol), direction = "forward").writeStream
-        .outputMode(OutputMode.Append).format("memory")
-        .queryName("rocks_asof_fwd")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-rck").toString)
-        .start()
-    } { q =>
-      data.grouped(50).foreach { chunk =>
-        input.addData(chunk: _*); q.processAllAvailable()
-      }
-      input.addData((ts("2024-01-02 20:00:00", 0), 999L, "click", 900L))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-02 21:00:00", 0), 999L, "click", 901L))
-      q.processAllAvailable()
-      toSet(spark.table("rocks_asof_fwd"))
-    }
-    val batch = toSet(graft.ext.TemporalJoins.clickAsOfPurchaseNative(
-      data.toDF("ts", "user_id", "event_type", "event_id"),
-      Some(tol), broadcastRight = false, "forward"))
-    assert(streamed == batch)
-    assert(streamed.size == 100) // 2 purchases x 50 users
-  }
-
-  /** Set the RocksDB provider around `body`, restore after — for the
-    * multi-query (restart) soaks that [[withRocks]]'s single-query
-    * harness can't wrap. */
+  /** Set the RocksDB provider around `body`, restore after — each soak
+    * runs several queries (a mid-stream restart) inside it. */
   private def withRocksConf[A](body: => A): A = {
     val prev = spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass")
@@ -730,14 +505,14 @@ class RocksDbSoakSpec extends SparkSpec {
     // pipeline, the numbers behind the "runs on RocksDB" claim.
     // MERGE with rows already on disk: a filtered run (testOnly -z)
     // must refresh only the pipelines it exercised, not clobber the
-    // full artifact down to its own subset
+    // full artifact down to its own subset; rows of other names drop
     if (soakStats.nonEmpty) {
       val p = java.nio.file.Paths.get("target/bench_results/rocksdb_soak.json")
       if (Files.exists(p)) {
         val txt = new String(Files.readAllBytes(p), "UTF-8")
         val row = """"(\w+)":\{([^}]*)\}""".r
         for (m <- row.findAllMatchIn(txt)
-             if !soakStats.contains(m.group(1)) && m.group(1) != "pipelines") {
+             if Pipelines(m.group(1)) && !soakStats.contains(m.group(1))) {
           val fields = m.group(2).split(",").flatMap { f =>
             f.split(":") match {
               case Array(k, v) => scala.util.Try(

@@ -24,6 +24,15 @@ if raw=$(git grep -n -e 'Files\.list(' -e 'Files\.walk(' -e 'Files\.createLink('
   echo "$raw" >&2
   exit 1
 fi
+# The CDC path is the one stateful stream: keyed state, watermarks and
+# streaming dedup live in StreamPipeline.scala only.
+if raw=$(git grep -n -e '\.flatMapGroupsWithState(' -e '\.transformWithState(' \
+    -e '\.withWatermark(' -e '\.dropDuplicatesWithinWatermark(' \
+    -- src/main ':!src/main/scala/graft/streaming/StreamPipeline.scala'); then
+  echo "stateful stream operators outside StreamPipeline.scala:" >&2
+  echo "$raw" >&2
+  exit 1
+fi
 # Every `main` in src/main is a driver entry point or a kept tool; a dev
 # probe whose question is answered leaves its artifact in bench_results/
 # and is deleted, not kept as another main. A new main joins this list.
