@@ -76,14 +76,6 @@ object EventOps {
         date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("first_ts"),
         count(lit(1)).as("n_total"))
 
-  /** Global top-K event types by volume through the typed
-    * [[TopKAggregator]] — the bounded-heap Aggregator as a production
-    * query (elsewhere it is only spec-driven). The aggregate counts
-    * shrink the input to one row per type BEFORE the heap, so the
-    * Aggregator's map-side combine carries ≤ K tuples per partition —
-    * the shape that makes global top-K a near-free reduction at 100 TB.
-    * Ordering contract (score desc, item asc tie-break) matches the
-    * windowed row_number form, so a plain SQL oracle reproduces it. */
   /** Ordered funnel analysis: per user, the earliest stage-1 event,
     * then the earliest stage-2 event STRICTLY AFTER it, and so on —
     * the sequential-pattern query behind conversion reporting. Output
@@ -239,6 +231,14 @@ object EventOps {
       .select(col("event_id"), col("event_type"), col("value"), col("zscore"))
   }
 
+  /** Global top-K event types by volume through the typed
+    * [[TopKAggregator]] — the bounded-heap Aggregator as a production
+    * query (elsewhere it is only spec-driven). The aggregate counts
+    * shrink the input to one row per type BEFORE the heap, so the
+    * Aggregator's map-side combine carries ≤ K tuples per partition —
+    * the shape that makes global top-K a near-free reduction at 100 TB.
+    * Ordering contract (score desc, item asc tie-break) matches the
+    * windowed row_number form, so a plain SQL oracle reproduces it. */
   def topEventTypes(events: DataFrame, k: Int = 3): DataFrame = {
     import events.sparkSession.implicits._
     val counts = events.groupBy(col("event_type")).agg(count(lit(1)).as("n"))

@@ -37,8 +37,10 @@ object EmailJobSink {
   /** Writes the jobs of micro-batch `batchId` as the partition
     * `batch_id=<batchId>` under `jobsDir`, replacing whatever an
     * earlier attempt of the same batch left there. One job, labelled
-    * `jobs:write`; the caller writes only a non-empty batch, since an
-    * empty write would still create the partition. */
+    * `jobs:write`, and one file per partition of `jobs`: the CDC sink
+    * passes one partition, so a batch partition holds one file. The
+    * caller writes only a non-empty batch, since an empty write would
+    * still create the partition. */
   def writeBatch(jobs: DataFrame, jobsDir: String, batchId: Long): Unit =
     JobLabel(jobs.sparkSession, "jobs:write") {
       jobs.write.mode(SaveMode.Overwrite).parquet(s"$jobsDir/batch_id=$batchId")

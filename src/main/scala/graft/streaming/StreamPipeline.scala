@@ -238,6 +238,19 @@ object StreamPipeline {
         concat(col("eventId"), lit("-"),
           substring_index(col("emailKey"), "|", -1)).as("dedup_id"))
 
+  /** The status keys `(event_id, guest_id)` a batch triggers or marks
+    * duplicate, one row each, keyed once: `t` when some outcome of the
+    * key triggered, `d` when some outcome was a duplicate. The
+    * aggregate leaves the rows hash-partitioned on the status key, so
+    * the status commit's join shuffles only the snapshot. */
+  private def statusKeys(batch: DataFrame): DataFrame =
+    batch.filter(col("action").isin("email_triggered", "duplicate_prevented"))
+      .select(col("eventId").as("event_id"), col("guestId").as("guest_id"),
+        col("action"))
+      .groupBy(StatusKey.map(col): _*)
+      .agg(max(col("action") === "email_triggered").as("t"),
+        max(col("action") === "duplicate_prevented").as("d"))
+
   /** Runs `write` for a batch the sink's commit log (`_txn` under the
     * jobs dir, underscore-prefixed so parquet readers skip it) has not
     * seen, over the batch cached for the length of the call. A replayed
@@ -259,22 +272,24 @@ object StreamPipeline {
     * reference's conditional UpdateItem + revert, order per
     * index.js:448-522:
     *
-    *  1. ONE status commit: triggered keys CAS 'pending' → 'processing',
-    *     and duplicate outcomes mark 'delivered' unconditionally
-    *     (index.js:324-344). A key some OTHER process already moved is
-    *     rejected, and its email job is NOT written (the lost
-    *     conditional write, index.js:483-489);
+    *  1. ONE status commit over the batch's status keys, keyed once
+    *     ([[statusKeys]]): a triggered key CASes 'pending' →
+    *     'processing', and a key with only duplicate outcomes is marked
+    *     'delivered' unconditionally (index.js:324-344). A key some
+    *     OTHER process already moved is rejected, and its email job is
+    *     NOT written (the lost conditional write, index.js:483-489);
     *  2. the CAS winners' email jobs are written as the batch's own
-    *     partition of the jobs table ([[EmailJobSink.writeBatch]]);
+    *     partition of the jobs table ([[EmailJobSink.writeBatch]]), one
+    *     file;
     *  3. if that write (the "send") fails, winners revert
     *     'processing' → 'pending' + email_error_at (index.js:509-522)
     *     and the batch rethrows — offsets don't advance, the replay
     *     re-runs the CAS against the reverted table, re-applies the
     *     markers, and rewrites the batch's partition;
     *  4. a key the batch both triggers and marks duplicate keeps the
-    *     order CAS, send, 'delivered': its marker is left out of step
-    *     1 and committed here, in a second commit that runs only when
-    *     such a key exists.
+    *     order CAS, send, 'delivered': step 1 only CASes it, and its
+    *     marker, taken from the same keyed rows, is committed here, in
+    *     a second commit that runs only when such a key exists.
     *
     * Sink-before-state order per SURVEY.md §7.4.2. A replay converges
     * after a failed send that reverted, and `TxnLog` makes the replay
@@ -295,11 +310,17 @@ object StreamPipeline {
     * all-`skipped` batch) runs that one job and no sink I/O. Otherwise
     * the status commit runs one job (the snapshot write, which also
     * counts its verdicts) and the job write one: 3 jobs with AQE off,
-    * whatever the broadcast threshold. When the trigger CAS rejects no
-    * key, the winners are the triggered rows themselves and no semi-join
-    * re-derives them from the CAS verdicts. A replayed batch the commit
-    * log holds runs no job. Each step's jobs carry a [[graft.JobLabel]] (`sink:count`,
-    * `cas:commit`, `jobs:write`, `cas:revert`, `cas:delivered`). */
+    * whatever the broadcast threshold. The status commit's updates are
+    * the keyed rows, one aggregate over the cached batch, already
+    * partitioned on the status key, so its write shuffles only the
+    * snapshot: 3 stages. When the trigger CAS rejects no key, the
+    * winners are the triggered rows themselves, coalesced to one task
+    * and one file; otherwise a semi-join with the CAS verdicts picks
+    * them in parallel and one file is written after it. At 4 shuffle
+    * partitions a batch with input runs 19 tasks. A replayed batch the
+    * commit log holds runs no job. Each step's jobs carry a
+    * [[graft.JobLabel]] (`sink:count`, `cas:commit`, `jobs:write`,
+    * `cas:revert`, `cas:delivered`). */
   def casSinkTo(out: Dataset[StreamOutcome], checkpoint: String,
       jobsDir: String, statusDir: String,
       failSend: () => Boolean = () => false): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -312,23 +333,20 @@ object StreamPipeline {
           val n = actionCounts(df)
           if (n.triggerKeys + n.dupKeys > 0) {
             val triggered = triggeredJobs(df)
-            val triggerKeys = triggered.select("event_id", "guest_id")
-            val dupKeys = df.filter(col("action") === "duplicate_prevented")
-              .select(col("eventId").as("event_id"), col("guestId").as("guest_id"))
-            val earlyDups = if (n.overlapKeys == 0) dupKeys
-              else dupKeys.join(triggerKeys, StatusKey, "left_anti")
-            val updates = Seq(
-              Option.when(n.triggerKeys > 0)(StatusStore.markProcessing(triggerKeys)),
-              Option.when(n.dupKeys > n.overlapKeys)(StatusStore.markDelivered(earlyDups)))
-              .flatten.reduce(_ unionByName _)
-            val cas = JobLabel(spark, "cas:commit")(StatusStore.casMerge(updates, statusDir))
+            val keyed = statusKeys(df)
+            val cas = JobLabel(spark, "cas:commit") {
+              StatusStore.casMerge(keyed.select(col("event_id"), col("guest_id"),
+                when(col("t"), lit("pending")).as("expected_status"),
+                when(col("t"), lit("processing")).otherwise(lit("delivered")).as("new_status"),
+                lit(null).cast("string").as("error_at")), statusDir)
+            }
             // a marker always holds, so every rejected row is a trigger
             // whose key another process moved: only OUR CAS winners own
             // their key and may send; with no key rejected every
             // triggered row won
             if (n.triggerKeys > cas.rejected) {
-              val winners = if (cas.rejected == 0) triggered
-                else triggered.join(cas.appliedKeys, StatusKey, "left_semi")
+              val winners = if (cas.rejected == 0) triggered.coalesce(1)
+                else triggered.join(cas.appliedKeys, StatusKey, "left_semi").repartition(1)
               try {
                 if (failSend()) throw new RuntimeException("injected send failure")
                 EmailJobSink.writeBatch(winners, jobsDir, batchId)
@@ -345,7 +363,7 @@ object StreamPipeline {
             }
             if (n.overlapKeys > 0) JobLabel(spark, "cas:delivered") {
               StatusStore.casMerge(StatusStore.markDelivered(
-                dupKeys.join(triggerKeys, StatusKey, "left_semi")), statusDir)
+                keyed.filter(col("t") && col("d"))), statusDir)
             }
           }
         }

@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -16,11 +17,16 @@ import graft.streaming.{StreamOutcome, StreamPipeline}
 
 object SinkJobBudgetSpec {
 
-  /** The properties of every job started while registered. */
+  /** The properties of every job started, and of every stage submitted,
+    * while registered. A stage the scheduler skips (its shuffle output
+    * already exists) is never submitted. */
   class JobLog extends SparkListener {
     val jobs = new ConcurrentLinkedQueue[java.util.Properties]()
+    val stages = new ConcurrentLinkedQueue[java.util.Properties]()
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).foreach(jobs.add)
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      Option(e.properties).foreach(stages.add)
 
     /** Listener-bus delivery is async: polls until the count is stable. */
     def settle(): Unit = {
@@ -60,7 +66,9 @@ object SinkJobBudgetSpec {
   * Jobs are counted per `streaming.sql.batchId` from the job-start
   * properties, under the same AQE-off, broadcast-off conf as
   * [[BarrierCountSpec]], and for the mixed batch also under the
-  * session's default broadcast threshold.
+  * session's default broadcast threshold. A multi-partition batch pins
+  * the file and stage budget too: one jobs file per batch, and a status
+  * write whose keyed updates need no shuffle of their own.
   */
 class SinkJobBudgetSpec extends SparkSpec {
   import SinkJobBudgetSpec._
@@ -68,7 +76,13 @@ class SinkJobBudgetSpec extends SparkSpec {
   /** Runs `body` with a started query under the counting conf, then
     * returns the job descriptions per batch id of that query. */
   private def jobsPerBatch(start: => StreamingQuery, broadcast: Boolean = false)(
-      body: StreamingQuery => Unit): Map[Long, Seq[String]] = {
+      body: StreamingQuery => Unit): Map[Long, Seq[String]] =
+    labelsPerBatch(start, broadcast)(body)._1
+
+  /** [[jobsPerBatch]] plus the descriptions of the stages each batch
+    * submitted. */
+  private def labelsPerBatch(start: => StreamingQuery, broadcast: Boolean = false)(
+      body: StreamingQuery => Unit): (Map[Long, Seq[String]], Map[Long, Seq[String]]) = {
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
     val q = countingConf(spark, broadcast)(start)
@@ -76,12 +90,14 @@ class SinkJobBudgetSpec extends SparkSpec {
     log.settle()
     spark.sparkContext.removeSparkListener(log)
     val id = q.id.toString
-    log.jobs.asScala.toSeq.flatMap { p =>
-      val b = p.getProperty("streaming.sql.batchId")
-      if (p.getProperty("sql.streaming.queryId") == id && b != null)
-        Some(b.toLong -> p.getProperty("spark.job.description"))
-      else None
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    def perBatch(props: ConcurrentLinkedQueue[java.util.Properties]) =
+      props.asScala.toSeq.flatMap { p =>
+        val b = p.getProperty("streaming.sql.batchId")
+        if (p.getProperty("sql.streaming.queryId") == id && b != null)
+          Some(b.toLong -> p.getProperty("spark.job.description"))
+        else None
+      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    (perBatch(log.jobs), perBatch(log.stages))
   }
 
   /** Data files of a table dir (the commit log and Spark's hidden files
@@ -188,6 +204,58 @@ class SinkJobBudgetSpec extends SparkSpec {
       assert(batches.exists { case (id, rows) => id == b && rows == 1L },
         s"batch $b carried no input: $batches")
     }
+  }
+
+  test("CAS sink: a key the batch both triggers and marks duplicate is delivered by a second commit") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-budget-overlap").toString
+    val statusDir = s"$base/status"
+    val input = MemoryStream[StreamOutcome]
+    // one guest updated twice in one batch: the first record triggers,
+    // the second is its duplicate
+    val perBatch = jobsPerBatch(StreamPipeline.casSinkTo(input.toDS(),
+        s"$base/ck", s"$base/jobs", statusDir)) { q =>
+      input.addData(StreamOutcome("r1", "ev1", "g1", "ev1|a@x.com", "email_triggered", ""),
+        StreamOutcome("r2", "ev1", "g1", "ev1|a@x.com", "duplicate_prevented", ""))
+      q.processAllAvailable()
+    }
+    val ran = perBatch.getOrElse(0L, Nil)
+    assert(ran == CommitBatch :+ "cas:delivered cas:write",
+      s"overlap batch ran ${ran.size} jobs: $ran")
+    assert(spark.read.parquet(s"$base/jobs").select("record_id").as[String]
+      .collect().toSeq == Seq("r1"))
+    val st = StatusStore.read(spark, statusDir).get.collect()
+      .map(r => (r.getAs[String]("event_id"), r.getAs[String]("guest_id"),
+        r.getAs[String]("delivery_status"))).toSeq
+    assert(st == Seq(("ev1", "g1", "delivered")))
+  }
+
+  test("CAS sink: a multi-partition batch writes one jobs file and its status write runs 3 stages") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val base = Files.createTempDirectory("graft-budget-files").toString
+    val statusDir = s"$base/status"
+    val jobsDir = s"$base/jobs"
+    // a stored row, so the status write joins a non-empty snapshot
+    StatusStore.casMerge(StatusStore.markDelivered(
+      Seq(("ev0", "gr0")).toDF("event_id", "guest_id")), statusDir)
+    val input = MemoryStream[(Long, String)]
+    val envelope = MatchFixture.envelope(input.toDF().toDF("c_custkey", "c_name"))
+    val (jobs, stages) = labelsPerBatch(StreamPipeline.casSinkTo(
+        StreamPipeline.outcomesWithTtl(envelope, ttlMs = 1000000L),
+        s"$base/ck", jobsDir, statusDir)) { q =>
+      input.addData((1L to 400L).map(k => (k, s"Customer#$k")))
+      q.processAllAvailable()
+    }
+    assert(jobs.getOrElse(0L, Nil) == CommitBatch, s"jobs: $jobs")
+    // 127 triggers, hashed by email key over all 4 state partitions
+    val written = spark.read.parquet(jobsDir).count()
+    assert(written == 127L, s"$written jobs")
+    val parts = DirIO.listNames(Paths.get(s"$jobsDir/batch_id=0")).filter(_.startsWith("part-"))
+    assert(parts.size == 1, s"jobs files: $parts")
+    val casStages = stages.getOrElse(0L, Nil).count(_ == "cas:commit cas:write")
+    assert(casStages == 3, s"cas:commit cas:write ran $casStages stages: $stages")
   }
 
   test("JobLabel nests inside an outer step and restores the description") {

@@ -21,6 +21,10 @@ what the benchmark check reads, to the `--out` JSON:
 - the pairs on which the change was better, whether the change's median
   is worse than the parent's by more than the bound, and whether it is
   better by more than the parent's quartile distance;
+- `claim_met`, the claim rule applied: true only when the change was
+  better in at least 9 of every 10 pairs (a tie counts for neither
+  side) and its median gain exceeds the parent's quartile distance
+  (`gain_exceeds_parent_iqr`);
 - per side, the runs at fault: an error, `correct: false` or
   `failed > 0`.
 
@@ -88,6 +92,7 @@ def summary(pairs, metrics):
         sp_p, sp_c = spread(q1, q3, med_p), spread(cq1, cq3, med_c)
         # the change's gain in the metric's good direction
         gain = med_p - med_c if better == "lower" else med_c - med_p
+        better_pairs = sum(1 for a, b in got if (b < a if better == "lower" else b > a))
         out[m] = {
             "better": better,
             "bound": bound,
@@ -100,8 +105,8 @@ def summary(pairs, metrics):
             "delta_pct": 100.0 * (med_c - med_p) / med_p if med_p else None,
             "worse_than_bound": bool(med_p) and -gain / abs(med_p) > bound,
             "gain_exceeds_parent_iqr": gain > q3 - q1,
-            "change_better_pairs": sum(
-                1 for a, b in got if (b < a if better == "lower" else b > a)),
+            "change_better_pairs": better_pairs,
+            "claim_met": 10 * better_pairs >= 9 * len(got) and gain > q3 - q1,
         }
     return out
 
