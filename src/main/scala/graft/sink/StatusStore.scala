@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -183,13 +183,20 @@ object StatusStore {
     throw new IllegalStateException("unreachable")
   }
 
+  /** One update row per key: the O11 transition ([[markProcessing]])
+    * where `triggered` holds, else the duplicate marker
+    * ([[markDelivered]]). Both kinds come from one frame, so a status
+    * commit reads its keys once. */
+  def markProcessingOrDelivered(keys: DataFrame, triggered: Column): DataFrame =
+    keys.select(col("event_id"), col("guest_id"),
+      when(triggered, lit("pending")).as("expected_status"),
+      when(triggered, lit("processing")).otherwise(lit("delivered")).as("new_status"),
+      lit(null).cast("string").as("error_at"))
+
   /** The O11 transition for a triggered batch: 'pending' → 'processing'
     * guarded exactly like the reference's ConditionExpression. */
   def markProcessing(keys: DataFrame): DataFrame =
-    keys.select(col("event_id"), col("guest_id"),
-      lit("pending").as("expected_status"),
-      lit("processing").as("new_status"),
-      lit(null).cast("string").as("error_at"))
+    markProcessingOrDelivered(keys, lit(true))
 
   /** The O12 compensation: back to 'pending' with the error timestamp,
     * applied only while the row is still ours ('processing'). */
@@ -201,10 +208,7 @@ object StatusStore {
 
   /** The duplicate marker (index.js:324-344): unconditional 'delivered'. */
   def markDelivered(keys: DataFrame): DataFrame =
-    keys.select(col("event_id"), col("guest_id"),
-      lit(null).cast("string").as("expected_status"),
-      lit("delivered").as("new_status"),
-      lit(null).cast("string").as("error_at"))
+    markProcessingOrDelivered(keys, lit(false))
 
   /** r19 tombstone extension ([[graft.pipeline.Tombstones]]): a
     * REMOVE propagates delivery_status 'deleted', unconditional like

@@ -335,10 +335,8 @@ object StreamPipeline {
             val triggered = triggeredJobs(df)
             val keyed = statusKeys(df)
             val cas = JobLabel(spark, "cas:commit") {
-              StatusStore.casMerge(keyed.select(col("event_id"), col("guest_id"),
-                when(col("t"), lit("pending")).as("expected_status"),
-                when(col("t"), lit("processing")).otherwise(lit("delivered")).as("new_status"),
-                lit(null).cast("string").as("error_at")), statusDir)
+              StatusStore.casMerge(
+                StatusStore.markProcessingOrDelivered(keyed, col("t")), statusDir)
             }
             // a marker always holds, so every rejected row is a trigger
             // whose key another process moved: only OUR CAS winners own
