@@ -6,9 +6,7 @@ import org.apache.spark.sql.functions._
 /** O13 (enrichment projection + positional top-K slice, index.js:528-568)
   * and O14 (idempotent-intent envelope, index.js:570-611) as pure column
   * projections. The positional `slice(matchedImages, 1, 10)` preserves the
-  * reference's producer-ordering assumption (index.js:529 — no re-sort);
-  * `topMatchesSorted` is the robustness variant that ranks by similarity
-  * first.
+  * reference's producer-ordering assumption (index.js:529 — no re-sort).
   */
 object EmailJobs {
 
@@ -66,24 +64,6 @@ object EmailJobs {
         col("col.pool_filename").as("filename"),
         col("col.similarity_score").as("similarity"),
         col("col.match_confidence").as("confidence"))
-
-  /** Robust variant: rank by similarity desc (stable tie-break on
-    * filename) before taking 10 — the extension flagged in SURVEY.md §2.1. */
-  def topMatchesSorted(triggered: DataFrame): DataFrame =
-    triggered
-      .select(
-        col("record_id"), col("event_id"), col("guest_id"),
-        posexplode(slice(
-          array_sort(col("matched_images"), (a, b) =>
-            when(a.getField("similarity_score") > b.getField("similarity_score"), -1)
-              .when(a.getField("similarity_score") < b.getField("similarity_score"), 1)
-              .otherwise(0)),
-          1, 10)))
-      .select(
-        col("record_id"), col("event_id"), col("guest_id"),
-        (col("pos") + 1).cast("int").as("match_rank"),
-        col("col.pool_url").as("image_url"),
-        col("col.similarity_score").as("similarity"))
 
   /** The full nested email-job struct, shape-for-shape with
     * createEmailJob (index.js:536-567). `createdAt` is injected for

@@ -36,7 +36,7 @@ fi
 # Every `main` in src/main is a driver entry point or a kept tool; a dev
 # probe whose question is answered leaves its artifact in bench_results/
 # and is deleted, not kept as another main. A new main joins this list.
-mains="Bench Verify PlanDump PlanShapes ScaleGen ScaleLadder ScaleProbe StageProf"
+mains="Bench Verify PlanShapes ScaleGen ScaleLadder ScaleProbe"
 stray=$(git grep -l -e 'def main(' -- src/main | while read -r f; do
   case " $mains " in *" $(basename "$f" .scala) "*) ;; *) echo "$f" ;; esac
 done)
